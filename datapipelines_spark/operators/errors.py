@@ -8,7 +8,10 @@ Relationally:
 - expression stages: ANSI-off casts/parsers yield NULL on bad input;
   ``drop_failed`` turns null-on-required into row-skip, ``quarantine`` splits
   failures into a side output instead of losing them silently;
-- UDF stages (multimodal.py) take ``on_error='quarantine'|'skip'|'fail'``;
+- per-payload media stages (multimodal.py, imageops.py) take
+  ``on_error='quarantine'|'skip'|'fail'``, routed in one place: the runner
+  ``operators/multimodal.py:_payload_stage``, which rejects any other value
+  and ``'quarantine'`` on a stage with no ``decode_error`` column;
 - counting: ``observed`` attaches named accumulators via ``df.observe`` so a
   run reports how many rows each permissive stage dropped — the engine's
   answer to the reference's warn-spam (you get numbers, not log lines).

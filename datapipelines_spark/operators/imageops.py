@@ -6,9 +6,10 @@ pixel math instead of stubs: the decode step uses the in-repo codecs
 (jpegcodec/ppm/bmp), the square-crop slice uses the SAME deterministic
 hash-seeded coordinates as the relational geometry operator
 (operators/crop.py — parity tested), and resize is vectorized numpy
-(nearest / bilinear). Everything rides the standard Arrow mapInPandas stage,
-so the Spark-side plumbing is identical to a torchvision-backed production
-variant — only the per-array function differs.
+(nearest / bilinear). Both stages here ride the shared per-payload runner
+(operators/multimodal.py:_payload_stage), so the Spark-side plumbing and
+error contract are identical to a torchvision-backed production variant —
+only the per-array function differs.
 """
 
 from __future__ import annotations
@@ -27,14 +28,21 @@ def _hash_offset(key: str, seed: int | str, salt: str, mod: int) -> int:
     return int(digest[:8], 16) % max(mod, 1)
 
 
-def square_crop(arr: np.ndarray, key: str, seed: int | str = 42) -> np.ndarray:
-    """Deterministic square crop: size = min(h, w); offsets from the sample
-    key (retry-stable, engine-portable — SURVEY §7.6 risk 2)."""
+def _square_crop_at(
+    arr: np.ndarray, key: str, seed: int | str
+) -> tuple[np.ndarray, int, int]:
+    """``square_crop`` plus the window's ``(top, left)`` offsets."""
     h, w = arr.shape[:2]
     size = min(h, w)
     top = _hash_offset(key, seed, "top", h - size + 1)
     left = _hash_offset(key, seed, "left", w - size + 1)
-    return arr[top:top + size, left:left + size]
+    return arr[top:top + size, left:left + size], top, left
+
+
+def square_crop(arr: np.ndarray, key: str, seed: int | str = 42) -> np.ndarray:
+    """Deterministic square crop: size = min(h, w); offsets from the sample
+    key (retry-stable, engine-portable — SURVEY §7.6 risk 2)."""
+    return _square_crop_at(arr, key, seed)[0]
 
 
 def resize_nearest(arr: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
@@ -96,10 +104,9 @@ def crop_resize_images(
     ``passthrough=True`` carries every other input column through the same
     stage (the payload column is replaced by the transformed ``ppm``), so a
     config pipeline keeps the rest of the sample without a join-back."""
-    import pandas as pd
     from pyspark.sql import types as T
 
-    from datapipelines_spark.operators.multimodal import decode_array
+    from datapipelines_spark.operators.multimodal import _payload_stage, decode_array
 
     out_fields = [
         T.StructField("ppm", T.BinaryType()),
@@ -113,62 +120,35 @@ def crop_resize_images(
         T.StructField("mean_pixel", T.DoubleType()),
         T.StructField("decode_error", T.StringType()),
     ]
-    if passthrough:
-        carried = [f for f in df.schema.fields if f.name != payload_col]
-        schema = T.StructType(carried + out_fields)
-        src = df
-    else:
-        carried = [f for f in df.schema.fields if f.name == key_col]
-        schema = T.StructType(carried + out_fields)
-        src = df.select(key_col, payload_col)
-    carry_names = [f.name for f in carried]
+    carried = [
+        f for f in df.schema.fields
+        if (f.name != payload_col if passthrough else f.name == key_col)
+    ]
     resize = resize_bilinear if interpolation == "bilinear" else resize_nearest
 
-    def batches(it):
-        cols = [f.name for f in schema.fields]
-        for pdf in it:
-            rows = []
-            for _, in_row in pdf.iterrows():
-                key = in_row[key_col]
-                payload = in_row[payload_col]
-                base = {c: in_row[c] for c in carry_names}
-                try:
-                    arr = decode_array(bytes(payload) if payload is not None else b"")
-                    if arr.ndim == 2:
-                        arr = arr[:, :, None]
-                    h, w = arr.shape[:2]
-                    size = min(h, w)
-                    top = _hash_offset(str(key), seed, "top", h - size + 1)
-                    left = _hash_offset(str(key), seed, "left", w - size + 1)
-                    cropped = arr[top:top + size, left:left + size]
-                    resized = resize(cropped, target, target)
-                    rows.append(
-                        base
-                        | {
-                            "ppm": encode_ppm(resized),
-                            "orig_width": w,
-                            "orig_height": h,
-                            "crop_size": size,
-                            "crop_top": top,
-                            "crop_left": left,
-                            "width": target,
-                            "height": target,
-                            "mean_pixel": float(resized.mean()) / 255.0,
-                            "decode_error": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001 - permissive mode
-                    if on_error == "fail":
-                        raise
-                    if on_error == "quarantine":
-                        rows.append(
-                            {c: None for c in cols}
-                            | base
-                            | {"decode_error": f"{type(e).__name__}: {e}"}
-                        )
-            yield pd.DataFrame(rows, columns=cols)
+    def crop_resize(key, payload: bytes) -> list[dict]:
+        arr = decode_array(payload)
+        if arr.ndim == 2:
+            arr = arr[:, :, None]
+        h, w = arr.shape[:2]
+        cropped, top, left = _square_crop_at(arr, str(key), seed)
+        resized = resize(cropped, target, target)
+        return [{
+            "ppm": encode_ppm(resized),
+            "orig_width": w,
+            "orig_height": h,
+            "crop_size": cropped.shape[0],
+            "crop_top": top,
+            "crop_left": left,
+            "width": target,
+            "height": target,
+            "mean_pixel": float(resized.mean()) / 255.0,
+        }]
 
-    return src.mapInPandas(batches, schema)
+    return _payload_stage(
+        df, payload_col, key_col, [(f.name, f.name) for f in carried],
+        T.StructType(carried + out_fields), crop_resize, on_error,
+    )
 
 
 class ImageTransforms:
@@ -228,12 +208,12 @@ def dhash_images(
     in SQL — no float resize to diverge on.
 
     One Arrow mapInPandas stage; output ``(key, width, height, dhash)``.
-    ``on_error='skip'`` drops undecodable rows, ``'fail'`` raises.
+    ``on_error='skip'`` drops undecodable rows, ``'fail'`` raises; the
+    output has no ``decode_error`` column to quarantine into.
     """
-    import pandas as pd
     from pyspark.sql import types as T
 
-    from datapipelines_spark.operators.multimodal import decode_array
+    from datapipelines_spark.operators.multimodal import _payload_stage, decode_array
 
     schema = T.StructType(
         [
@@ -244,41 +224,24 @@ def dhash_images(
         ]
     )
 
-    def batches(it):
-        for pdf in it:
-            keys, ws, hs, hashes = [], [], [], []
-            for k, payload in zip(pdf[key_col], pdf[payload_col]):
-                try:
-                    arr = decode_array(bytes(payload))
-                    if arr.ndim == 2:
-                        arr = np.stack([arr, arr, arr], axis=-1)
-                    a = arr.astype(np.int64)
-                    gray = (299 * a[..., 0] + 587 * a[..., 1] + 114 * a[..., 2]) // 1000
-                    grid = resize_nearest(gray, 8, 9)
-                    bits = (grid[:, :-1] > grid[:, 1:]).flatten()  # y*8 + x
-                    v = 0
-                    for i in np.nonzero(bits)[0]:
-                        v |= 1 << int(i)
-                    if v >= 1 << 63:
-                        v -= 1 << 64  # two's-complement into signed int64
-                except Exception:
-                    if on_error == "fail":
-                        raise
-                    continue
-                keys.append(k)
-                ws.append(arr.shape[1])
-                hs.append(arr.shape[0])
-                hashes.append(v)
-            yield pd.DataFrame(
-                {
-                    key_col: pd.Series(keys, dtype="object"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "dhash": pd.Series(hashes, dtype="int64"),
-                }
-            )
+    def dhash(_key, payload: bytes) -> list[dict]:
+        arr = decode_array(payload)
+        if arr.ndim == 2:
+            arr = np.stack([arr, arr, arr], axis=-1)
+        a = arr.astype(np.int64)
+        gray = (299 * a[..., 0] + 587 * a[..., 1] + 114 * a[..., 2]) // 1000
+        grid = resize_nearest(gray, 8, 9)
+        bits = (grid[:, :-1] > grid[:, 1:]).flatten()  # y*8 + x
+        v = 0
+        for i in np.nonzero(bits)[0]:
+            v |= 1 << int(i)
+        if v >= 1 << 63:
+            v -= 1 << 64  # two's-complement into signed int64
+        return [{"width": arr.shape[1], "height": arr.shape[0], "dhash": v}]
 
-    return df.select(key_col, payload_col).mapInPandas(batches, schema)
+    return _payload_stage(
+        df, payload_col, key_col, [(key_col, key_col)], schema, dhash, on_error
+    )
 
 
 def dhash_near_pairs(

@@ -5,13 +5,15 @@ columns next to a typed metadata struct — schema-stable, splittable, and
 shuffle-friendly (parquet stores them as byte arrays; column pruning keeps
 them out of queries that don't touch them).
 
-Decode / feature-extract / resize / frame-sample run as Arrow-batched
-Pandas UDFs over ``mapInPandas``: the Spark-side plumbing (schemas, batch
-iteration, error quarantine, partition sizing) is real and tested. The codec
-is pluggable: ``real_decode`` actually decodes PPM/PGM, uncompressed BMP,
-JPEG (baseline + progressive, jpegcodec.py) and PNG (pngcodec.py) payloads
-pure-Python in this container; ``fake_decode`` stays available as the
-deterministic stand-in for arbitrary binary payloads.
+Decode / feature-extract / crop-resize / frame-sample run as Arrow-batched
+Pandas UDFs over ``mapInPandas``, all through one runner
+(``_payload_stage``) that owns batch iteration, the per-call deadline and
+the ``on_error`` contract; each stage supplies only its per-payload function
+and output schema. The codec is pluggable: ``real_decode`` actually
+decodes PPM/PGM, uncompressed BMP, JPEG (baseline + progressive,
+jpegcodec.py) and PNG (pngcodec.py) payloads pure-Python in this container;
+``fake_decode`` stays available as the deterministic stand-in for arbitrary
+binary payloads.
 
 Scale notes: media rows are wide (MBs), so these stages cap Arrow batch
 sizes (``spark.sql.execution.arrow.maxRecordsPerBatch``) and should follow a
@@ -21,7 +23,7 @@ sizes (``spark.sql.execution.arrow.maxRecordsPerBatch``) and should follow a
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -201,7 +203,7 @@ class CallTimeout(Exception):
     """Raised when a per-record decode exceeds its time budget (E4 parity)."""
 
 
-def _with_timeout(fn: Callable[[bytes], dict], seconds: float) -> Callable[[bytes], dict]:
+def _with_timeout(fn: Callable, seconds: float) -> Callable:
     """Per-call watchdog for Python stages (E4,
     /root/reference/sdata/datapipeline.py:31-83 uses a watchdog thread; here
     SIGALRM, which is valid because Python UDF workers execute user code on
@@ -209,19 +211,80 @@ def _with_timeout(fn: Callable[[bytes], dict], seconds: float) -> Callable[[byte
     per-row timeout, which remains a documented limitation (SURVEY §7.6)."""
     import signal
 
-    def wrapped(payload: bytes) -> dict:
+    def wrapped(*args):
         def handler(signum, frame):
             raise CallTimeout(f"decode exceeded {seconds}s")
 
         old = signal.signal(signal.SIGALRM, handler)
         signal.setitimer(signal.ITIMER_REAL, seconds)
         try:
-            return fn(payload)
+            return fn(*args)
         finally:
             signal.setitimer(signal.ITIMER_REAL, 0)
             signal.signal(signal.SIGALRM, old)
 
     return wrapped
+
+
+_ON_ERROR_MODES = ("quarantine", "skip", "fail")
+
+
+def _payload_stage(
+    df: DataFrame,
+    payload_col: str,
+    key_col: str,
+    carry: Sequence[tuple[str, str]],
+    schema: T.StructType,
+    row_fn: Callable[[object, bytes], Iterable[dict]],
+    on_error: str,
+    timeout_s: float | None = None,
+) -> DataFrame:
+    """The per-payload error contract every media stage runs on (E1-E4): one
+    Arrow ``mapInPandas`` over the ``carry`` input columns plus
+    ``payload_col``. ``row_fn(key, payload)`` yields one feature dict per
+    output row (a null payload reads as ``b""``); each output row copies the
+    carried columns of its input row, ``carry`` being (output name, input
+    column) pairs, and takes every other schema column from the dict (absent
+    keys are null). A payload whose ``row_fn`` raises, or outlives
+    ``timeout_s``, keeps the rows it already yielded and is then routed by
+    ``on_error``: 'quarantine' adds one row of carried columns, null
+    features and ``"<Type>: <message>"`` in ``decode_error``; 'skip' adds
+    nothing; 'fail' re-raises. Feature columns travel as Python objects, so
+    64-bit integers reach Arrow exactly even next to nulls."""
+    if on_error not in _ON_ERROR_MODES:
+        raise ValueError(f"on_error must be one of {_ON_ERROR_MODES}, got {on_error!r}")
+    names = schema.fieldNames()
+    if on_error == "quarantine" and "decode_error" not in names:
+        raise ValueError("on_error='quarantine' needs a decode_error output column")
+    out_carried = [out for out, _ in carry]
+    feat_names = [n for n in names if n not in out_carried]
+
+    def collect(rows: list, key, payload: bytes) -> None:
+        for feats in row_fn(key, payload):
+            rows.append(feats)
+
+    guarded = collect if timeout_s is None else _with_timeout(collect, timeout_s)
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            feats, src = [], []
+            for i, (key, payload) in enumerate(zip(pdf[key_col], pdf[payload_col])):
+                rows: list = []
+                try:
+                    guarded(rows, key, b"" if payload is None else bytes(payload))
+                except Exception as e:  # noqa: BLE001 - permissive mode is the point
+                    if on_error == "fail":
+                        raise
+                    if on_error == "quarantine":
+                        rows.append({"decode_error": f"{type(e).__name__}: {e}"})
+                feats += rows
+                src += [i] * len(rows)
+            carried = pdf.iloc[src, : len(carry)].reset_index(drop=True)
+            carried.columns = out_carried
+            cols = {n: [r.get(n) for r in feats] for n in feat_names}
+            yield pd.concat([carried, pd.DataFrame(cols, dtype=object)], axis=1)[names]
+
+    return df.select(*[c for _, c in carry], payload_col).mapInPandas(batches, schema)
 
 
 def decode_images(
@@ -239,73 +302,10 @@ def decode_images(
     or 'fail' (raise, E2 reraise parity). ``timeout_s`` bounds each decode
     call (E4 parity); a timeout is handled like any other decode error.
     """
-    cols = [key_col, payload_col]
-    if timeout_s is not None:
-        decode_fn = _with_timeout(decode_fn, timeout_s)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for key, payload in zip(pdf[key_col], pdf[payload_col]):
-                try:
-                    feats = decode_fn(bytes(payload) if payload is not None else b"")
-                    out.append(
-                        {
-                            "__key__": key,
-                            **{k: feats.get(k) for k in ("width", "height", "n_channels", "mean_pixel")},
-                            "decode_error": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001 - permissive mode is the point
-                    if on_error == "fail":
-                        raise
-                    if on_error == "quarantine":
-                        out.append(
-                            {
-                                "__key__": key,
-                                "width": None,
-                                "height": None,
-                                "n_channels": None,
-                                "mean_pixel": None,
-                                "decode_error": f"{type(e).__name__}: {e}",
-                            }
-                        )
-            yield pd.DataFrame(out, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields])
-
-    return df.select(*cols).mapInPandas(batches, IMAGE_FEATURES_SCHEMA)
-
-
-def resize_stub(
-    df: DataFrame,
-    payload_col: str = "jpg",
-    key_col: str = "__key__",
-    target: tuple[int, int] = (224, 224),
-) -> DataFrame:
-    """Resize plumbing: emits (key, resized binary, target dims). The pixel
-    transform is a stub (payload passthrough + recorded dims); the schema,
-    batching, and partition behavior match what a real resampler needs."""
-    schema = T.StructType(
-        [
-            T.StructField("__key__", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
+    return _payload_stage(
+        df, payload_col, key_col, [("__key__", key_col)], IMAGE_FEATURES_SCHEMA,
+        lambda _key, payload: [decode_fn(payload)], on_error, timeout_s,
     )
-    w, h = target
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "__key__": pdf[key_col],
-                    "payload": pdf[payload_col],
-                    "width": w,
-                    "height": h,
-                }
-            )
-
-    return df.select(key_col, payload_col).mapInPandas(batches, schema)
 
 
 #: Output schema of decode_audio: duration/channels/sample-rate metadata +
@@ -351,32 +351,10 @@ def decode_audio(
 ) -> DataFrame:
     """Audio analogue of decode_images: binary column -> typed features via
     Arrow-batched mapInPandas; same on_error contract."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in AUDIO_FEATURES_SCHEMA.fields]
-        for pdf in it:
-            out = []
-            for key, payload in zip(pdf[key_col], pdf[payload_col]):
-                try:
-                    feats = decode_fn(bytes(payload) if payload is not None else b"")
-                    out.append({"__key__": key, **feats, "decode_error": None})
-                except Exception as e:  # noqa: BLE001 - permissive mode is the point
-                    if on_error == "fail":
-                        raise
-                    if on_error == "quarantine":
-                        out.append(
-                            {
-                                "__key__": key,
-                                "sample_rate": None,
-                                "n_channels": None,
-                                "duration_s": None,
-                                "envelope": None,
-                                "decode_error": f"{type(e).__name__}: {e}",
-                            }
-                        )
-            yield pd.DataFrame(out, columns=cols)
-
-    return df.select(key_col, payload_col).mapInPandas(batches, AUDIO_FEATURES_SCHEMA)
+    return _payload_stage(
+        df, payload_col, key_col, [("__key__", key_col)], AUDIO_FEATURES_SCHEMA,
+        lambda _key, payload: [decode_fn(payload)], on_error,
+    )
 
 
 SPECTRAL_FEATURES_SCHEMA = T.StructType(
@@ -404,70 +382,10 @@ def spectral_audio(
     One Python stage over the payloads; everything downstream is JVM-side."""
     from datapipelines_spark.operators.audio import spectral_decode
 
-    decode_fn = spectral_decode
-    if timeout_s is not None:
-        decode_fn = _with_timeout(decode_fn, timeout_s)
-    feat_cols = ("centroid_hz", "bandwidth_hz", "rolloff_hz", "flatness")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in SPECTRAL_FEATURES_SCHEMA.fields]
-        for pdf in it:
-            out = []
-            for key, payload in zip(pdf[key_col], pdf[payload_col]):
-                try:
-                    feats = decode_fn(bytes(payload) if payload is not None else b"")
-                    out.append(
-                        {
-                            "__key__": key,
-                            **{k: feats.get(k) for k in feat_cols},
-                            "decode_error": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001 - permissive mode is the point
-                    if on_error == "fail":
-                        raise
-                    if on_error == "quarantine":
-                        out.append(
-                            {
-                                "__key__": key,
-                                **{k: None for k in feat_cols},
-                                "decode_error": f"{type(e).__name__}: {e}",
-                            }
-                        )
-            yield pd.DataFrame(out, columns=cols)
-
-    return df.select(key_col, payload_col).mapInPandas(
-        batches, SPECTRAL_FEATURES_SCHEMA
+    return _payload_stage(
+        df, payload_col, key_col, [("__key__", key_col)], SPECTRAL_FEATURES_SCHEMA,
+        lambda _key, payload: [spectral_decode(payload)], on_error, timeout_s,
     )
-
-
-def frame_sample_stub(
-    df: DataFrame,
-    payload_col: str = "mp4",
-    key_col: str = "__key__",
-    every_n: int = 30,
-) -> DataFrame:
-    """Video frame-sampling plumbing: one output row per sampled frame
-    (explode shape), frame payloads stubbed as slices of the source bytes."""
-    schema = T.StructType(
-        [
-            T.StructField("__key__", T.StringType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for key, payload in zip(pdf[key_col], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                n_frames = max(1, len(data) // max(every_n, 1))
-                for i in range(min(n_frames, 8)):
-                    rows.append({"__key__": key, "frame_idx": i, "frame": data[i : i + 16]})
-            yield pd.DataFrame(rows, columns=["__key__", "frame_idx", "frame"])
-
-    return df.select(key_col, payload_col).mapInPandas(batches, schema)
 
 
 #: Output schema of frame_sample_mjpeg: one row per sampled, DECODED frame.
@@ -496,43 +414,21 @@ def frame_sample_mjpeg(
     sampled frame (explode shape). Container formats (mp4/mkv) still need
     external demuxers — this covers the codec-free interchange case and
     exercises the exact plumbing (schema, batch shape, explode) a real
-    demuxer stage would use."""
+    demuxer stage would use. Frames decoded before a corrupt one are kept."""
     from datapipelines_spark.operators.audio import sample_mjpeg_frames
     from datapipelines_spark.operators.jpegcodec import decode_jpeg
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FRAME_FEATURES_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for key, payload in zip(pdf[key_col], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                try:
-                    for idx, frame in sample_mjpeg_frames(data, every_n):
-                        arr = decode_jpeg(frame)
-                        rows.append(
-                            {
-                                "__key__": key,
-                                "frame_idx": idx,
-                                "width": int(arr.shape[1]),
-                                "height": int(arr.shape[0]),
-                                "mean_pixel": float(arr.mean()) / 255.0,
-                                "decode_error": None,
-                            }
-                        )
-                except Exception as e:  # noqa: BLE001 - permissive mode
-                    if on_error == "fail":
-                        raise
-                    if on_error == "quarantine":
-                        rows.append(
-                            {
-                                "__key__": key,
-                                "frame_idx": None,
-                                "width": None,
-                                "height": None,
-                                "mean_pixel": None,
-                                "decode_error": f"{type(e).__name__}: {e}",
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=cols)
+    def frames(_key, payload: bytes) -> Iterator[dict]:
+        for idx, frame in sample_mjpeg_frames(payload, every_n):
+            arr = decode_jpeg(frame)
+            yield {
+                "frame_idx": idx,
+                "width": int(arr.shape[1]),
+                "height": int(arr.shape[0]),
+                "mean_pixel": float(arr.mean()) / 255.0,
+            }
 
-    return df.select(key_col, payload_col).mapInPandas(batches, FRAME_FEATURES_SCHEMA)
+    return _payload_stage(
+        df, payload_col, key_col, [("__key__", key_col)], FRAME_FEATURES_SCHEMA,
+        frames, on_error,
+    )

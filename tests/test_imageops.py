@@ -4,6 +4,7 @@ import numpy as np
 
 from datapipelines_spark.operators.imageops import (
     _hash_offset,
+    crop_resize_images,
     encode_ppm,
     resize_bilinear,
     resize_nearest,
@@ -55,6 +56,16 @@ def test_square_crop_matches_relational_geometry(spark):
         size = min(r["h"], r["w"])
         assert r["crop_top"] == _hash_offset(r["k"], 42, "top", r["h"] - size + 1)
         assert r["crop_left"] == _hash_offset(r["k"], 42, "left", r["w"] - size + 1)
+    # the pixel stage reports the window it cut: same rule, same numbers
+    images = spark.createDataFrame(
+        [(k, bytearray(encode_ppm(np.zeros((h, w, 3), np.uint8))))
+         for k, h, w in pdf.itertuples(index=False)],
+        "k string, img binary",
+    )
+    staged = crop_resize_images(images, "img", "k", target=4, seed=42, on_error="fail")
+    assert sorted(
+        (r["k"], r["crop_top"], r["crop_left"]) for r in staged.collect()
+    ) == sorted((r["k"], r["crop_top"], r["crop_left"]) for r in out)
 
 
 def test_square_crop_array_shape():

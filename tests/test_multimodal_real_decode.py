@@ -8,12 +8,18 @@ import struct
 import numpy as np
 import pytest
 
+from datapipelines_spark.operators.audio import encode_wav, real_audio_decode
+from datapipelines_spark.operators.imageops import crop_resize_images, dhash_images
+from datapipelines_spark.operators.jpegcodec import encode_jpeg
 from datapipelines_spark.operators.multimodal import (
     decode_array,
+    decode_audio,
     decode_bmp,
     decode_images,
     decode_ppm,
+    frame_sample_mjpeg,
     real_decode,
+    spectral_audio,
 )
 
 
@@ -126,3 +132,81 @@ def test_binary_file_source_feeds_real_decode(spark, tmp_path, images):
     assert (out["a"]["width"], out["a"]["height"]) == (11, 7)
     assert (out["b"]["width"], out["b"]["height"], out["b"]["n_channels"]) == (8, 5, 1)
     assert all(r["decode_error"] is None for r in out.values())
+
+
+# --- the shared on_error contract of every per-payload media stage ---------
+
+
+#: SOI + EOI: splits out of an MJPEG stream as a frame, but has no scan
+_BAD_FRAME = b"\xff\xd8\xff\xd9"
+_PPM = _ppm_bytes(np.full((6, 9, 3), 90, np.uint8))
+_WAV = encode_wav(np.full(400, 1000, np.int16), 8000)
+_MJPEG = encode_jpeg(np.full((16, 16, 3), 90, np.uint8), quality=90)
+
+#: stage -> (call(df, on_error), good payload, corrupt payload, output key
+#: column) over a ``k string, meta string, p binary`` frame
+MEDIA_STAGES = {
+    "decode_images": (
+        lambda df, e: decode_images(df, "p", "k", real_decode, e),
+        _PPM, b"P6 junk", "__key__",
+    ),
+    "decode_audio": (
+        lambda df, e: decode_audio(df, "p", "k", real_audio_decode, e),
+        _WAV, b"RIFFjunk", "__key__",
+    ),
+    "spectral_audio": (
+        lambda df, e: spectral_audio(df, "p", "k", e), _WAV, b"RIFFjunk", "__key__",
+    ),
+    "frame_sample_mjpeg": (
+        lambda df, e: frame_sample_mjpeg(df, "p", "k", on_error=e),
+        _MJPEG, _BAD_FRAME, "__key__",
+    ),
+    "crop_resize_images": (
+        lambda df, e: crop_resize_images(df, "p", "k", target=4, on_error=e, passthrough=True),
+        _PPM, b"junk", "k",
+    ),
+    "dhash_images": (
+        lambda df, e: dhash_images(df, "p", "k", on_error=e), _PPM, b"junk", "k",
+    ),
+}
+
+
+@pytest.mark.parametrize("stage", sorted(MEDIA_STAGES))
+def test_media_stage_error_contract(spark, stage):
+    run, good, bad, key = MEDIA_STAGES[stage]
+    df = spark.createDataFrame(
+        [("good", "m1", bytearray(good)), ("bad", "m2", bytearray(bad))],
+        "k string, meta string, p binary",
+    )
+    assert [r[key] for r in run(df, "skip").collect()] == ["good"]
+    with pytest.raises(Exception):
+        run(df, "fail").collect()
+    with pytest.raises(ValueError, match="on_error"):
+        run(df, "quarantene")
+    if "decode_error" not in run(df, "skip").columns:
+        with pytest.raises(ValueError, match="decode_error"):
+            run(df, "quarantine")
+        return
+    out = run(df, "quarantine")
+    rows = {r[key]: r.asDict() for r in out.collect()}
+    assert set(rows) == {"good", "bad"}
+    assert rows["good"].pop("decode_error") is None
+    assert None not in rows["good"].values()
+    failed = rows["bad"]
+    assert failed.pop("decode_error").split(": ")[0].endswith("Error")
+    assert failed.pop(key) == "bad"
+    if "meta" in out.columns:  # passthrough stages carry every other column
+        assert failed.pop("meta") == "m2"
+    assert set(failed.values()) == {None}
+
+
+def test_frame_sample_keeps_frames_before_corrupt_trailing_frame(spark):
+    df = spark.createDataFrame(
+        [("v", bytearray(_MJPEG * 2 + _BAD_FRAME))], "`__key__` string, mjpeg binary"
+    )
+    quarantined = frame_sample_mjpeg(df).collect()
+    assert [(r["frame_idx"], r["width"]) for r in quarantined[:2]] == [(0, 16), (1, 16)]
+    assert len(quarantined) == 3 and quarantined[2]["frame_idx"] is None
+    assert quarantined[2]["decode_error"].startswith("ValueError: ")
+    skipped = frame_sample_mjpeg(df, on_error="skip").collect()
+    assert [r["frame_idx"] for r in skipped] == [0, 1]

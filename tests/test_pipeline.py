@@ -257,16 +257,6 @@ class TestMultimodal:
         with pytest.raises(Exception):
             decode_images(df, on_error="fail").collect()
 
-    def test_frame_sample_shape(self, spark):
-        from datapipelines_spark.operators.multimodal import frame_sample_stub
-
-        df = spark.createDataFrame(
-            [("v1", b"0123456789" * 20)], "`__key__` string, mp4 binary"
-        )
-        out = frame_sample_stub(df, every_n=30).collect()
-        assert len(out) > 1
-        assert out[0]["frame_idx"] == 0 and isinstance(out[0]["frame"], bytearray | bytes)
-
 
 class TestJoins:
     def test_metadata_join_collision_rename(self, spark):

@@ -5,6 +5,8 @@ import random
 
 import numpy as np
 import pyspark.sql.functions as F
+import pytest
+from test_multimodal_real_decode import MEDIA_STAGES
 
 from datapipelines_spark.operators.checks import winsorize
 from datapipelines_spark.operators.dedup import (
@@ -229,17 +231,19 @@ def test_token_budget_full_buckets_are_filter_only(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_dhash_plan_is_single_arrow_stage(spark):
-    from datapipelines_spark.operators.imageops import dhash_images, encode_ppm
-    import numpy as np
-
-    img = encode_ppm(np.arange(48, dtype=np.uint8).reshape(4, 4, 3))
-    df = spark.createDataFrame([("k1", bytearray(img))], "k string, ppm binary")
-    hd = dhash_images(df, payload_col="ppm", key_col="k")
-    plan = _plan(hd)
-    assert "Exchange" not in plan  # hash is computed where the bytes live
+@pytest.mark.parametrize("stage", sorted(MEDIA_STAGES))
+def test_dhash_plan_is_single_arrow_stage(spark, stage):
+    """Every per-payload media stage (dHash included) runs where the bytes
+    live: one Arrow MapInPandas, no shuffle."""
+    run, good, _, _ = MEDIA_STAGES[stage]
+    df = spark.createDataFrame(
+        [("k1", "m", bytearray(good))], "k string, meta string, p binary"
+    )
+    out = run(df, "fail")
+    plan = _plan(out)
+    assert "Exchange" not in plan
     assert plan.count("MapInPandas") == 1
-    assert len(hd.collect()) == 1
+    assert len(out.collect()) == 1
 
 
 def test_winsorize_tiny_group_sizes(spark):
