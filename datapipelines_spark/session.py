@@ -11,6 +11,12 @@ Scale posture (100 TB):
   100 TB yields ~800k input splits — fine for a large cluster's scheduler.
 - Arrow enabled for every pandas_udf / mapInPandas / toPandas path.
 - Timezone pinned to UTC so timestamp semantics match the DuckDB oracle.
+- Python workers fork from this package's daemon (``_daemon.py``), which
+  stops each task from re-reading ``pyspark.zip``'s import directory on
+  Python < 3.13; ``spark.executorEnv.PYTHONPATH`` points at the package root
+  so the daemon imports from any working directory. On a cluster the
+  package must be installed on the executors: the daemon starts before any
+  ``addPyFile`` reaches them.
 """
 
 from __future__ import annotations
@@ -18,6 +24,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: directory holding the ``datapipelines_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -50,6 +59,11 @@ _DEFAULTS: dict[str, str] = {
     "spark.task.reaper.enabled": "true",
     "spark.task.reaper.pollingInterval": "10s",
     "spark.task.reaper.killTimeout": "120s",
+    # Workers fork from a daemon that skips re-reading unchanged zip
+    # archives on every task (_daemon.py). Spark prepends its own
+    # pyspark.zip/py4j paths and appends the JVM's PYTHONPATH to this one.
+    "spark.python.daemon.module": "datapipelines_spark._daemon",
+    "spark.executorEnv.PYTHONPATH": _PACKAGE_ROOT,
 }
 
 

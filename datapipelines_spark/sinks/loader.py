@@ -6,11 +6,11 @@ Reference parity for ``create_loader`` + ``dict_collation_fn``
 same-length columns (scalars → np.array, tensors stacked, other → list).
 
 A DataFrame already *is* columnar, so collation is a representation change,
-not a compute step: we stream Arrow record batches off the executors
-(``toArrow``-style via ``toLocalIterator`` of slices through mapInArrow is
-overkill locally; we use ``df.toLocalIterator`` batch assembly driver-side
-only at the very sink, mirroring how the reference's DataLoader funnels
-batches into the training process). Nothing upstream ever collects.
+not a compute step. The sink streams rows to the driver with
+``df.toLocalIterator(prefetchPartitions=True)`` — one partition at a time,
+with the next one computed while the current one is consumed — and
+assembles batches only there, as the reference's DataLoader funnels batches
+into the training process. Nothing upstream ever collects.
 """
 
 from __future__ import annotations
@@ -58,8 +58,15 @@ def create_loader(
     ``partial=False`` drops the trailing short batch, matching the
     reference's ``.batched(partial=...)`` flag (dataset.py:91-93).
     ``toLocalIterator`` pulls one partition at a time — driver memory stays
-    O(partition), not O(dataset).
+    O(partition), not O(dataset). ``batch_size < 1`` raises ``ValueError``
+    at the call, before any job runs.
     """
+    if batch_size < 1:
+        raise ValueError(f"create_loader: batch_size must be >= 1, got {batch_size}")
+    return _batches(df, batch_size, partial, collation_fn)
+
+
+def _batches(df: DataFrame, batch_size: int, partial: bool, collation_fn) -> Iterator[dict]:
     buf: list[dict] = []
     for row in df.toLocalIterator(prefetchPartitions=True):
         buf.append(row.asDict(recursive=True))

@@ -168,7 +168,13 @@ def read_tar_samples(
     Distributed: the shard list is parallelized and each task streams its own
     tar(s). For durable pipelines convert tar to Parquet once and use the
     parquet source — this reader exists for reference parity and ad-hoc scans.
+
+    ``on_error`` is ``"fail"`` (raise on an unreadable shard) or ``"skip"``
+    (drop the rest of that shard); a tar shard has no per-sample row to
+    quarantine, so any other value raises ``ValueError``.
     """
+    if on_error not in ("fail", "skip"):
+        raise ValueError(f"read_tar_samples: on_error must be 'fail' or 'skip', got {on_error!r}")
     shards = list_shards(urls, is_braceexpand)
     if not shards:
         return spark.createDataFrame([], SAMPLE_SCHEMA)

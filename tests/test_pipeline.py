@@ -186,6 +186,12 @@ class TestLoader:
         batches = list(create_loader(df.orderBy("id"), batch_size=4, partial=False))
         assert [len(b["id"]) for b in batches] == [4, 4]
 
+    @pytest.mark.parametrize("batch_size", [0, -3])
+    def test_loader_rejects_batch_size_below_one(self, spark, batch_size):
+        # would otherwise buffer the whole dataset into one driver-side batch
+        with pytest.raises(ValueError, match="batch_size"):
+            create_loader(spark.range(10), batch_size=batch_size)
+
 
 class TestMixing:
     def test_weighted_mix_proportions(self, spark):

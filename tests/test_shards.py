@@ -105,6 +105,20 @@ class TestReadTarSamples:
         with pytest.raises(Exception):
             read_tar_samples(spark, str(d), on_error="fail").collect()
 
+    @pytest.mark.parametrize("on_error", ["quarantine", "skp", None])
+    def test_unknown_on_error_raises(self, spark, tar_dir, on_error):
+        # a tar shard has no per-sample row to quarantine; a typo must not
+        # silently behave as "fail"
+        with pytest.raises(ValueError, match="on_error"):
+            read_tar_samples(spark, tar_dir, on_error=on_error)
+
+    def test_config_on_error_typo_raises(self, spark, tar_dir):
+        from datapipelines_spark.plans.pipeline import create_dataset
+
+        cfg = {"dataset": {"urls": tar_dir, "format": "tar", "on_error": "quarantine"}}
+        with pytest.raises(ValueError, match="on_error"):
+            create_dataset(spark, cfg)
+
     def test_empty_dir(self, spark, tmp_path):
         df = read_tar_samples(spark, str(tmp_path))
         assert df.count() == 0
