@@ -172,9 +172,15 @@ def read_tar_samples(
     ``on_error`` is ``"fail"`` (raise on an unreadable shard) or ``"skip"``
     (drop the rest of that shard); a tar shard has no per-sample row to
     quarantine, so any other value raises ``ValueError``.
+    ``num_partitions`` defaults to ``min(#shards, defaultParallelism)``; a
+    value below 1 raises ``ValueError``.
     """
     if on_error not in ("fail", "skip"):
         raise ValueError(f"read_tar_samples: on_error must be 'fail' or 'skip', got {on_error!r}")
+    if num_partitions is not None and num_partitions < 1:
+        raise ValueError(
+            f"read_tar_samples: num_partitions must be >= 1, got {num_partitions}"
+        )
     shards = list_shards(urls, is_braceexpand)
     if not shards:
         return spark.createDataFrame([], SAMPLE_SCHEMA)

@@ -1,9 +1,14 @@
 """Config→DataFrame builder (G1-G5), transforms (M/F), decode (C), loader
 sink (B1-B3) — reference-parity semantics on synthetic fixtures."""
 
+import threading
+import time
+import uuid
+
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import PythonException
 
 from datapipelines_spark.plans.pipeline import create_dataset, instantiate
 from datapipelines_spark.sinks.loader import create_loader, dict_collate
@@ -20,6 +25,47 @@ def samples_df(spark):
     return spark.createDataFrame(
         rows, "`__key__` string, `__url__` string, jpg binary, txt string, json string"
     )
+
+
+@pytest.fixture()
+def job_group(spark):
+    """A fresh job group on this thread, cleared afterwards."""
+    sc = spark.sparkContext
+    group = f"loader-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "create_loader test")
+    yield group
+    sc._jsc.clearJobGroup()
+
+
+def _loader_threads() -> list[threading.Thread]:
+    return [t for t in threading.enumerate() if t.name.startswith("create_loader")]
+
+
+def _assert_group_jobs_end(sc, group: str, seconds: float = 5.0) -> None:
+    """No job of ``group`` is still active within ``seconds``."""
+    mine = set(sc.statusTracker().getJobIdsForGroup(group))
+    deadline = time.monotonic() + seconds
+    while set(sc.statusTracker().getActiveJobsIds()) & mine and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert not set(sc.statusTracker().getActiveJobsIds()) & mine
+
+
+def _run_bounded(fn, seconds: float = 120.0) -> BaseException | None:
+    """Run ``fn`` on another thread and return what it raised, or None;
+    fail the test if it has not returned within ``seconds``."""
+    err: list[BaseException] = []
+
+    def run():
+        try:
+            fn()
+        except BaseException as e:  # noqa: BLE001 - handed back to the test
+            err.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"still running after {seconds} s"
+    return err[0] if err else None
 
 
 class TestInstantiate:
@@ -191,6 +237,110 @@ class TestLoader:
         # would otherwise buffer the whole dataset into one driver-side batch
         with pytest.raises(ValueError, match="batch_size"):
             create_loader(spark.range(10), batch_size=batch_size)
+
+    @pytest.mark.parametrize("partial", [True, False])
+    def test_loader_order_matches_collect_across_partitions(self, spark, partial):
+        # 37 range partitions: 64-row batches span partition boundaries and
+        # the loader's window (defaultParallelism) is smaller than 37
+        conf = {
+            "spark.sql.shuffle.partitions": "37",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        }
+        before = {k: spark.conf.get(k) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            df = spark.range(0, 2000, 1, 5).select(
+                "id", ((F.col("id") * 7919) % 2000).alias("k")
+            ).orderBy("k")
+            assert df.rdd.getNumPartitions() == 37
+            assert spark.sparkContext.defaultParallelism < 37
+            want = [(r["id"], r["k"]) for r in df.collect()]
+            batches = list(create_loader(df, batch_size=64, partial=partial))
+        finally:
+            for k, v in before.items():
+                spark.conf.set(k, v)
+        if not partial:
+            want = want[: len(want) // 64 * 64]
+        assert [len(b["id"]) for b in batches[:-1]] == [64] * (len(batches) - 1)
+        got = list(zip(
+            np.concatenate([b["id"] for b in batches]).tolist(),
+            np.concatenate([b["k"] for b in batches]).tolist(),
+        ))
+        assert got == want
+
+    def test_loader_zero_partitions_yields_nothing(self, spark):
+        df = spark.createDataFrame(spark.sparkContext.emptyRDD(), "id long")
+        assert df.rdd.getNumPartitions() == 0
+        assert list(create_loader(df, batch_size=4)) == []
+
+    def test_loader_skips_empty_partitions_without_gaps(self, spark):
+        # partitions 2-5 of 10 are empty
+        df = spark.range(0, 100, 1, 10).where((F.col("id") < 20) | (F.col("id") >= 60))
+        batches = list(create_loader(df, batch_size=7))
+        assert [len(b["id"]) for b in batches] == [7] * 8 + [4]
+        assert np.concatenate([b["id"] for b in batches]).tolist() == (
+            list(range(20)) + list(range(60, 100))
+        )
+
+    def test_loader_close_cancels_in_flight_jobs(self, spark, job_group):
+        sc = spark.sparkContext
+
+        def slow_after_first_partition(it):
+            from pyspark import TaskContext
+
+            if TaskContext.get().partitionId() > 0:
+                time.sleep(30)
+            yield from it
+
+        df = spark.range(0, 80, 1, 8).mapInPandas(slow_after_first_partition, "id long")
+        loader = create_loader(df, batch_size=10)
+        assert next(loader)["id"].tolist() == list(range(10))
+        # returns well before the 30 s tasks would finish on their own
+        assert _run_bounded(loader.close, seconds=10) is None
+        assert not _loader_threads()
+        assert len(sc.statusTracker().getJobIdsForGroup(job_group)) > 1  # others in flight
+        _assert_group_jobs_end(sc, job_group)
+
+    def test_loader_failed_partition_raises_after_earlier_batches(self, spark, job_group):
+        sc = spark.sparkContext
+
+        def fail_in_partition_5(it):
+            from pyspark import TaskContext
+
+            pid = TaskContext.get().partitionId()
+            if pid in (3, 4):
+                time.sleep(3)  # still running when partition 5 fails
+            for pdf in it:
+                if pid == 5:
+                    raise RuntimeError("boom in partition 5")
+                yield pdf
+
+        df = spark.range(0, 160, 1, 16).mapInPandas(fail_in_partition_5, "id long")
+        got: list[dict] = []
+        err = _run_bounded(lambda: got.extend(create_loader(df, batch_size=10)))
+        assert isinstance(err, PythonException)
+        assert "boom in partition 5" in str(err)
+        assert [b["id"].tolist() for b in got] == [list(range(i, i + 10)) for i in range(0, 50, 10)]
+        assert not _loader_threads()
+        _assert_group_jobs_end(sc, job_group)
+
+    def test_loader_jobs_keep_callers_job_group_and_session_tag(self, spark, job_group):
+        sc = spark.sparkContext
+        tag = f"loader-tag-{uuid.uuid4().hex}"
+        spark.addTag(tag)
+        try:
+            list(create_loader(spark.range(0, 160, 1, 16), batch_size=10))
+            # the JVM name the session gives this thread's tag on its jobs
+            jvm_tag = spark._jsparkSession.managedJobTags().get().apply(tag)
+        finally:
+            spark.removeTag(tag)
+        # one job per partition, each under the caller's group and tag
+        jobs = sc.statusTracker().getJobIdsForGroup(job_group)
+        assert len(jobs) == 16
+        store = sc._jsc.sc().statusStore()
+        for j in jobs:
+            assert jvm_tag in store.job(j).jobTags().mkString(",").split(",")
 
 
 class TestMixing:

@@ -112,6 +112,12 @@ class TestReadTarSamples:
         with pytest.raises(ValueError, match="on_error"):
             read_tar_samples(spark, tar_dir, on_error=on_error)
 
+    @pytest.mark.parametrize("num_partitions", [0, -2])
+    def test_num_partitions_below_one_raises(self, spark, tar_dir, num_partitions):
+        # 0 used to mean "default" and a negative value reached parallelize
+        with pytest.raises(ValueError, match="num_partitions"):
+            read_tar_samples(spark, tar_dir, num_partitions=num_partitions)
+
     def test_config_on_error_typo_raises(self, spark, tar_dir):
         from datapipelines_spark.plans.pipeline import create_dataset
 
