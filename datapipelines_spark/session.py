@@ -13,7 +13,9 @@ Scale posture (100 TB):
 - Timezone pinned to UTC so timestamp semantics match the DuckDB oracle.
 - Python workers fork from this package's daemon (``_daemon.py``), which
   stops each task from re-reading ``pyspark.zip``'s import directory on
-  Python < 3.13; ``spark.executorEnv.PYTHONPATH`` points at the package root
+  Python < 3.13, and forks them with pandas and pyarrow already imported
+  and frozen out of the ``gc.collect()`` that follows every task;
+  ``spark.executorEnv.PYTHONPATH`` points at the package root
   so the daemon imports from any working directory. On a cluster the
   package must be installed on the executors: the daemon starts before any
   ``addPyFile`` reaches them.
@@ -60,8 +62,9 @@ _DEFAULTS: dict[str, str] = {
     "spark.task.reaper.pollingInterval": "10s",
     "spark.task.reaper.killTimeout": "120s",
     # Workers fork from a daemon that skips re-reading unchanged zip
-    # archives on every task (_daemon.py). Spark prepends its own
-    # pyspark.zip/py4j paths and appends the JVM's PYTHONPATH to this one.
+    # archives on every task and freezes its preloaded heap (_daemon.py).
+    # Spark prepends its own pyspark.zip/py4j paths and appends the JVM's
+    # PYTHONPATH to this one.
     "spark.python.daemon.module": "datapipelines_spark._daemon",
     "spark.executorEnv.PYTHONPATH": _PACKAGE_ROOT,
 }

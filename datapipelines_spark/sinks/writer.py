@@ -112,13 +112,15 @@ def write_tar_shards(
     import pyspark.sql.functions as F
     from pyspark.sql import types as T
 
+    if shard_rows < 1:
+        raise ValueError(f"shard_rows must be >= 1, got {shard_rows}")
+    if mode not in ("error", "overwrite", "append"):
+        raise ValueError(f"mode must be 'error', 'overwrite' or 'append', got {mode!r}")
     if os.path.exists(path):
         if mode == "error":
             raise FileExistsError(f"{path} exists (mode='error')")
         if mode == "overwrite":
             shutil.rmtree(path)
-        elif mode != "append":
-            raise ValueError(f"unknown mode {mode!r}")
     os.makedirs(path, exist_ok=True)
 
     n_rows = df.count()

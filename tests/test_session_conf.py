@@ -56,6 +56,33 @@ def test_workers_do_not_reread_unchanged_zips(spark):
         assert rdd.mapPartitions(zip_reads_per_invalidate).collect() == [0] * 8
 
 
+def test_workers_fork_with_pandas_and_pyarrow_frozen(spark):
+    # the daemon freezes its preloaded heap before forking, so the
+    # gc.collect() after every task skips pandas and pyarrow
+    def heap(batches):
+        import gc
+
+        import pandas as pd
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        tracked = gc.get_objects()
+        yield pd.DataFrame(
+            {
+                "frozen": [gc.get_freeze_count()],
+                "libs_tracked": [any(o is pd or o is pa for o in tracked)],
+            }
+        )
+
+    df = spark.range(0, 8, 1, 8)
+    for _ in range(2):
+        rows = df.mapInPandas(heap, "frozen long, libs_tracked boolean").collect()
+        assert len(rows) == 8
+        assert all(r.frozen > 10_000 for r in rows), rows
+        assert not any(r.libs_tracked for r in rows), rows
+
+
 def test_add_py_file_after_workers_are_warm(spark, tmp_path):
     sc = spark.sparkContext
     sc.parallelize(range(8), 8).count()

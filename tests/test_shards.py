@@ -168,3 +168,31 @@ class TestWriteTarShards:
             write_tar_shards(df, out_dir, mode="error")
         summary = write_tar_shards(df, out_dir, mode="overwrite")
         assert sum(n for _, n in summary) == 1
+
+    @pytest.mark.parametrize(
+        "kwargs, match",
+        [
+            ({"shard_rows": 0}, "shard_rows"),
+            ({"shard_rows": -5}, "shard_rows"),
+            ({"mode": "overwirte"}, "mode"),
+            ({"mode": "ignore"}, "mode"),
+        ],
+        ids=["shard_rows=0", "shard_rows=-5", "mode=overwirte", "mode=ignore"],
+    )
+    def test_invalid_arguments_raise_before_any_job_or_write(self, spark, tmp_path, kwargs, match):
+        from datapipelines_spark.sinks.writer import write_tar_shards
+
+        df = spark.createDataFrame(
+            [("k1", {"txt": bytearray(b"x")})], "`__key__` string, data map<string, binary>"
+        )
+        out_dir = tmp_path / "tars"
+        sc = spark.sparkContext
+        group = f"write-tar-shards-validation-{match}-{kwargs[match]}"
+        sc.setJobGroup(group, "argument validation")
+        try:
+            with pytest.raises(ValueError, match=match):
+                write_tar_shards(df, str(out_dir), **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert not out_dir.exists()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []

@@ -1,8 +1,12 @@
-"""The worker daemon's stat-checked ``zipimporter.invalidate_caches``
-(``datapipelines_spark/_daemon.py``), without Spark: an unchanged archive
-is not re-read, a rewritten one is, and its new modules import."""
+"""The worker daemon (``datapipelines_spark/_daemon.py``), without Spark:
+its stat-checked ``zipimporter.invalidate_caches`` does not re-read an
+unchanged archive, re-reads a rewritten one and imports its new modules;
+its preload-and-freeze step leaves pandas and pyarrow out of the heap that
+``gc`` walks."""
 
 import importlib
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -11,7 +15,9 @@ import pytest
 
 from datapipelines_spark import _daemon
 
-pytestmark = pytest.mark.skipif(
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+zip_patch_only = pytest.mark.skipif(
     sys.version_info >= (3, 13), reason="the daemon patches zipimport only on Python < 3.13"
 )
 
@@ -45,6 +51,7 @@ def _archive_reads(reads, archive) -> int:
     return sum(1 for a in reads if a == str(archive))
 
 
+@zip_patch_only
 def test_unchanged_archive_is_not_reread(tmp_path, monkeypatch, reads):
     archive = tmp_path / "mods.zip"
     _write_zip(archive, {"dps_zipmod_a.py": "X = 1\n"})
@@ -57,6 +64,7 @@ def test_unchanged_archive_is_not_reread(tmp_path, monkeypatch, reads):
     assert _archive_reads(reads, archive) == 0
 
 
+@zip_patch_only
 def test_rewritten_archive_is_reread_and_new_module_imports(tmp_path, monkeypatch, reads):
     archive = tmp_path / "mods.zip"
     files = {"dps_zipmod_pkg/__init__.py": "", "dps_zipmod_pkg/old.py": "X = 1\n"}
@@ -77,3 +85,30 @@ def test_rewritten_archive_is_reread_and_new_module_imports(tmp_path, monkeypatc
     importlib.invalidate_caches()
     assert _archive_reads(reads, archive) == 0
 
+
+_FREEZE = """
+import gc
+import sys
+
+from datapipelines_spark import _daemon
+
+_daemon._preload_and_freeze()
+tracked = gc.get_objects()
+print(gc.get_freeze_count())
+print(any(o is sys.modules[m] for o in tracked for m in ("pandas", "pyarrow")))
+"""
+
+
+def test_preload_and_freeze_moves_pandas_and_pyarrow_out_of_gc():
+    # a subprocess: freezing this pytest process would outlive the test
+    out = subprocess.run(
+        [sys.executable, "-c", _FREEZE],
+        cwd=REPO_ROOT,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    frozen, libs_tracked = out.stdout.split()
+    assert int(frozen) > 10_000
+    assert libs_tracked == "False"
