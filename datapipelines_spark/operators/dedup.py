@@ -236,6 +236,11 @@ def _doc_sig_udf(config: MinHashConfig):
     return ds
 
 
+def _check_impl(impl: str) -> None:
+    if impl not in ("arrow", "expr"):
+        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
+
+
 def doc_shingles(
     df: DataFrame, text_col: str, id_col: str, n: int = 3, impl: str = "arrow"
 ) -> DataFrame:
@@ -248,6 +253,7 @@ def doc_shingles(
     """
     from datapipelines_spark.functions.partitioning import parallelize_small
 
+    _check_impl(impl)
     words = F.split(F.col(text_col), " ")
     base = parallelize_small(df.select(F.col(id_col), F.col(text_col))).where(
         F.size(words) >= n
@@ -392,6 +398,7 @@ def _docs_with_signatures(
     Arrow path: ONE fused pandas stage computes shingles + every minhash
     min per doc (the UDF is planned as a single ArrowEvalPython node;
     field extraction afterwards does not re-run it)."""
+    _check_impl(impl)
     if impl == "arrow":
         from datapipelines_spark.functions.partitioning import parallelize_small
 
@@ -601,6 +608,7 @@ def simhash(
     """
     from datapipelines_spark.functions.partitioning import parallelize_small
 
+    _check_impl(impl)
     if impl == "arrow":
         return parallelize_small(df.select(F.col(id_col), F.col(text_col))).select(
             F.col(id_col), _simhash_udf(bits)(F.col(text_col)).alias("simhash")

@@ -108,6 +108,11 @@ def crop_resize_images(
 
     from datapipelines_spark.operators.multimodal import _payload_stage, decode_array
 
+    resize = {"bilinear": resize_bilinear, "nearest": resize_nearest}.get(interpolation)
+    if resize is None:
+        raise ValueError(f"interpolation must be 'bilinear' or 'nearest', got {interpolation!r}")
+    if target < 1:
+        raise ValueError(f"target must be >= 1, got {target}")
     out_fields = [
         T.StructField("ppm", T.BinaryType()),
         T.StructField("orig_width", T.IntegerType()),
@@ -124,7 +129,6 @@ def crop_resize_images(
         f for f in df.schema.fields
         if (f.name != payload_col if passthrough else f.name == key_col)
     ]
-    resize = resize_bilinear if interpolation == "bilinear" else resize_nearest
 
     def crop_resize(key, payload: bytes) -> list[dict]:
         arr = decode_array(payload)

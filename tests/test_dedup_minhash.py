@@ -1,5 +1,7 @@
 """Cross-corpus MinHash LSH join (operators/dedup.py:minhash_lsh_join)."""
 
+import pytest
+
 
 def test_minhash_lsh_join_cross_sides_only(spark):
     from datapipelines_spark.operators.dedup import MinHashConfig, minhash_lsh_join
@@ -184,3 +186,20 @@ def test_band_struct_expression_memoized_per_config(spark):
     for r in keys:
         by_band.setdefault(r["band_id"], set()).add(r["band_key"])
     assert all(len(v) == 1 for v in by_band.values())
+
+
+@pytest.mark.parametrize("impl", ["arow", "Arrow", "gemm"])
+@pytest.mark.parametrize("op", ["doc_shingles", "minhash_signatures", "simhash"])
+def test_impl_typo_raises_before_any_job(spark, op, impl):
+    from datapipelines_spark.operators import dedup
+
+    df = spark.createDataFrame([(0, "a b c d e")], "doc_id long, text string")
+    sc = spark.sparkContext
+    group = f"dedup-impl-validation-{op}-{impl}"
+    sc.setJobGroup(group, "argument validation")
+    try:
+        with pytest.raises(ValueError, match="impl must be 'arrow' or 'expr'"):
+            getattr(dedup, op)(df, "text", "doc_id", impl=impl)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

@@ -1,6 +1,7 @@
 """Real pixel crop/resize stages (operators/imageops.py)."""
 
 import numpy as np
+import pytest
 
 from datapipelines_spark.operators.imageops import (
     _hash_offset,
@@ -111,3 +112,32 @@ def test_ppm_reencode_roundtrip():
     rng = np.random.default_rng(2)
     img = rng.integers(0, 256, (9, 11, 3), np.uint8)
     assert np.array_equal(decode_ppm(encode_ppm(img)), img)
+
+
+@pytest.mark.parametrize(
+    "kwargs, match",
+    [
+        ({"interpolation": "bilnear"}, "interpolation"),
+        ({"interpolation": "bicubic"}, "interpolation"),
+        ({"target": 0}, "target"),
+        ({"target": -4}, "target"),
+    ],
+    ids=["interpolation=bilnear", "interpolation=bicubic", "target=0", "target=-4"],
+)
+def test_crop_resize_rejects_bad_arguments_at_the_call(spark, kwargs, match):
+    from datapipelines_spark.operators.imageops import ImageTransforms
+
+    df = spark.createDataFrame([("k", bytearray(b"x"))], "`__key__` string, jpg binary")
+    sc = spark.sparkContext
+    group = f"crop-resize-validation-{match}-{next(iter(kwargs.values()))}"
+    sc.setJobGroup(group, "argument validation")
+    try:
+        with pytest.raises(ValueError, match=match):
+            crop_resize_images(df, **kwargs)
+        # the config mapper passes its values through
+        mapper_kwargs = {"size" if k == "target" else k: v for k, v in kwargs.items()}
+        with pytest.raises(ValueError, match=match):
+            ImageTransforms(**mapper_kwargs).apply(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

@@ -142,3 +142,16 @@ def test_session_launched_from_another_directory(tmp_path):
     lines = out.stdout.splitlines()
     assert "rdd ['datapipelines_spark', 'datapipelines_spark']" in lines
     assert "pandas ['datapipelines_spark'] 4" in lines
+
+
+@pytest.mark.parametrize("shuffle_partitions", [0, -3])
+def test_shuffle_partitions_below_one_raises_before_launch(monkeypatch, shuffle_partitions):
+    from datapipelines_spark import session
+
+    def no_launch(*args, **kwargs):
+        raise AssertionError("a session was launched")
+
+    monkeypatch.setattr(session, "_archive_launch", no_launch)
+    monkeypatch.setattr(session, "_launch", no_launch)
+    with pytest.raises(ValueError, match="shuffle_partitions"):
+        session.get_spark(shuffle_partitions=shuffle_partitions)
