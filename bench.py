@@ -512,8 +512,8 @@ def main() -> None:
             for n in slow
         }
     # All diagnostics BEFORE the JSON line: a combined stdout+stderr capture
-    # must end with the parseable JSON (BENCH_r03 recorded parsed:null when a
-    # trailing WARN line followed it).
+    # must end with the parseable JSON, and a trailing WARN line after it
+    # would make the last line unparseable.
     failed = total_ratio is not None and total_ratio > 2.0
     if slow:
         print(

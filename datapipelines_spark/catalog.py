@@ -72,132 +72,4 @@ def all_queries() -> dict[str, QuerySpec]:
         recall,
     )
 
-    ordered: dict[str, QuerySpec] = {}
-    for name in PRIORITY_50:
-        ordered[name] = _REGISTRY[name]
-    for name, spec in _REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = spec
-    return ordered
-
-# The driver's correctness gate hashes exactly the FIRST 50 entries of
-# all_queries() in iteration order. The window ROTATES each round so
-# cumulative driver-green coverage grows instead of re-verifying the same 50
-# (VERDICT r2 #6). Since r9 the re-confirmation slots are COMPUTED, not
-# hand-maintained: rotation.py derives every query's latest green driver
-# verdict from the CORRECTNESS_r*.json artifacts, and the window's tail
-# must be a prefix of rotation.reconfirm_queue() (stalest latest-verdict
-# first, ties by name) — tests/test_catalog_order.py enforces it. That
-# closes the VERDICT r8 accounting escape where a hand-kept "r4-only" list
-# let scalar_string_funcs sit on its round-1 verdict for seven rounds.
-
-#: The round whose window PRIORITY_50 pins. The rotation accounting is
-#: computed from artifacts of rounds STRICTLY BELOW this (ADVICE r9: an
-#: unbounded artifact read made the round's own invariants false the
-#: moment the driver wrote CORRECTNESS_r{WINDOW_ROUND}.json — the window
-#: constants must stay valid before AND after the round lands).
-WINDOW_ROUND = 14
-
-# Round-14 window:
-#   (a) CORRECTNESS_r13 was 50/50 green — no red block;
-#   (b) first driver verdict: stream_ingest_asof_replay (added after the
-#       r13 window was pinned; queued all round as PENDING_FIRST_VERDICT);
-#   (c) r13/r14 behavior/plan changes re-confirmed — VERDICT r13 next #1:
-#       the r13 window was pinned BEFORE the optimization batches landed,
-#       so 15 r13-touched queries carry only pre-change verdicts; they
-#       lead this block, followed by the r14 optimization targets
-#       (VERDICT r13 next #3-#8) whose plans change this round;
-#   (d) the rest is the computed staleness queue verbatim over r1..r13
-#       (the r9 cohort head). The changed-block debt costs this window 22
-#       slots, so the 46-name r9 cohort drains across r14+r15 instead of
-#       one round — see test_staleness_invariant_after_this_window_lands.
-# Everything stays covered locally by tests/test_oracle_differential.py
-# (every catalog query, replicating the driver compare, sf0.01 via
-# SPARK_GRAFT_ORACLE_DIR).
-FIRST_VERDICTS_R14: tuple[str, ...] = (
-    "stream_ingest_asof_replay",  # pending from late r13
-)
-
-CHANGED_R14: tuple[str, ...] = (
-    # r13 optimization-touched, window pinned too early (VERDICT r13 #1)
-    "dedup_recall_harness",
-    "dedup_incremental_batch",
-    "sim_pq_adc_topk",
-    "sim_sq8_rerank_topk",
-    "sim_ivf_sq8_topk",
-    "sim_knn_graph",
-    "sim_knn_components",
-    "corpus_clean_pipeline",
-    "corpus_clean_pipeline_v2",
-    "decontaminate_minhash_cross",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_winnow_fingerprints",
-    "dedup_substring_removal",
-    "decontaminate_bloom",
-    # r14 optimization targets (plan changes this round)
-    "text_pmi_collocations",
-    "dedup_clusters",
-    "dedup_semantic_clusters",
-    "quality_linear_classifier",
-    "text_bm25_search",
-    "domain_quota_sample_docs",
-    "stream_ingest_dedup_replay",
-    # late-r14 plan changes (IDN distinct-host mapping lands in both):
-    # added mid-round, displacing the two queue names at exactly the
-    # relaxed staleness floor (multimodal_mp4_probe, pack_sequences_budget
-    # — r9 verdicts survive to r15 at floor = WINDOW_ROUND - 5)
-    "url_parse_documents",
-    "corpus_ingest_pipeline",
-    # late-r14 sq8 normalize reshape (zip_with/array_repeat instead of the
-    # O(D²) inlined-norm transform) changes the harness's sq8 subtrees too;
-    # pinned so the changed plan gets an r14 verdict (the VERDICT r13 #1
-    # debt class), displacing multimodal_jpeg_decode from the queue tail
-    # (r9 verdict, survives to r15 at the same relaxed floor)
-    "sim_recall_harness",
-)
-
-PRIORITY_50: tuple[str, ...] = FIRST_VERDICTS_R14 + CHANGED_R14 + (
-    # --- computed staleness queue (rotation.reconfirm_queue() prefix) ---
-    "agg_approx_distinct_parts",
-    "asof_join_last_order_before_event",
-    "batch_fixed_size_groups",
-    "decontaminate_ngram_overlap",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_substring_spans",
-    "diff_orders_versions",
-    "epoch_repeat_cycle",
-    "filter_required_keys",
-    "filter_size_range",
-    "having_big_part_groups",
-    "join_anti_customers_without_orders",
-    "join_metadata_rename_collision",
-    "join_null_safe_segments",
-    "join_outer_order_counts",
-    "join_semi_customers_with_orders",
-    "jsonl_gz_roundtrip",
-    "mapper_rescale_embeddings",
-    "mix_weighted_sources",
-    "multimodal_audio_fp_pairs",
-    "multimodal_binary_stats",
-    "multimodal_dhash_near_pairs",
-    "multimodal_image_dedup_pipeline",
-)
-
-
-#: Queries added AFTER the current PRIORITY_50 was pinned: they have no
-#: driver verdict yet and MUST lead the next round's window. Keep in sync
-#: when adding catalog queries mid-round (test_catalog_order enforces that
-#: every query is either driver-verified, in the window, or listed here).
-PENDING_FIRST_VERDICT: tuple[str, ...] = ()
-
-# r15 rotation plan (build the next PRIORITY_50 from this, in order):
-#   1. any query red or errored in CORRECTNESS_r14 (fix first, then pin);
-#   2. PENDING_FIRST_VERDICT above (first driver verdicts), if any;
-#   3. queries whose plans/outputs change in r15;
-#   4. rotation.reconfirm_queue(before_round=15) verbatim for every
-#      remaining slot — after r14 lands, the queue starts with the 19
-#      remaining r9-cohort names (head: the three displaced at the relaxed
-#      floor — multimodal_jpeg_decode, multimodal_mp4_probe,
-#      pack_sequences_budget — then percentile_order_values, ...).
+    return dict(_REGISTRY)

@@ -46,8 +46,8 @@ _LIVE: list[DataFrame] = []
 #: one plan (7 ANN family arms / 4 LSH arms sharing signature tables), and
 #: at 6 the registry evicted the earliest arms' caches BEFORE the plan ever
 #: executed — the final sim_recall_harness plan scanned parquet 83 times
-#: (plans/r13/sim_recall_harness_before.txt) because the shared
-#: e/ranked/signature subtrees it was built around were no longer cached.
+#: (counted in its physical plan) because the shared e/ranked/signature
+#: subtrees it was built around were no longer cached.
 #: The eviction-on-overflow discipline itself is unchanged: whatever a
 #: harness forgets to release still dies after 16 newer persists.
 _MAX_LIVE = 16

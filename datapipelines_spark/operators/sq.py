@@ -179,10 +179,10 @@ def sq8_adc_rerank_topk(
 
     SCALE GUARD: the shortlist stage scans the ENTIRE code table per
     query batch — linear in corpus size by design (FAISS
-    ``IndexScalarQuantizer`` semantics; measured ``growth_class: linear``
-    in BENCH_r10). That is the right shape for small corpora and re-rank
-    stages, and the wrong one past ~10^7 rows — the composed IVF+SQ8
-    path (query ``sim_ivf_sq8_topk``, queries/vectors.py: IVF cell
+    ``IndexScalarQuantizer`` semantics; bench.py's 4x-scaled pass measured
+    ``growth_class: linear``). That is the right shape for small corpora
+    and re-rank stages, and the wrong one past ~10^7 rows — the composed
+    IVF+SQ8 path (query ``sim_ivf_sq8_topk``, queries/vectors.py: IVF cell
     prefilter + SQ8 codes within probed cells) restricts the scan to
     probed cells and is the corpus-scale default. Raise ``max_corpus``
     explicitly to accept the flat scan anyway."""

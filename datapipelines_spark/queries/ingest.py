@@ -158,8 +158,8 @@ def corpus_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crawl/gate branch; the quota-gated batch feeds the verdict operator's
     # exact/signature stages AND the final join. Persist both so the
     # staged fixture's 3-scan self-join plan and the URL-parse + quota
-    # window run once, not once per consumer (r13, guide §5; the before
-    # plan re-derived them ~5x: plans/r13/corpus_ingest_pipeline_before.txt)
+    # window run once, not once per consumer (guide §5; without the
+    # persists the physical plan re-derives each of them ~5x)
     staged = managed_persist(staged_dup_docs(spark, sf_dir))
     corpus = staged.where(F.col("doc_id") % 4 != 0)
     crawl = staged.where(F.col("doc_id") % 4 == 0)

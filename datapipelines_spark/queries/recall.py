@@ -444,9 +444,9 @@ def sim_recall_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partials, the query-code collect) — ~8 serial jobs. Build the arms
     # from a thread pool (guide §2.6: overlap independent jobs) so those
     # jobs overlap; the assembled plan is IDENTICAL (same spec order, same
-    # union — plans/r14 captures diff empty), only build latency changes.
-    # Measured: 9.92 -> 6.91 s median, interleaved same-JVM A/B
-    # (plans/r14/profile_recall_thr.py), identical 7-row result.
+    # union, so the physical plans diff empty), only build latency changes.
+    # Measured: 9.92 -> 6.91 s median build, interleaved same-JVM A/B,
+    # identical 7-row result.
     fam_builders = {
         fam: b for fam, _s, b, _n in specs if not fam.startswith("ivf_p")
     }

@@ -3,7 +3,6 @@ import os
 import pytest
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
-SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")

@@ -56,10 +56,13 @@ def test_exact_budget_convergence_is_clean(spark):
     import warnings
 
     df = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
+    # connected_components warns eagerly, during the call; collect outside
+    # the block so the ResourceWarning pyspark raises when its result
+    # socket is garbage-collected cannot surface as an unraisable error
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        got = {r["node"]: r["component"] for r in
-               connected_components(df, max_iterations=20).collect()}
+        labels = connected_components(df, max_iterations=20)
+    got = {r["node"]: r["component"] for r in labels.collect()}
     assert got == {1: 1, 2: 1, 3: 1}
 
 

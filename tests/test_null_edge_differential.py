@@ -75,7 +75,7 @@ def _consumes(src_text, table):
 # which a source-text grep misses (ADVICE r8 #2) — but every query's oracle
 # is a fully-expanded SQL string that must name the views it reads, so grep
 # builder source AND oracle SQL together.
-_ALL_TARGETS = sorted(
+_TARGETS = sorted(
     n for n, s in all_queries().items()
     if any(
         _consumes(inspect.getsource(s.builder) + "\n" + (s.oracle or ""), t)
@@ -83,15 +83,6 @@ _ALL_TARGETS = sorted(
     )
     # streaming replays included: event-time processing drops NULL
     # timestamps at ingestion, and each oracle declares the same domain
-)
-
-# Default runs keep the driver-window + one-per-family subset so the suite
-# fits the driver's pytest wall cap (VERDICT r13 next #2);
-# SPARK_GRAFT_FULL_DIFF=1 restores the exhaustive sweep (builder mode).
-from datapipelines_spark.testing import differential_subset, full_differential
-
-_TARGETS = (
-    _ALL_TARGETS if full_differential() else differential_subset(_ALL_TARGETS)
 )
 
 

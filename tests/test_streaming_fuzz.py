@@ -62,7 +62,6 @@ def _batch_expected(spark, sf_dir: str, width_min: int, delay_min: int):
     }
 
 
-@pytest.mark.slow
 @settings(
     max_examples=7,
     deadline=None,
