@@ -1,8 +1,7 @@
 """Scaled bench fixtures: replicate the sf parquet tables ×K with consistent
 key shifts, so the expensive bench queries can be re-measured above Spark's
-fixed scheduler floor (VERDICT r4 #6: per-query ratio flags at sf0.1 are
-dominated by ~0.5 s overhead; a 4× pass separates real regressions from
-noise).
+fixed scheduler floor (per-query ratio flags at sf0.1 are dominated by
+~0.5 s overhead; a 4× pass separates real regressions from noise).
 
 Design choices, stated so the numbers are interpretable:
 

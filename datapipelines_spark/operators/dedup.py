@@ -6,21 +6,15 @@ Hashing is the portable md5-derived 32-bit scheme from functions/hashing.py,
 so every signature is deterministic, retry-stable, and reproducible outside
 Spark (the DuckDB oracles in queries/dedup.py recompute them exactly).
 
-Shingle/signature construction has two interchangeable implementations that
-produce bit-identical results (equality-tested in
-tests/test_dedup_arrow_parity.py):
-
-- ``impl='expr'``: pure JVM higher-order array expressions. Zero Python,
-  but Spark interprets HOF lambdas (no whole-stage codegen), so per-row
-  cost is high.
-- ``impl='arrow'`` (default): one Arrow-batched pandas UDF per doc computes
-  shingles + all minhash mins (numpy) in a single pass. Row-at-a-time
-  Python UDFs remain banned (tests/test_plan_hygiene.py); Arrow vectorized
-  stages are the sanctioned escape hatch for CPU-bound per-row work.
+Shingles, MinHash signatures and SimHash are computed by Arrow-batched
+pandas UDFs: one vectorized stage per doc computes shingles + all minhash
+mins (numpy) in a single pass. Row-at-a-time Python UDFs remain banned
+(tests/test_plan_hygiene.py); Arrow vectorized stages are the sanctioned
+escape hatch for CPU-bound per-row work.
 
 Plan-shape notes (what keeps this fast at 100 TB):
 - Shingle sets live as per-row ARRAY columns; signatures (minhash, sizes)
-  are higher-order array expressions — zero shuffles until candidates exist.
+  are computed inside the row — zero shuffles until candidates exist.
 - Candidate generation is the only explode+equi-join (inverted index / LSH
   band buckets) — volume tracks duplicate density, not corpus size².
 - Verification joins candidate pairs back to the compact (id, shingles)
@@ -42,7 +36,7 @@ from pyspark.sql.functions import pandas_udf
 # expr_memo: plan-build memo for the banding/signature expression trees
 # (~8000 py4j calls per ingest_tick_verdicts build — 1.2-1.9 s of pure
 # driver time per streaming tick re-spent on IDENTICAL expressions); see
-# functions/caching.py:expr_memo for the discipline (r14)
+# functions/caching.py:expr_memo for the discipline
 from datapipelines_spark.functions.caching import expr_memo as _expr_memo
 from datapipelines_spark.functions.caching import managed_persist
 from datapipelines_spark.functions.hashing import portable_hash64
@@ -84,9 +78,9 @@ def choose_banding(
 ) -> MinHashConfig:
     """Solve the banding curve for a MinHashConfig whose CANDIDATE stage
     detects pairs at the dedup ``threshold`` with probability at least
-    ``target_recall`` — closed form, no data pass (VERDICT r11 next #2:
-    the accuracy harness measures the 1-(1-j^r)^b curve, this makes it
-    actionable instead of leaving (bands, rows) to folklore).
+    ``target_recall`` — closed form, no data pass (the accuracy harness
+    measures the 1-(1-j^r)^b curve; this makes it actionable instead of
+    leaving (bands, rows) to folklore).
 
     For each rows-per-band r, the minimal band count is
     b(r) = ceil(ln(1-R) / ln(1-t^r)); more rows per band means fewer
@@ -133,8 +127,8 @@ def _resolve_config(
     target_recall: float | None,
 ) -> MinHashConfig:
     """Resolve the (config, target_recall) pair the ingest surfaces accept
-    (VERDICT r12 stretch #7: the measured-recall discipline reaches the
-    production ingest path): ``target_recall`` derives the banding via
+    (so the measured-recall discipline reaches the production ingest
+    path): ``target_recall`` derives the banding via
     ``choose_banding`` at the operator's own threshold; an explicit
     ``config`` is taken verbatim; passing both is ambiguous and rejected;
     neither falls back to the historical default banding."""
@@ -176,20 +170,10 @@ def drop_exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFram
 # shingles
 
 
-def shingle_array(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of one document, as an array column."""
-    words = F.split(text, " ")
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-        )
-    )
-
-
 def _shingle_list_py(text: str, n: int) -> list[str]:
-    """Python replica of shingle_array: split on single spaces (keeping
-    empties, like Spark/Java split), first-occurrence-distinct n-grams."""
+    """Distinct word n-grams of one document: split on single spaces
+    (keeping empties, like Spark/Java split and DuckDB string_split),
+    first-occurrence-distinct n-grams joined by one space."""
     words = text.split(" ")
     return list(
         dict.fromkeys(" ".join(words[i : i + n]) for i in range(len(words) - n + 1))
@@ -207,7 +191,7 @@ def _shingle_udf(n: int):
 def _doc_sig_udf(config: MinHashConfig):
     """Fused Arrow stage: text → struct(shingles, sig[num_hashes]) in one
     Python round trip. Signatures are exact int64 math — identical to the
-    expression path and the DuckDB oracle."""
+    DuckDB oracle."""
     coeffs = np.array(config.coefficients(), dtype=np.int64)
     A = coeffs[:, 0][:, None]
     B = coeffs[:, 1][:, None]
@@ -236,35 +220,21 @@ def _doc_sig_udf(config: MinHashConfig):
     return ds
 
 
-def _check_impl(impl: str) -> None:
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-
-
-def doc_shingles(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, impl: str = "arrow"
-) -> DataFrame:
+def doc_shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
     """(id, shingles array<string>, n_sh) — one row per doc, no explode.
 
-    ``impl='expr'`` shingle construction is an interpreted higher-order
-    expression (no codegen); ``impl='arrow'`` computes the same arrays in a
-    vectorized pandas stage. Either way parallelism is everything on narrow
-    inputs: widen first.
+    Shingles come from one vectorized pandas stage; parallelism is
+    everything on narrow inputs, so the input is widened first.
     """
     from datapipelines_spark.functions.partitioning import parallelize_small
 
-    _check_impl(impl)
     words = F.split(F.col(text_col), " ")
     base = parallelize_small(df.select(F.col(id_col), F.col(text_col))).where(
         F.size(words) >= n
     )
-    if impl == "arrow":
-        shingles = _shingle_udf(n)(F.col(text_col))
-    else:
-        shingles = shingle_array(F.col(text_col), n)
-    return base.select(F.col(id_col), shingles.alias("shingles")).withColumn(
-        "n_sh", F.size("shingles")
-    )
+    return base.select(
+        F.col(id_col), _shingle_udf(n)(F.col(text_col)).alias("shingles")
+    ).withColumn("n_sh", F.size("shingles"))
 
 
 def word_shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
@@ -363,69 +333,37 @@ def ngram_jaccard_pairs(
 # MinHash + LSH
 
 
-def _with_signature_columns(docs: DataFrame, config: MinHashConfig) -> DataFrame:
-    """Append h0..h{k-1} minhash columns, computed entirely inside the row:
-    hash every shingle once, then take per-function array minima. No shuffle.
-    """
-    hashed = docs.withColumn(
-        "__sh_hash",
-        F.transform(
-            F.col("shingles"),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint"),
-        ),
-    )
-    def _permute(a: int, b: int):
-        # closure factory: PySpark introspects lambda arity, so default-arg
-        # binding (lambda x, a=a: ...) would be mistaken for a 2-arg lambda
-        return lambda x: (F.lit(a) * x + F.lit(b)) % MERSENNE_PRIME
-
-    for i, (a, b) in enumerate(config.coefficients()):
-        hashed = hashed.withColumn(
-            f"h{i}", F.array_min(F.transform(F.col("__sh_hash"), _permute(a, b)))
-        )
-    return hashed.drop("__sh_hash")
-
-
 def _docs_with_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    config: MinHashConfig,
-    impl: str = "arrow",
+    df: DataFrame, text_col: str, id_col: str, config: MinHashConfig
 ) -> DataFrame:
     """(id, shingles, n_sh, h0..h{k-1}) — one row per doc, no shuffle.
 
-    Arrow path: ONE fused pandas stage computes shingles + every minhash
-    min per doc (the UDF is planned as a single ArrowEvalPython node;
-    field extraction afterwards does not re-run it)."""
-    _check_impl(impl)
-    if impl == "arrow":
-        from datapipelines_spark.functions.partitioning import parallelize_small
+    ONE fused pandas stage computes shingles + every minhash min per doc
+    (the UDF is planned as a single ArrowEvalPython node; field extraction
+    afterwards does not re-run it)."""
+    from datapipelines_spark.functions.partitioning import parallelize_small
 
-        words = F.split(F.col(text_col), " ")
-        base = parallelize_small(df.select(F.col(id_col), F.col(text_col))).where(
-            F.size(words) >= config.ngram
-        )
-        sig_call = _expr_memo(
-            ("doc_sig_call", config, text_col),
-            lambda: _doc_sig_udf(config)(F.col(text_col)).alias("__ds"),
-        )
-        ds = base.select(F.col(id_col), sig_call)
-        extract = _expr_memo(
-            ("sig_extract", config.num_hashes),
-            lambda: tuple(
-                F.col("__ds.sig").getItem(i).alias(f"h{i}")
-                for i in range(config.num_hashes)
-            ),
-        )
-        return ds.select(
-            F.col(id_col),
-            F.col("__ds.shingles").alias("shingles"),
-            F.size("__ds.shingles").alias("n_sh"),
-            *extract,
-        )
-    return _with_signature_columns(
-        doc_shingles(df, text_col, id_col, config.ngram, impl="expr"), config
+    words = F.split(F.col(text_col), " ")
+    base = parallelize_small(df.select(F.col(id_col), F.col(text_col))).where(
+        F.size(words) >= config.ngram
+    )
+    sig_call = _expr_memo(
+        ("doc_sig_call", config, text_col),
+        lambda: _doc_sig_udf(config)(F.col(text_col)).alias("__ds"),
+    )
+    ds = base.select(F.col(id_col), sig_call)
+    extract = _expr_memo(
+        ("sig_extract", config.num_hashes),
+        lambda: tuple(
+            F.col("__ds.sig").getItem(i).alias(f"h{i}")
+            for i in range(config.num_hashes)
+        ),
+    )
+    return ds.select(
+        F.col(id_col),
+        F.col("__ds.shingles").alias("shingles"),
+        F.size("__ds.shingles").alias("n_sh"),
+        *extract,
     )
 
 
@@ -434,10 +372,9 @@ def minhash_signatures(
     text_col: str,
     id_col: str,
     config: MinHashConfig = MinHashConfig(),
-    impl: str = "arrow",
 ) -> DataFrame:
     """One row per doc with columns h0..h{k-1}."""
-    docs = _docs_with_signatures(df, text_col, id_col, config, impl)
+    docs = _docs_with_signatures(df, text_col, id_col, config)
     return docs.select(id_col, *[f"h{i}" for i in range(config.num_hashes)])
 
 
@@ -484,7 +421,6 @@ def minhash_lsh_pairs(
     config: MinHashConfig = MinHashConfig(),
     threshold: float = 0.5,
     max_bucket_size: int | None = 512,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Candidate pairs from LSH band buckets, verified by exact Jaccard.
 
@@ -505,7 +441,7 @@ def minhash_lsh_pairs(
     """
     # docs feeds the band-bucket branch AND both verification broadcasts;
     # persist so the signature stage runs once
-    docs = managed_persist(_docs_with_signatures(df, text_col, id_col, config, impl))
+    docs = managed_persist(_docs_with_signatures(df, text_col, id_col, config))
     cand = _lsh_candidate_pairs(docs, id_col, config, max_bucket_size)
     return _pair_jaccard(cand, docs, id_col, threshold)
 
@@ -516,7 +452,6 @@ def minhash_lsh_candidates(
     id_col: str,
     config: MinHashConfig = MinHashConfig(),
     max_bucket_size: int | None = 512,
-    impl: str = "arrow",
 ) -> DataFrame:
     """The band-bucket CANDIDATE pairs alone — ``minhash_lsh_pairs``
     WITHOUT the exact-jaccard verification. Exposed so accuracy harnesses
@@ -524,7 +459,7 @@ def minhash_lsh_candidates(
     verified output (queries/recall.py:dedup_recall_harness): band recall
     is the 1-(1-j^r)^b detection curve made empirical, and band precision
     is how much exact-verification work the buckets admit."""
-    docs = _docs_with_signatures(df, text_col, id_col, config, impl)
+    docs = _docs_with_signatures(df, text_col, id_col, config)
     return _lsh_candidate_pairs(docs, id_col, config, max_bucket_size)
 
 
@@ -596,50 +531,17 @@ def _simhash_udf(bits: int):
     return sim
 
 
-def simhash(
-    df: DataFrame, text_col: str, id_col: str, bits: int = 32, impl: str = "arrow"
-) -> DataFrame:
+def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> DataFrame:
     """Term-frequency-weighted SimHash: (id, simhash bigint).
 
-    Entirely row-local, no shuffle at all. expr path: token counts via
-    array grouping (the nested count filter is O(tokens²) interpreted —
-    fine for short docs, the reason 'arrow' is the default); arrow path:
-    one vectorized pandas stage, numpy bit math.
+    Entirely row-local, no shuffle at all: one vectorized pandas stage
+    counts each doc's tokens and does the per-bit weighting in numpy.
     """
     from datapipelines_spark.functions.partitioning import parallelize_small
 
-    _check_impl(impl)
-    if impl == "arrow":
-        return parallelize_small(df.select(F.col(id_col), F.col(text_col))).select(
-            F.col(id_col), _simhash_udf(bits)(F.col(text_col)).alias("simhash")
-        )
-
-    toks = F.split(F.col(text_col), " ")
-    # distinct tokens with their counts, hashed once each
-    tok_hash_w = F.transform(
-        F.array_distinct(toks),
-        lambda t: F.struct(
-            F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint").alias("h"),
-            F.size(F.filter(toks, lambda x: x == t)).cast("long").alias("w"),
-        ),
+    return parallelize_small(df.select(F.col(id_col), F.col(text_col))).select(
+        F.col(id_col), _simhash_udf(bits)(F.col(text_col)).alias("simhash")
     )
-    d = parallelize_small(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), tok_hash_w.alias("thw")
-    )
-    # for each bit j: weight_j = sum over tokens of (bit set ? +w : -w)
-    def _bit_weight(j: int):
-        return lambda acc, t: acc + F.when(
-            F.shiftright(t["h"], j).bitwiseAND(F.lit(1)) == 1, t["w"]
-        ).otherwise(-t["w"])
-
-    bit_cols = []
-    for j in range(bits):
-        wj = F.aggregate(F.col("thw"), F.lit(0).cast("long"), _bit_weight(j))
-        bit_cols.append(F.when(wj > 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0)))
-    sim = bit_cols[0]
-    for c in bit_cols[1:]:
-        sim = sim + c
-    return d.select(F.col(id_col), sim.alias("simhash"))
 
 
 def simhash_near_pairs(
@@ -757,7 +659,7 @@ def embedding_cosine_pairs_blocked(
     Reference parity: the reference has no vector dedup at all; this extends
     sdata's dedup surface per the LLM-pipeline mandate (SURVEY §2.10).
 
-    ``prefilter='ivf'`` (VERDICT r4 stretch #7) swaps the exact O(n²/B)
+    ``prefilter='ivf'`` swaps the exact O(n²/B)
     block-pair sweep for IVF pre-blocking: k-means cells are trained on the
     corpus, each vector multi-assigns to its ``probes`` nearest cells
     (broadcast centroids, no corpus shuffle), and the GEMM runs only WITHIN
@@ -988,7 +890,6 @@ def minhash_lsh_join(
     id_col: str,
     config: MinHashConfig = MinHashConfig(),
     threshold: float = 0.5,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Cross-corpus near-dup join: (doc_a from ``left``, doc_b from
     ``right``, jaccard) for pairs above ``threshold``, candidates from LSH
@@ -1004,10 +905,10 @@ def minhash_lsh_join(
     verified by exact Jaccard, with the candidate list broadcast back
     against the corpus (candidates ≪ corpus after banding)."""
     ldocs = managed_persist(
-        _docs_with_signatures(left, text_col, id_col, config, impl)
+        _docs_with_signatures(left, text_col, id_col, config)
     )
     rdocs = managed_persist(
-        _docs_with_signatures(right, text_col, id_col, config, impl)
+        _docs_with_signatures(right, text_col, id_col, config)
     )
     return _lsh_join_from_docs(ldocs, rdocs, id_col, config, threshold)
 
@@ -1194,7 +1095,7 @@ def duplicate_substring_spans(
     # pos feeds TWO consumers (the corpus-wide frequency count and the
     # flagged-position join): persist it, or the gram construction — a
     # concat_ws string per window over every token of the corpus, the CPU
-    # of this operator — runs twice (r14, guide §5). Cached rows are
+    # of this operator — runs twice. Cached rows are
     # (id, pos, gh): three longs per token position, far smaller than the
     # window strings they replace.
     pos = managed_persist(
@@ -1408,7 +1309,6 @@ def incremental_dedup_verdicts(
     id_col: str,
     config: MinHashConfig | None = None,
     threshold: float = 0.5,
-    impl: str = "arrow",
     max_bucket_size: int | None = 512,
     target_recall: float | None = None,
 ) -> DataFrame:
@@ -1444,14 +1344,13 @@ def incremental_dedup_verdicts(
     from ``target_recall``, which solves the banding for this operator's
     own ``threshold`` via ``choose_banding`` (``_resolve_config``).
 
-    r13 plan note: the batch and corpus signature tables are computed ONCE
+    Plan note: the batch and corpus signature tables are computed ONCE
     each (persisted) and shared by the corpus probe and the within-batch
-    stage — previously each stage re-derived its own signature pipeline,
-    so one verdict table paid three Arrow shingle+minhash passes over the
-    batch and the plan tree blew up combinatorially (guide §5 caching /
-    §2.4 shared exchanges). Results are bit-identical: the signature
-    stage is deterministic and the cache only changes where it is read
-    from."""
+    stage — if each stage re-derived its own signature pipeline, one
+    verdict table would pay three Arrow shingle+minhash passes over the
+    batch and the plan tree would blow up combinatorially. Results are
+    bit-identical: the signature stage is deterministic and the cache
+    only changes where it is read from."""
     config = _resolve_config(config, threshold, target_recall)
     bh = batch.select(F.col(id_col), F.md5(F.col(text_col)).alias("__h"))
     ch = corpus.groupBy(F.md5(F.col(text_col)).alias("__h")).agg(
@@ -1468,10 +1367,10 @@ def incremental_dedup_verdicts(
         id_col, "exact_corpus", "exact_batch"
     )
     bdocs = managed_persist(
-        _docs_with_signatures(batch, text_col, id_col, config, impl)
+        _docs_with_signatures(batch, text_col, id_col, config)
     )
     cdocs = managed_persist(
-        _docs_with_signatures(corpus, text_col, id_col, config, impl)
+        _docs_with_signatures(corpus, text_col, id_col, config)
     )
     near_c = (
         _lsh_join_from_docs(cdocs, bdocs, id_col, config, threshold)
@@ -1516,7 +1415,6 @@ def ingest_tick_verdicts(
     id_col: str,
     config: MinHashConfig | None = None,
     threshold: float = 0.5,
-    impl: str = "arrow",
     max_bucket_size: int | None = 512,
     target_recall: float | None = None,
     corpus_hashes: DataFrame | None = None,
@@ -1544,11 +1442,10 @@ def ingest_tick_verdicts(
     within-tick work is banded LSH on the tick alone.
 
     ``max_bucket_size`` caps within-tick band buckets and DEFAULTS TO THE
-    BATCH OPERATOR'S 512 (ADVICE r12 #1: the tick previously ran uncapped
-    while ``incremental_dedup_verdicts`` — whose union-equality the
-    replay-equivalence tests assert — capped at 512, so a >512-doc band
-    bucket would make the tick union find pairs the batch operator
-    drops). Exact tick-union == batch replay equivalence additionally
+    BATCH OPERATOR'S 512 (an uncapped tick against the capped
+    ``incremental_dedup_verdicts`` — whose union-equality the
+    replay-equivalence tests assert — would let a >512-doc band bucket
+    make the tick union find pairs the batch operator drops). Exact tick-union == batch replay equivalence additionally
     requires NO band bucket to overflow the cap at either granularity
     (a bucket may exceed the cap in the full batch while each tick's
     slice of it stays under) — the no-hot-bucket precondition; pass
@@ -1556,8 +1453,8 @@ def ingest_tick_verdicts(
     ``config``/``target_recall`` resolve as in the batch operator
     (``_resolve_config``).
 
-    ``corpus_hashes`` / ``corpus_sig_docs`` are the STANDING-INDEX hooks
-    (r13): a long-running ingest loop verdicts every tick against the same
+    ``corpus_hashes`` / ``corpus_sig_docs`` are the STANDING-INDEX hooks:
+    a long-running ingest loop verdicts every tick against the same
     immutable corpus, so the sink precomputes the corpus md5 table
     (``corpus.groupBy(md5(text)).agg(min(id))`` aliased ``exact_corpus``)
     and signature table (``_docs_with_signatures``) once, persists them,
@@ -1565,7 +1462,7 @@ def ingest_tick_verdicts(
     of two. Omitted, both derive from ``corpus`` as before. The batch and
     prior signature tables are likewise computed once per call and shared
     across the probe and within-tick stages (the
-    ``incremental_dedup_verdicts`` r13 plan note)."""
+    ``incremental_dedup_verdicts`` plan note)."""
     config = _resolve_config(config, threshold, target_recall)
     bh = batch.select(F.col(id_col), F.md5(F.col(text_col)).alias("__h"))
     ch = (
@@ -1595,17 +1492,17 @@ def ingest_tick_verdicts(
         )
     )
     bdocs = managed_persist(
-        _docs_with_signatures(batch, text_col, id_col, config, impl)
+        _docs_with_signatures(batch, text_col, id_col, config)
     )
     cdocs = (
         corpus_sig_docs
         if corpus_sig_docs is not None
         else managed_persist(
-            _docs_with_signatures(corpus, text_col, id_col, config, impl)
+            _docs_with_signatures(corpus, text_col, id_col, config)
         )
     )
     pdocs = managed_persist(
-        _docs_with_signatures(prior_batch, text_col, id_col, config, impl)
+        _docs_with_signatures(prior_batch, text_col, id_col, config)
     )
     near_c = (
         _lsh_join_from_docs(cdocs, bdocs, id_col, config, threshold)

@@ -255,8 +255,8 @@ def dhash_near_pairs(
     max_hamming: int = 7,
     bands: int = 8,
 ):
-    """Near-duplicate image pairs beyond exact hash equality (VERDICT r7
-    #6): resized or re-encoded copies differ from their original by a few
+    """Near-duplicate image pairs beyond exact hash equality: resized
+    or re-encoded copies differ from their original by a few
     dHash bits, so grouping on hash equality misses them. Candidate pairs
     come from Hamming banding — the 64-bit hash splits into ``bands``
     equal bit-slices and images join on any equal slice — then every
@@ -323,8 +323,8 @@ def dhash_near_pairs(
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", hamming.alias("hamming"))
         # verify BEFORE the cross-band dedup so the distinct's shuffle
-        # carries only the near set, not every banded candidate (ADVICE r8
-        # #4); results identical — hamming is a function of the pair.
+        # carries only the near set, not every banded candidate; results
+        # identical — hamming is a function of the pair.
         .where(F.col("hamming") <= max_hamming)
         .distinct()
     )

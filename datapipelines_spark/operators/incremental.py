@@ -98,7 +98,7 @@ def distinct_view(state: DataFrame, keys: list[str]) -> DataFrame:
     applied HERE, not assumed: merge_states output never carries zeros,
     but a raw ``distinct_state`` delta can (an insert and a retraction of
     the same (keys, value) pair in one batch), and counting that value as
-    present would be wrong (ADVICE r9). One partial-aggregated shuffle
+    present would be wrong. One partial-aggregated shuffle
     over state rows."""
     return (
         state.where(F.col(CNT_COL) != 0)
@@ -162,15 +162,14 @@ def _recover_state(state_dir: str) -> None:
       staging, and adopting it on the FIRST epoch (no prior state dir to
       fall back to) would double-count the re-delivered epoch — the
       marker is what makes re-delivery idempotent, so a markerless
-      staging is torn by definition (ADVICE r8 #3);
+      staging is torn by definition;
     - state dir absent + only an old dir → restore it (epoch E will be
       re-delivered and re-merged);
     - state dir present → every leftover staging/old is stale (its epoch
       either committed, carrying its marker, or will be re-delivered);
 
     then delete whatever leftovers remain. A crash therefore never leaves
-    the view absent or torn — the failure VERDICT r7 #1 demonstrated for
-    the previous delete-then-rename protocol."""
+    the view absent or torn, which a delete-then-rename order would."""
     import glob
     import os
     import shutil
@@ -210,8 +209,8 @@ def incremental_state_sink(
     and per-batch cost is O(|state| + |batch|), independent of stream
     history.
 
-    Crash-safe swap protocol (VERDICT r7 #1 — the previous
-    delete-then-rename order could silently reset the view): the merged
+    Crash-safe swap protocol (a delete-then-rename order could silently
+    reset the view): the merged
     state is written to ``.staging-E`` together with an ``_applied-E``
     epoch marker (materializing the read of the old state BEFORE it is
     replaced), the old state is renamed ASIDE to ``.old-E``, the staging
@@ -223,8 +222,8 @@ def incremental_state_sink(
     committed atomically with the state it describes — makes the
     re-delivered epoch idempotent (epochs ≤ the marker are skipped).
 
-    Observability (VERDICT r8 stretch — the E5 ``df.observe`` machinery
-    applied to the sink's own state store): every applied epoch appends
+    Observability (the ``df.observe`` machinery applied to the sink's own
+    state store): every applied epoch appends
     one JSON line to ``<state_dir>.metrics.jsonl`` with ``epoch``,
     ``delta_groups`` (groups in this batch's partial aggregate),
     ``state_groups`` (groups in the merged view — the state-size series

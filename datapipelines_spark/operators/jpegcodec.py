@@ -951,7 +951,7 @@ def encode_jpeg_progressive(
     ``restart_interval=N`` emits a DRI segment and RSTn markers every N MCUs
     in EVERY scan — including DC refinement scans, where the decoder must
     count units proactively (pad bits before a marker are raw refinement
-    bits otherwise; ADVICE r4)."""
+    bits otherwise)."""
     h, w, gray, coeffs, quants, samp = _prepare_coeffs(img, quality, subsample)
     qy, qc = quants[0], quants[-1]
     dc_tabs = [_canonical_codes(DC_LUMA_BITS, DC_LUMA_VALS),

@@ -90,7 +90,7 @@ def bigram_lm_score(
     # the scoring joins (twice: big and hist). Persist both around the
     # probe-and-score lifetime — the caches are model-table-sized (bounded
     # by the reference slice, not the corpus) and live for the session,
-    # the same accepted pattern as connected_components. ADVICE r6 #4.
+    # the same accepted pattern as connected_components.
     big = big.persist()
     hist = hist.persist()
     probe = BROADCAST_MAX_MODEL_ROWS

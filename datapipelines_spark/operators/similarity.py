@@ -381,15 +381,14 @@ def knn_graph(
     top-m cut): BLAS-vs-fold disagreement is bounded by ~1e-13 relative,
     so with eps orders of magnitude above it the shortlist PROVABLY
     contains the exact top-k even when arbitrarily many candidates tie at
-    the boundary — the latent adversarial-input miss ADVICE r9 flagged in
-    the hard top-m cut. Output is therefore identical to ``impl='expr'``
+    the boundary — the adversarial-input miss a hard top-m cut would
+    have. Output is therefore identical to ``impl='expr'``
     (the pure Catalyst pair join, exact by construction; equality-tested)
     on ANY input, and independent of the local BLAS build: a different
     GEMM rounding can only change shortlist SIZE, never the re-ranked
     result.
 
-    Per-task memory is bounded regardless of cell skew (VERDICT r9 next
-    #4): cells larger than ``cell_block`` rows are hash-split into
+    Per-task memory is bounded regardless of cell skew: cells larger than ``cell_block`` rows are hash-split into
     sub-blocks and the shortlist stage runs per (source-block,
     candidate-block) PAIR — the ``embedding_cosine_pairs_blocked``
     discipline — so one task holds at most two blocks, not a whole cell;
@@ -438,7 +437,7 @@ def knn_graph(
         # the job entirely. Memo keyed on (appId, plan fingerprint): an
         # in-place-growing source under an identical plan would reuse a
         # stale block-sizing decision (mis-sized blocks, never wrong
-        # results); sources are immutable snapshots here (r14, ADVICE).
+        # results); sources are immutable snapshots here.
         if _bounded_count(e.select(F.lit(1)), int(cell_block) + 1) <= int(cell_block):
             n_blocks = {}
         else:

@@ -45,7 +45,7 @@ def heavy_hitters(
         # Derive the empty frame from the INPUT so `item` keeps the input
         # column's type — a hardcoded "item string" would diverge from the
         # non-empty branch for non-string columns and break schema-sensitive
-        # consumers (unions, writes). ADVICE r6 #2.
+        # consumers (unions, writes).
         return df.select(F.col(col).alias("item")).limit(0).select(
             "item",
             F.lit(0).cast("bigint").alias("n"),
@@ -125,7 +125,7 @@ def theta_sampled_distinct(
     # A group whose value_col is all NULL has exact_distinct = 0
     # (countDistinct ignores NULLs); guard the division so the error is a
     # defined 0 (estimate is also 0) instead of Spark-NULL-vs-DuckDB-error
-    # divergence (ADVICE r10 #3).
+    # divergence.
     rel_err = F.when(F.col("exact_distinct") == 0, F.lit(0)).otherwise(
         F.floor(
             F.abs(est - F.col("exact_distinct"))

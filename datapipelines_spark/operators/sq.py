@@ -109,7 +109,7 @@ def sq8_fit(df: DataFrame, vec_col: str, normalize: bool = True) -> tuple[list[f
         raise ValueError("sq8_fit: ragged vector lengths")
     # Vectors SHORTER than the longest still produce contiguous 0..D-1
     # positions (the check above passes) but would later break the code
-    # matrix stacking with an opaque numpy error (ADVICE r10 #4): a short
+    # matrix stacking with an opaque numpy error: a short
     # vector under-contributes to the tail dimensions, so per-dimension
     # row counts diverge exactly when lengths are ragged.
     if len({r["cnt"] for r in rows}) != 1:
@@ -190,8 +190,8 @@ def sq8_adc_rerank_topk(
         raise ValueError("shortlist must be >= top_k")
     # memoized bounded count (similarity._bounded_count): the guard probe
     # is one early-stopping job per distinct corpus plan per session, not
-    # one per call — bench repeats and composed pipelines skip it (r13).
-    # ASSUMPTION (r14, ADVICE): the memo key is (appId, plan fingerprint),
+    # one per call — bench repeats and composed pipelines skip it.
+    # ASSUMPTION: the memo key is (appId, plan fingerprint),
     # so a source that GROWS in-place within one session under an identical
     # plan (parquet dir appended between calls) would reuse a stale count
     # and could slip past this cap. Sources here are immutable snapshots

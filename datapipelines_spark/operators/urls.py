@@ -37,10 +37,10 @@ from datapipelines_spark.functions.hashing import portable_hash_seeded
 #: Vendored slice of the Public Suffix List (publicsuffix.org, MPL-2.0;
 #: ICANN section, two-label entries only): compound suffixes under which
 #: the registrable domain keeps THREE labels (shop.retail.co.uk ->
-#: retail.co.uk; docs.site.com.au -> site.com.au). Replaces the r10
-#: second-level-LABEL heuristic ("co" under ANY TLD), which over-matched
-#: invented pairs and under-matched real ones like ``gob.mx`` / ``or.jp``
-#: (VERDICT r10 "What's missing" #3). Three-label public suffixes (e.g.
+#: retail.co.uk; docs.site.com.au -> site.com.au). A listed slice, not a
+#: second-level-LABEL heuristic ("co" under ANY TLD), which would
+#: over-match invented pairs and under-match real ones like ``gob.mx`` /
+#: ``or.jp``. Three-label public suffixes (e.g.
 #: Japanese prefectures) are outside the slice — pass a full snapshot via
 #: the ``suffixes`` parameter where a deployment needs them.
 PUBLIC_SUFFIXES_2LD: tuple[str, ...] = (
@@ -204,7 +204,7 @@ def idn_ascii(host: str | None) -> str | None:
     ASCII hosts pass through untouched; internationalized hosts encode to
     their ``xn--`` ASCII form (``bücher.de`` -> ``xn--bcher-kva.de``), so
     the unicode and punycode spellings of the same registrable domain
-    compare, quota, and dedup as ONE domain (VERDICT r12 next #5). Hosts
+    compare, quota, and dedup as ONE domain. Hosts
     the codec rejects (empty labels, oversized labels) pass through
     unchanged — the documented fallback: a malformed host should gate on
     its literal spelling rather than error the pipeline. This single
@@ -347,7 +347,7 @@ def registrable_domain(
     when the trailing two labels form a listed compound public suffix
     (``a.b.co.uk`` -> ``b.co.uk``) — the vendored 2-label ICANN slice.
 
-    Full-snapshot mode (VERDICT r11 next #4): pass ``suffix_file`` (a
+    Full-snapshot mode: pass ``suffix_file`` (a
     ``public_suffix_list.dat`` path) or pre-parsed ``rules``, and the
     complete publicsuffix.org algorithm runs — multi-label exact rules,
     ``*.``-wildcard rules, and ``!``-exception rules included — still as
@@ -398,8 +398,8 @@ class PublicSuffixRules:
 #: PSL format yields once markers are stripped. Anything else (quotes,
 #: whitespace smuggled past the split, control chars) is rejected at parse
 #: time so rule strings can safely embed into generated Spark/DuckDB
-#: expressions (ADVICE r12 #3: the suffix file is external input; a quote
-#: inside a rule would otherwise break or inject the oracle SQL).
+#: expressions (the suffix file is external input; a quote inside a rule
+#: would otherwise break or inject the oracle SQL).
 _RULE_RE = re.compile(r"^[a-z0-9-]+(\.[a-z0-9-]+)*$")
 
 

@@ -258,7 +258,7 @@ def corpus_clean_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The v1 composition with the Lee-et-al exact-substring cut
     (operators/dedup.py:remove_duplicate_substrings) between the exact and
     near-dup stages — the composition a training-data pipeline actually
-    runs (VERDICT r9 next #5): quality gate and exact-dup canonicalization
+    runs: quality gate and exact-dup canonicalization
     on the ingested text, then every duplicated >= 8-token substring
     (corpus count >= 2) is cut, and NEAR-dup clustering runs over the
     CLEANED text — so corpus-wide boilerplate can no longer manufacture

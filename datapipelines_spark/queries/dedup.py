@@ -375,7 +375,9 @@ def dedup_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def minhash_bands_oracle() -> str:
     """DuckDB SQL for the DISTINCT (band_id, band_key) set of the corpus —
-    the LSH bucket keys, shared with the streaming replay query
+    the LSH bucket keys of every signature the Arrow shingle+minhash stage
+    (operators/dedup.py:_doc_sig_udf) emits, recomputed bit for bit; the
+    oracle of the streaming replay query
     (queries/streamrep.py:stream_minhash_bands_replay)."""
     h = "CAST('0x' || substr(md5(s), 1, 8) AS BIGINT)"
     mins = ",\n            ".join(

@@ -3,7 +3,7 @@ URL parse -> registrable domain -> blocklist gate -> per-domain quota ->
 incremental dedup verdicts against the standing corpus.
 
 This is the day-2 story ``examples/corpus_prep.py`` tells, promoted to an
-oracle-checked query (VERDICT r10 "Next" #7): each stage is an operator
+oracle-checked query: each stage is an operator
 already benchmarked alone (queries/urls.py, queries/dedup.py); the
 composition adds only doc_id-keyed joins. The planted-URL fixture stays
 pinned to the V1 host mix (queries/urls.py:_HOSTS_V1) so the ingest
@@ -74,7 +74,7 @@ def _ingest_base_dir(sf_dir: str) -> str:
     the staged fixture's shape bumps _SRC_FIXTURE_V, and regenerating
     the sf_dir's documents table IN PLACE (new mtime/size) changes the
     fingerprint — so cached src files can never mix with a corpus read
-    from newer data (ADVICE r12 #2 + r13 review)."""
+    from newer data."""
     import hashlib
     import os
 
@@ -241,7 +241,7 @@ _GATE_TILED_CTES = f"""{_URL_SQL},
 )
 def stream_ingest_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING corpus ingest (streaming/ingest.py:ingest_dedup_sink,
-    VERDICT r11 next #5, append-only since r13): the crawl slice is
+    append-only state): the crawl slice is
     staged as FOUR parquet files in ascending doc_id order (ntile over
     the slice) and replayed one file per micro-batch; every tick is
     URL-gated, quota'd against standing per-domain admission counts,
@@ -293,10 +293,10 @@ def stream_ingest_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             # four per-tile writes follow: materialize the staged join +
             # global ntile window once instead of re-running it per write
-            # (r13; values are deterministic, staging output unchanged).
+            # (values are deterministic, staging output unchanged).
             # localCheckpoint blocks are non-replicated and sever lineage:
             # an executor loss mid-staging fails this job instead of
-            # recomputing (r14, ADVICE) — acceptable because staging is a
+            # recomputing — acceptable because staging is a
             # one-shot fixture build into a scratch dir; the crash-safe
             # rename below means a failed attempt just re-stages
             .localCheckpoint()
@@ -352,8 +352,8 @@ def stream_ingest_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     # the standing-corpus caches are the sink's, not the session's: drop
-    # them now that the stream is done (r14, ADVICE — repeated replays in
-    # one session would otherwise stack two cached tables per run)
+    # them now that the stream is done (repeated replays in one session
+    # would otherwise stack two cached tables per run)
     sink.release_standing()
     _REPLAYED.add(memo)  # only after a fully successful stream run
     return _read_replay_verdicts(spark, state)

@@ -902,8 +902,7 @@ def _hilbert_sql_qaqb(bits: int) -> str:
     """,
 )
 def layout_advisor_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Layout ADVISOR (operators/zorder.py:layout_advisor, VERDICT r9
-    stretch #7): one pass over orders reports the footer rectangles a
+    """Layout ADVISOR (operators/zorder.py:layout_advisor): one pass over orders reports the footer rectangles a
     single-sort, Morton, and Hilbert OPTIMIZE write would each produce
     over (o_custkey, price cents) — 48 equal-code segments (not a power
     of 4, so the curves do not degenerate to identical quadrant tiles),
@@ -974,7 +973,7 @@ def layout_advisor_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def layout_optimize_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The one-call OPTIMIZE verb end to end (operators/zorder.py:
-    optimize_table, VERDICT r11 stretch #7): the advisor measures all
+    optimize_table): the advisor measures all
     three layouts over orders' (o_custkey, price cents), the winner (min
     Σ bbox area, ties by name) is REWRITTEN via the equal-code layout
     with the partitioned-write contract, and the written table is read

@@ -1,7 +1,7 @@
 """ANN recall harness: measured recall@5 for every quantization family at
 equal candidate budgets, against exact brute-force top-5 — the FAISS-style
-accuracy/efficiency tradeoff table users consult before picking an index
-(VERDICT r10 stretch #8).
+accuracy/efficiency tradeoff table users consult before picking an
+index.
 
 One fixture (the ``embeddings`` table), one ground truth
 (``sim_topk_bruteforce``: exact cosine top-5 per every-100th vector,
@@ -45,8 +45,8 @@ from datapipelines_spark.catalog import _REGISTRY, query
 from datapipelines_spark.queries import similarity as _qsim  # noqa: F401
 from datapipelines_spark.queries import vectors as _qvec  # noqa: F401
 
-#: IVF probe counts swept by the harness (VERDICT r11 next #3, extended
-#: to the 0.9 operating point per VERDICT r12 next #3): the IVF operating
+#: IVF probe counts swept by the harness, up to the 0.9 recall operating
+#: point: the IVF operating
 #: question at 100 TB is "how many probes for recall X" — the arms
 #: measure the probes/recall curve at equal per-probe budgets, and
 #: tests/test_recall_harness.py asserts recall is monotone in probes.
@@ -135,7 +135,7 @@ def _recall_oracle() -> str:
 #: just-above-threshold pairs sit where the default 4x4 banding curve
 #: 1-(1-j^4)^4 genuinely misses — without them every fixture duplicate
 #: is near-identical (j ~ 1) and band recall reads a trivial 100%. The
-#: per-doc suffix (ADVICE r11 #4) keeps the grading identical (tail
+#: per-doc suffix keeps the grading identical (tail
 #: shingles never match the original regardless of spelling) while
 #: splitting the tail's shingle SET 64 ways, so the exact ground truth's
 #: shared-shingle equi-join stays linear in variant count instead of
@@ -192,7 +192,7 @@ def _retarget(sql: str) -> str:
     """Retarget an embedded oracle's corpus scan from ``documents`` to the
     augmented corpus. Exactly one scan site must exist — a second
     ``FROM documents`` (or a respelling) would retarget silently and
-    partially (ADVICE r11 #2), so drift fails loudly here instead."""
+    partially, so drift fails loudly here instead."""
     n = sql.count("FROM documents")
     if n != 1:
         raise AssertionError(
@@ -303,9 +303,9 @@ def dedup_recall_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both LSH arms run with ``max_bucket_size=None`` — the operator's
     exact-parity mode — because the embedded oracles carry no bucket cap:
     with the default cap a fixture large enough to overflow one band
-    bucket would silently drop that bucket's pairs on the Spark side only
-    (ADVICE r11 #1). Counts are deterministic integers; recall/precision
-    in basis points. At 100 TB the harness shape is unchanged — all
+    bucket would silently drop that bucket's pairs on the Spark side
+    only. Counts are deterministic integers; recall/precision in basis
+    points. At 100 TB the harness shape is unchanged — all
     stages are the operators already benchmarked alone plus two hash
     joins on (doc_a, doc_b) and a 5-row aggregate."""
     from datapipelines_spark.functions.caching import managed_persist

@@ -1401,7 +1401,7 @@ def _synthetic_image_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Declared domain: rows with NULL lang/source carry no image key
         # (concat_ws skips NULLs while the oracle's || yields NULL), and a
         # NULL-derived ppm would crash the fail-mode decoder — filter both
-        # sides identically (ADVICE r8, matching multimodal_audio_fp_pairs).
+        # sides identically (matching multimodal_audio_fp_pairs).
         d.where(F.col("lang").isNotNull() & F.col("source").isNotNull())
         .select("lang", "source")
         .distinct()
@@ -1470,8 +1470,8 @@ def _synthetic_image_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_dhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-dup BEYOND exact hash equality (VERDICT r7 #6,
-    operators/imageops.py:dhash_near_pairs): one synthetic image per
+    """Image near-dup BEYOND exact hash equality
+    (operators/imageops.py:dhash_near_pairs): one synthetic image per
     distinct (lang, source), plus — for half of them — a planted 2x
     nearest-upscaled copy with one repainted pixel (a resized, lightly
     re-encoded near-duplicate: byte-distinct payload, small dHash Hamming

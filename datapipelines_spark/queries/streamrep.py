@@ -361,13 +361,14 @@ def _minhash_bands_oracle() -> str:
 
 @query("stream_minhash_bands_replay", oracle=_minhash_bands_oracle())
 def stream_minhash_bands_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming NEAR-dup bucket construction: MinHash(16) signatures and
-    LSH(4x4) band keys computed with pure JVM expressions on a bounded
-    document replay, deduplicated on (band_id, band_key) in append mode —
-    the incremental half of the batch dedup_minhash_lsh pipeline (a new
-    document whose band key hits existing state is a near-dup candidate;
-    here the emitted DISTINCT bucket-key SET is the oracle-checkable part,
-    independent of arrival order). State is one fixed-width 32-byte key per
+    """Streaming NEAR-dup bucket construction: MinHash(16) signatures (the
+    batch operators' Arrow shingle+minhash stage) and LSH(4x4) band keys
+    computed on a bounded document replay, deduplicated on (band_id,
+    band_key) in append mode — the incremental half of the batch
+    dedup_minhash_lsh pipeline (a new document whose band key hits
+    existing state is a near-dup candidate; here the emitted DISTINCT
+    bucket-key SET is the oracle-checkable part, independent of arrival
+    order). State is one fixed-width 32-byte key per
     bucket ever seen — the same footprint as the batch shuffle keys; a
     production deployment bounds it with a watermark on ingest time."""
     import os
@@ -389,7 +390,7 @@ def stream_minhash_bands_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = stage_file_as_dir(os.path.join(sf_dir, "documents.parquet"))
     raw = spark.readStream.schema(schema).parquet(path)
-    sig = minhash_signatures(raw, "text", "doc_id", _MINHASH, impl="expr")
+    sig = minhash_signatures(raw, "text", "doc_id", _MINHASH)
     bands = (
         lsh_band_keys(sig, "doc_id", _MINHASH)
         .select(F.col("band_id").cast("int").alias("band_id"), "band_key")
@@ -489,8 +490,8 @@ def stream_incremental_view_replay(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def stream_incremental_distinct_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING exact COUNT(DISTINCT) maintenance under retractions
-    (VERDICT r9 next #6): the orders fixture becomes a changelog stream —
+    """STREAMING exact COUNT(DISTINCT) maintenance under retractions:
+    the orders fixture becomes a changelog stream —
     one insert row per order plus a RETRACTION row for every
     ``o_orderkey % 13 == 0`` order (an upstream correction) — staged as 8
     files and replayed one per micro-batch through

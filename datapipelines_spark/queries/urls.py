@@ -35,7 +35,7 @@ _HOSTS_V1: tuple[str, ...] = (
     "blog.spam.net",
 )
 
-#: The IDN-extended mix (VERDICT r12 next #5): the SAME registrable
+#: The IDN-extended mix: the SAME registrable
 #: domain spelled in unicode and in punycode — after normalization both
 #: must collapse to xn--bcher-kva.example, so per-domain quota and dedup
 #: treat them as one domain.
@@ -314,8 +314,7 @@ def _psl_oracle() -> str:
 @query("url_psl_snapshot_domains", oracle=_psl_oracle())
 def url_psl_snapshot_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registrable domains under a FULL Public Suffix List snapshot
-    (operators/urls.py:registrable_domain(rules=...), VERDICT r11 next
-    #4): planted hosts cover every branch of the publicsuffix.org
+    (operators/urls.py:registrable_domain(rules=...)): planted hosts cover every branch of the publicsuffix.org
     algorithm — multi-label exact rules (act.edu.au), ``*.``-wildcard
     rules where any single label under the parent is itself a public
     suffix (a.b.test.ck -> b.test.ck), ``!``-exception rules that carve

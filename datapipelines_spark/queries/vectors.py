@@ -175,7 +175,7 @@ def text_regex_token_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ivf_topk_oracle(probes: int = 2) -> str:
     """DuckDB replay of the fixed-cell IVF search, parameterized over the
-    probe count (VERDICT r11 next #3 — the probes/recall tradeoff arm of
+    probe count (the probes/recall tradeoff arm of
     queries/recall.py:sim_recall_harness). probes=2 emits the catalog
     ``sim_ivf_topk_probe2`` oracle verbatim."""
     return f"""
@@ -395,10 +395,9 @@ def choose_probes(
 ) -> int:
     """The smallest probe count whose MEASURED recall@k meets
     ``target_recall`` — the IVF twin of operators/dedup.py:choose_banding
-    (VERDICT r12 next #3: the r12 sweep topped out at 80% recall@5 with
-    no measured point at the 0.9 operating point users actually ask for;
-    probes=8 now anchors the curve at 100%, and this turns the curve into
-    the operating answer). ``measured`` is a {probes: recall_bp} table,
+    (a sweep that tops out below the asked-for recall has no operating
+    point; probes=8 anchors the curve at 100%, and this turns the curve
+    into the operating answer). ``measured`` is a {probes: recall_bp} table,
     defaulting to the harness-measured fixture curve; pass your own from
     a sim_recall_harness run on a production query sample. Raises when no
     measured point reaches the target (then the index geometry — cell
@@ -1198,7 +1197,7 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph-based semantic clustering — the composition the mutual kNN
-    graph exists to feed (VERDICT r8 #5): mutual top-5 edges at cosine >=
+    graph exists to feed: mutual top-5 edges at cosine >=
     0.5 close into connected components (min-label propagation,
     operators/components.py), min-id canonical per cluster, singletons
     self-canonical — a graph-based SemDeDup variant whose keep/drop

@@ -179,7 +179,7 @@ def compact(spark: SparkSession, path: str, key_cols: list[str]) -> int:
         .write.mode("overwrite")
         .parquet(os.path.join(staging, f"v={new_version}"))
     )
-    # Swap ORDER is the crash-safety contract (VERDICT r6 #4): the
+    # Swap ORDER is the crash-safety contract: the
     # compacted base becomes visible FIRST via atomic rename — it carries
     # the highest version, so latest-wins reads are already correct the
     # instant it lands — and old versions are deleted only AFTERWARDS. A
@@ -266,7 +266,7 @@ def streaming_upsert_sink(path: str, *, delete_col: str | None = None):
     with exactly-once SNAPSHOT semantics under micro-batch retries and
     stream restarts.
 
-    Commit protocol (ADVICE r6 #3 — epoch ids alone cannot name versions,
+    Commit protocol (epoch ids alone cannot name versions,
     because a restart with a FRESH checkpoint directory restarts epochs at
     0 and would silently collide with committed history):
 

@@ -98,7 +98,10 @@ def write_tar_shards(
     task streams ONE ``shard-%06d.tar`` with members named
     ``<key>.<ext>`` — executor-side tarfile writes, nothing collected; rows
     are sorted by key within each shard so output is deterministic given a
-    deterministic partitioning. Returns [(shard filename, n_samples)].
+    deterministic partitioning. Returns [(shard filename, n_samples)] of
+    the shards this call wrote. ``mode="append"`` numbers its shards on
+    from the highest existing ``shard-%06d.tar`` index, so earlier shards
+    are never reopened.
 
     Reference parity: the reference only reads this layout
     (/root/reference/sdata/custom_datapipes.py tar loader); writing it is
@@ -106,6 +109,7 @@ def write_tar_shards(
     write_dataset above).
     """
     import os
+    import re
     import shutil
 
     import pandas as pd
@@ -122,6 +126,13 @@ def write_tar_shards(
         if mode == "overwrite":
             shutil.rmtree(path)
     os.makedirs(path, exist_ok=True)
+    # tarfile mode "w" truncates, so an append must not reuse a shard name
+    taken = [
+        int(m.group(1))
+        for f in os.listdir(path)
+        if (m := re.fullmatch(r"shard-(\d+)\.tar", f))
+    ]
+    first_shard = max(taken, default=-1) + 1
 
     n_rows = df.count()
     if n_rows == 0:
@@ -149,7 +160,7 @@ def write_tar_shards(
                 continue
             if tf is None:
                 pid = int(pdf["__pid"].iloc[0])
-                shard_name = f"shard-{pid:06d}.tar"
+                shard_name = f"shard-{first_shard + pid:06d}.tar"
                 tf = tarfile.open(os.path.join(path, shard_name), mode="w")
             for key, data in zip(pdf["__key__"], pdf["data"]):
                 for ext, payload in sorted(data.items()):

@@ -3,8 +3,8 @@
 verdicts) run as a foreachBatch loop with durable, crash-safe,
 APPEND-ONLY state.
 
-This is the production shape of day-2 ingest (VERDICT r11 next #5; made
-append-only per VERDICT r12 next #2): the batch query proves one tick;
+This is the production shape of day-2 ingest, kept append-only so a
+crash never rewrites committed state: the batch query proves one tick;
 this module proves the LOOP — each micro-batch is URL-gated (map-only),
 quota'd against STANDING per-domain admission counts, verdicted against
 the standing corpus AND everything previously admitted, and committed as
@@ -339,8 +339,8 @@ def ingest_dedup_sink(
     compaction grace-window caveat, triggered by the sink instead of the
     caller); readers that cannot tolerate a re-read should compact at
     quiet points instead. Banding comes
-    from ``config`` or — the measured-recall discipline (VERDICT r12
-    stretch #7) — from ``target_recall``, which solves it for this
+    from ``config`` or — the measured-recall discipline — from
+    ``target_recall``, which solves it for this
     sink's ``threshold`` via choose_banding; resolved ONCE at build time
     so every tick dedups under the same signature scheme."""
     root = state_dir.rstrip("/")
@@ -479,7 +479,7 @@ def ingest_dedup_sink(
         """Drop the standing-corpus caches. Call after the streaming query
         stops — a session that builds many sinks (test suites, repeated
         replays) would otherwise accumulate two cached tables per sink for
-        the session lifetime (r14, ADVICE)."""
+        the session lifetime."""
         while _standing:
             _, cached = _standing.popitem()
             try:

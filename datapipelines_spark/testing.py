@@ -153,8 +153,11 @@ def compare_query(
         return True, f"rows-only check: {len(s_rows)} rows"
     con = duckdb_connection(sf_dir)
     try:
-        d_cols, d_rows = duckdb_result(con, spec.oracle)
-        d_pdf = con.execute(spec.oracle).df()
+        # run the oracle once; the rows and the pandas dtype check both
+        # read its materialized result
+        con.execute(f"CREATE TEMP TABLE __oracle AS {spec.oracle}")
+        d_cols, d_rows = duckdb_result(con, "SELECT * FROM __oracle")
+        d_pdf = con.execute("SELECT * FROM __oracle").df()
     finally:
         con.close()
     if sorted(s_cols) != sorted(d_cols):

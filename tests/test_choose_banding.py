@@ -1,5 +1,5 @@
 """Analytic contract of the closed-form LSH banding tuner
-(operators/dedup.py:choose_banding, VERDICT r11 next #2): the chosen
+(operators/dedup.py:choose_banding): the chosen
 (rows, bands) must meet the detection-probability target at the threshold,
 fit the hash budget, and be maximal in rows (most selective banding that
 still meets the target) with bands minimal for those rows. The measured

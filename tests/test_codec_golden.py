@@ -1,7 +1,7 @@
 """Independent golden payloads for the in-repo media codecs.
 
-VERDICT r4 ("What's wrong" #1) flagged that the codec tests are
-self-referential: encoder and decoder share authorship, so a shared
+Codec round-trip tests alone are self-referential: encoder and decoder
+share authorship, so a shared
 misreading of a spec would pass. Every payload here is therefore
 hand-assembled IN THE TEST, byte by byte, straight from the public specs
 (ITU-T T.81, RFC 2083 + stdlib zlib, RIFF/WAVE, ITU-T G.711, ISO 14496-12)

@@ -155,7 +155,7 @@ def test_duplicate_clusters_survivor_policy(spark):
 
 
 def test_triangle_counts_materializes_oriented_edges_once(spark):
-    """VERDICT r6 #1: the oriented edge list feeds three consumers (both
+    """The oriented edge list feeds three consumers (both
     wedge sides and the closing-edge set); it must be checkpointed so the
     degree-join subtree runs once. The returned plan therefore scans the
     checkpointed RDD and contains NO degree aggregation or degree joins."""

@@ -1,6 +1,6 @@
 """Blocked-GEMM embedding dedup must equal the all-pairs oracle operator
 exactly, and its physical plan must be shuffle+GEMM, not a nested-loop
-product (VERDICT r2 #4: scale-safe default path)."""
+product (the scale-safe default path)."""
 
 import pyspark.sql.functions as F
 

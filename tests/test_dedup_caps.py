@@ -1,6 +1,6 @@
 """Hot-key safety valves for the near-dup operators: one boilerplate shingle
 (or degenerate LSH band) shared by k docs must NOT produce k²/2 candidates
-when the caps are on (VERDICT r1 item 3 — the classic dedup scale-killer)."""
+when the caps are on (the classic dedup scale-killer)."""
 
 import pyspark.sql.functions as F
 

@@ -1,4 +1,4 @@
-"""IVF pre-blocking for embedding near-dup (VERDICT r4 stretch #7):
+"""IVF pre-blocking for embedding near-dup:
 ``embedding_cosine_pairs_blocked(prefilter='ivf')`` must be a strict subset
 of the exact path (precision 1.0, identical cosines) with measured recall."""
 

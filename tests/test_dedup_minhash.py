@@ -20,8 +20,9 @@ def test_minhash_lsh_join_cross_sides_only(spark):
 # --- LSH banding differential fuzz -------------------------------------------
 # minhash_lsh_pairs = signatures -> band buckets -> in-bucket pair
 # combinations -> exact-Jaccard verification. The signature/shingle
-# primitives have their own parity tests (test_dedup_arrow_parity), so the
-# fuzz takes the Spark-computed (shingles, h0..hk) per doc as ground truth
+# primitives are checked bit for bit against DuckDB by the oracle sweep
+# (dedup_ngram_jaccard, dedup_minhash_lsh, stream_minhash_bands_replay),
+# so the fuzz takes the Spark-computed (shingles, h0..hk) per doc as ground truth
 # and brute-forces the REST in Python: candidates = pairs agreeing on at
 # least one full band slice; survivors = candidates whose shingle-set
 # Jaccard clears the threshold. Any banding off-by-one (wrong slice bounds,
@@ -188,18 +189,17 @@ def test_band_struct_expression_memoized_per_config(spark):
     assert all(len(v) == 1 for v in by_band.values())
 
 
-@pytest.mark.parametrize("impl", ["arow", "Arrow", "gemm"])
 @pytest.mark.parametrize("op", ["doc_shingles", "minhash_signatures", "simhash"])
-def test_impl_typo_raises_before_any_job(spark, op, impl):
+def test_arrow_stage_is_vectorized_not_row_at_a_time(spark, sf_dir, op):
     from datapipelines_spark.operators import dedup
+    from datapipelines_spark.sources.parquet import load_table
 
-    df = spark.createDataFrame([(0, "a b c d e")], "doc_id long, text string")
-    sc = spark.sparkContext
-    group = f"dedup-impl-validation-{op}-{impl}"
-    sc.setJobGroup(group, "argument validation")
-    try:
-        with pytest.raises(ValueError, match="impl must be 'arrow' or 'expr'"):
-            getattr(dedup, op)(df, "text", "doc_id", impl=impl)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    docs = load_table(spark, sf_dir, "documents")
+    plan = (
+        getattr(dedup, op)(docs, "text", "doc_id")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "ArrowEvalPython" in plan
+    assert "BatchEvalPython" not in plan

@@ -167,7 +167,7 @@ def test_random_query_matches_duckdb(ctx, pred, agg_names, groups):
     assert normalize_rows(s_cols, s_rows) == normalize_rows(d_cols, d_rows), sql
 
 
-# --- join fuzzing (VERDICT r5 #7): the semantic surface the catalog pins ------
+# --- join fuzzing: the semantic surface the catalog pins ----------------------
 # only pointwise. Random join TYPE x per-side predicates over
 # orders |X| customer, aggregated to a small deterministic result. Predicates
 # apply BEFORE the join on both engines (subqueries in SQL), mirroring the

@@ -53,7 +53,7 @@ def test_nulls_ignored_as_candidates(spark):
 
 
 def test_empty_branch_schema_matches_nonempty(spark):
-    """ADVICE r6 #2: the empty-candidate branch must carry the INPUT
+    """The empty-candidate branch must carry the INPUT
     column's type for `item`, so both branches union/write cleanly."""
     longs = spark.range(3000).select(F.col("id").alias("user"))  # all unique
     empty = heavy_hitters(longs, "user", support=0.01)
@@ -104,7 +104,7 @@ def test_theta_sample_matches_literal_python_replay(spark):
 def test_theta_all_null_group_yields_zero_error_not_null(spark):
     """countDistinct ignores NULLs, so an all-NULL group has
     exact_distinct = 0 — the relative error must be a defined 0, not a
-    Spark-NULL / DuckDB-divide-by-zero portability break (ADVICE r10 #3)."""
+    Spark-NULL / DuckDB-divide-by-zero portability break."""
     from datapipelines_spark.operators.sketch import theta_sampled_distinct
 
     df = spark.createDataFrame(

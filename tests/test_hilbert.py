@@ -358,7 +358,7 @@ def test_hilbertd_spark_expression_matches_reference_4d(spark):
 
 def test_hilbertd_spark_expression_matches_reference_5d(spark):
     """5-D is where fixed hex widths broke (out digits reach 31 = 2 hex
-    chars, states 1919 = 3 chars — ADVICE r10 #1): the Spark expression
+    chars, states 1919 = 3 chars): the Spark expression
     must match Skilling with the per-table computed widths."""
     from datapipelines_spark.operators.zorder import hilbertd_code
 

@@ -93,8 +93,8 @@ def test_crash_between_swap_renames_recovers_without_state_loss(
     spark, tmp_path, monkeypatch
 ):
     """Kill the sink BETWEEN the two swap renames (old state moved aside,
-    new state not yet visible — the exact window VERDICT r7 #1 showed
-    silently reset the view), then restart: the re-delivered epoch must
+    new state not yet visible — the window in which a delete-then-rename
+    order would silently reset the view), then restart: the re-delivered epoch must
     leave the view equal to the exactly-once aggregate, with no leftover
     dirs and no double-count."""
     import glob
@@ -158,7 +158,7 @@ def test_crash_mid_staging_write_restores_and_remerges(spark, tmp_path):
 def test_epoch0_crash_between_parquet_and_marker_no_double_count(
     spark, tmp_path, monkeypatch
 ):
-    """ADVICE r8 #3: a crash AFTER the staging parquet write (_SUCCESS
+    """A crash AFTER the staging parquet write (_SUCCESS
     present) but BEFORE the _applied marker is created, on the FIRST epoch
     (no prior state dir), must not double-count — recovery must treat the
     complete-looking but markerless staging as torn and discard it, so the
@@ -373,7 +373,7 @@ def test_distinct_view_ignores_zero_multiplicity_rows(spark):
     """distinct_view must be correct on ANY state table, not only
     merge_states output (which drops zeros): a raw delta containing an
     insert AND a retraction of the same (keys, value) in one batch nets to
-    multiplicity 0 and must not count as present (ADVICE r9)."""
+    multiplicity 0 and must not count as present."""
     from datapipelines_spark.operators.incremental import (
         distinct_state,
         distinct_view,

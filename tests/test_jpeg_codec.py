@@ -211,7 +211,7 @@ def test_truncated_jpeg_raises_cleanly(frac, seed):
         pass  # clean rejection is the contract; a short cut may still decode
 
 
-# --- restart intervals (DRI / RSTn; ADVICE r4 fixes) -------------------------
+# --- restart intervals (DRI / RSTn) -------------------------------------------
 
 
 def _rng_img(h, w, seed=7):
@@ -237,7 +237,7 @@ def test_restart_interval_progressive_roundtrip(ri, subsample):
     """Progressive with restarts in EVERY scan — crucially the DC refinement
     scan, where each unit reads one raw bit: without proactive interval
     counting the pad 1-bits before each RSTn are consumed as refinement bits
-    for later blocks (ADVICE r4, medium)."""
+    for later blocks."""
     from datapipelines_spark.operators.jpegcodec import encode_jpeg_progressive
 
     img = _rng_img(40, 56, seed=11)
@@ -262,8 +262,8 @@ def test_restart_interval_grayscale_roundtrip():
 def test_restart_markers_decoded_in_band_without_dri():
     """Strip the DRI segment from a restart stream: the decoder then meets
     RSTn in-band (via the bit reader) instead of via the interval counter,
-    and must RETRY the interrupted MCU after resync rather than skipping it
-    (ADVICE r4, low)."""
+    and must RETRY the interrupted MCU after resync rather than skipping
+    it."""
     img = _rng_img(24, 32, seed=3)
     data = encode_jpeg(img, 90, restart_interval=2)
     i = data.find(b"\xff\xdd")
@@ -275,7 +275,7 @@ def test_restart_markers_decoded_in_band_without_dri():
 def test_fill_bytes_before_restart_markers_accepted():
     """0xFF fill bytes before a marker are legal (T.81 B.1.1.2); the bit
     reader must skip the run and classify the first non-0xFF byte instead of
-    failing on 0xFF 0xFF (ADVICE r4, low)."""
+    failing on 0xFF 0xFF."""
     img = _rng_img(24, 32, seed=5)
     data = encode_jpeg(img, 90, restart_interval=2)
     sos = data.find(b"\xff\xda")
@@ -293,7 +293,7 @@ def test_fill_bytes_before_restart_markers_accepted():
 
 def test_multi_scan_baseline_rejected_loudly():
     """A baseline SOS covering only some frame components must raise — not
-    silently return a Y-only image (ADVICE r4, low)."""
+    silently return a Y-only image."""
     img = _rng_img(16, 16, seed=9)
     data = bytearray(encode_jpeg(img, 90))
     sos = data.find(b"\xff\xda")

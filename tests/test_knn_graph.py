@@ -104,7 +104,7 @@ def test_gemm_and_expr_paths_are_identical(spark):
 def test_skewed_cell_sub_blocking_produces_identical_edges(spark):
     """A cell bigger than ``cell_block`` must split into block-pair tasks
     (bounded per-task memory) and still produce exactly the single-task
-    edges — and the expr path's (VERDICT r9 next #4). n_cells=1 makes the
+    edges — and the expr path's. n_cells=1 makes the
     whole corpus one maximally-skewed cell."""
     rng = np.random.default_rng(915)
     rows = _vecs(rng, 90, dim=12)
@@ -123,7 +123,7 @@ def test_skewed_cell_sub_blocking_produces_identical_edges(spark):
 
 
 def test_shortlist_boundary_ties_cannot_drop_a_true_neighbor(spark):
-    """Adversarial boundary ties (ADVICE r9): far more than
+    """Adversarial boundary ties: far more than
     ``shortlist_margin`` candidates with IDENTICAL cosine to the k-th best
     — the eps-extended shortlist must keep them all in play so the exact
     re-rank still returns the same edges as the exact expr path."""

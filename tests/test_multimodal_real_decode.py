@@ -1,5 +1,5 @@
 """M4 real-codec path: decode ACTUAL image bytes (PPM/PGM/BMP, pure numpy)
-through the Arrow-batched decode stage — not the digest fake (VERDICT r2 #5).
+through the Arrow-batched decode stage — not a digest fake.
 Includes the reference-parity decode→transform chain
 (/root/reference/sdata/mappers/sample_mappers.py:88-123) on real pixels."""
 

@@ -72,7 +72,7 @@ def _consumes(src_text, table):
 
 
 # A builder may reach a table only through a helper (_synthetic_image_set),
-# which a source-text grep misses (ADVICE r8 #2) — but every query's oracle
+# which a source-text grep misses — but every query's oracle
 # is a fully-expanded SQL string that must name the views it reads, so grep
 # builder source AND oracle SQL together.
 _TARGETS = sorted(

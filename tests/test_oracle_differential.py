@@ -34,3 +34,34 @@ def test_list_valued_query_fails_gate_loudly(spark):
     df = spark.range(3).select("id", F.array("id").alias("arr"))
     err = check_scalar_columns(df)
     assert err is not None and "arr" in err
+
+
+def test_compare_query_runs_each_oracle_once(spark, sf_dir, monkeypatch):
+    """The oracle is materialized once and both the row compare and the
+    pandas dtype check read that result: a second execution would double
+    the sweep's DuckDB time for nothing."""
+    from datapipelines_spark import testing
+
+    name = "skew_salted_quantity_by_flag"
+    oracle = all_queries()[name].oracle
+    runs = []
+    connect = testing.duckdb_connection
+
+    class CountingConnection:
+        def __init__(self, con):
+            self._con = con
+
+        def execute(self, sql, *args):
+            if oracle in sql:
+                runs.append(sql)
+            return self._con.execute(sql, *args)
+
+        def __getattr__(self, attr):
+            return getattr(self._con, attr)
+
+    monkeypatch.setattr(
+        testing, "duckdb_connection", lambda d: CountingConnection(connect(d))
+    )
+    ok, detail = testing.compare_query(spark, sf_dir, name)
+    assert ok, detail
+    assert len(runs) == 1

@@ -102,7 +102,7 @@ def test_pq_guards(spark):
 
 
 def test_adc_shortlist_recall_contract(spark, sf_dir):
-    """Quality contract (VERDICT r6 stretch #8), IVF-prefilter precedent:
+    """Quality contract, IVF-prefilter precedent:
     PQ's production role is the SHORTLIST stage — ADC proposes candidates,
     an exact pass re-ranks them. On the embeddings fixture (500 x 64-dim,
     labeled clusters), m=16/k=16 codebooks with a 100-deep ADC shortlist

@@ -1,5 +1,5 @@
-"""Full Public Suffix List semantics (operators/urls.py, VERDICT r11 next
-#4): the snapshot loader must honor wildcard (``*.``) and exception
+"""Full Public Suffix List semantics (operators/urls.py): the snapshot
+loader must honor wildcard (``*.``) and exception
 (``!``) rules per the publicsuffix.org algorithm, and on the vendored
 slice's own domain the full algorithm must agree with the zero-config
 default exactly (so swapping in a real snapshot cannot regress the
@@ -171,8 +171,8 @@ def test_suffix_file_loader(tmp_path, spark):
 def test_malformed_rules_rejected_at_parse_time():
     """Rules compile into generated Spark/DuckDB expressions, so the
     parser must reject anything outside the LDH charset — a quote in an
-    external suffix file would otherwise break or inject the oracle SQL
-    (ADVICE r12 #3)."""
+    external suffix file would otherwise break or inject the oracle
+    SQL."""
     for bad in ("foo'bar.com", 'a"b.com', "under_score.com", "semi;colon"):
         with pytest.raises(ValueError):
             parse_public_suffix_list(bad)

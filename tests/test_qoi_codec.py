@@ -180,7 +180,7 @@ def test_error_paths_are_loud():
     with pytest.raises(ValueError, match="expects an"):
         encode_qoi(np.zeros((2, 2), dtype=np.uint8))
     # hostile header: w=h=2^32-1 must be rejected BEFORE the ~64 GB
-    # allocation (ADVICE r10 #2; qoi.h caps pixels the same way)
+    # allocation (qoi.h caps pixels the same way)
     with pytest.raises(ValueError, match="implausible"):
         decode_qoi(_header(2**32 - 1, 2**32 - 1) + _END)
     # dimensions the stream length cannot possibly encode (max 62 px/byte)

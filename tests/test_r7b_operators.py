@@ -268,7 +268,7 @@ def test_winsorize_tiny_group_sizes(spark):
 
 def test_winsorize_rejects_fractional_value_col(spark):
     # the exactness contract is bigint arithmetic; silently truncating a
-    # double column would clip on wrong values (ADVICE r7)
+    # double column would clip on wrong values
     import pytest
 
     df = spark.createDataFrame([(1, "a", 1.5)], "id long, g string, v double")
@@ -279,7 +279,7 @@ def test_winsorize_rejects_fractional_value_col(spark):
 def test_token_budget_rejects_out_of_domain_scores(spark):
     # the driver histogram is bounded only for scores in [0, 1]; an
     # unbounded score column must fail loudly, not collect O(range*scale)
-    # rows (ADVICE r7 / VERDICT r7 #3)
+    # rows
     import pytest
 
     rows = [(i, float(i), 10) for i in range(2100)]  # scores 0..2099
@@ -298,7 +298,7 @@ def test_token_budget_in_domain_unchanged_by_guard(spark):
 
 def test_repeated_spans_skip_null_text(spark):
     # size(split(NULL)) is -1 in Spark but NULL in SQL; null-text rows are
-    # excluded so the contract matches any SQL oracle (ADVICE r7)
+    # excluded so the contract matches any SQL oracle
     docs = [(1, "a b c d e f"), (2, None), (3, "a b c d e g")]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     out = repeated_ngram_span_stats(df, "text", "doc_id").collect()
@@ -308,7 +308,7 @@ def test_repeated_spans_skip_null_text(spark):
 
 def test_oversample_factor_is_exact_integer_division(spark):
     # floor(double /) can flip the factor by one at large counts; the
-    # factor must be integer division on the counts (ADVICE r7)
+    # factor must be integer division on the counts
     from datapipelines_spark.operators.mixing import oversample_to_parity
 
     rows = [("maj", i) for i in range(12)] + [("min", i) for i in range(5)]

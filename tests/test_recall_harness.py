@@ -1,7 +1,7 @@
 """Shape contracts of the two accuracy harnesses (queries/recall.py):
 the ANN harness's IVF arms must show recall monotone non-decreasing in
-probe count (VERDICT r11 next #3 — more probes is strictly more scoring
-work, so it must never buy LESS recall on the same fixture), and the
+probe count (more probes is strictly more scoring work, so it must
+never buy LESS recall on the same fixture), and the
 dedup harness's tuned banding arm must clear its choose_banding target
 where the default banding measurably misses."""
 
@@ -22,8 +22,8 @@ def test_ivf_recall_monotone_in_probes(spark, sf_dir):
     }
     assert sorted(by_probe) == [1, 2, 4, 8]
     assert by_probe[1] <= by_probe[2] <= by_probe[4] <= by_probe[8]
-    # the 0.9 operating point is measured, not extrapolated (VERDICT r12
-    # next #3): probes=8 probes every cell of the 8-cell index, so its
+    # the 0.9 operating point is measured, not extrapolated: probes=8
+    # probes every cell of the 8-cell index, so its
     # candidates are the full corpus and recall must be exhaustive
     assert by_probe[8] >= 9000
     assert by_probe[8] == 10000

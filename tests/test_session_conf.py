@@ -1,5 +1,5 @@
 """Session factory posture: the confs that encode scale/timeout policy must
-actually be set on the live session (VERDICT r2 #7 — coarse E4 equivalent),
+actually be set on the live session,
 and Python workers must run through the package's worker daemon."""
 
 import os

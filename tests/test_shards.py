@@ -169,6 +169,23 @@ class TestWriteTarShards:
         summary = write_tar_shards(df, out_dir, mode="overwrite")
         assert sum(n for _, n in summary) == 1
 
+    def test_append_keeps_earlier_shards(self, spark, tmp_path):
+        from datapipelines_spark.sinks.writer import write_tar_shards
+        from datapipelines_spark.sources.shards import read_tar_samples
+
+        def keys(lo, hi):
+            return spark.createDataFrame(
+                [(f"{i:06d}", {"txt": bytearray(f"doc {i}".encode())}) for i in range(lo, hi)],
+                "`__key__` string, data map<string, binary>",
+            )
+
+        out_dir = str(tmp_path / "tars")
+        first = write_tar_shards(keys(0, 10), out_dir, shard_rows=4, mode="error")
+        second = write_tar_shards(keys(10, 20), out_dir, shard_rows=4, mode="append")
+        assert not {name for name, _ in first} & {name for name, _ in second}
+        back = read_tar_samples(spark, out_dir)
+        assert sorted(r["__key__"] for r in back.collect()) == [f"{i:06d}" for i in range(20)]
+
     @pytest.mark.parametrize(
         "kwargs, match",
         [

@@ -226,7 +226,7 @@ def test_normalized_vec_edge_values_match_transform_shape(spark):
 
 def test_fit_rejects_ragged_vector_lengths(spark):
     # a vector SHORTER than the rest yields contiguous 0..D-1 positions,
-    # so only the per-dimension count check can catch it (ADVICE r10 #4)
+    # so only the per-dimension count check can catch it
     rows = [(0, [0.1, 0.2, 0.3]), (1, [0.4, 0.5, 0.6]), (2, [0.7, 0.8])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="ragged"):

@@ -1,7 +1,7 @@
 """Streaming corpus ingest (streaming/ingest.py): replay equivalence —
 one tick equals the batch pipeline verbatim — crash-safety of the
 append-only manifest commit at every filesystem step, O(batch) per-tick
-write volume (VERDICT r12 next #2), and index compaction."""
+write volume, and index compaction."""
 
 import builtins
 import os
@@ -84,8 +84,8 @@ def test_two_ticks_manifest_and_write_volume(spark, sf_dir, tmp_path):
     """Two ticks: the manifest tracks both deltas, re-delivery of a
     committed epoch is a no-op, and — the append-only contract — each
     tick's delta holds ONLY that tick's rows, so per-tick write volume is
-    O(batch) instead of O(cumulative admitted) (VERDICT r12 next #2: the
-    r12 design rewrote index+verdicts wholesale every epoch)."""
+    O(batch) instead of O(cumulative admitted), which rewriting the index
+    and verdicts wholesale every epoch would cost."""
     corpus, crawl = _crawl(spark, sf_dir)
     mid = crawl.approxQuantile("doc_id", [0.5], 0.0)[0]
     state = str(tmp_path / "state2")
@@ -300,7 +300,7 @@ def test_crash_during_compaction_recovers(spark, sf_dir, tmp_path, monkeypatch):
 
 def test_tuned_banding_reaches_the_ingest_surface(spark, sf_dir, tmp_path):
     """(threshold, target_recall) derives the banding via choose_banding
-    on both ingest surfaces (VERDICT r12 stretch #7): the tuned-config
+    on both ingest surfaces: the tuned-config
     run must produce EXACTLY the verdict table of the same config passed
     explicitly, and mixing both parameters is rejected."""
     import pytest

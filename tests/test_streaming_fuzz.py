@@ -1,4 +1,4 @@
-"""Differential fuzz for STREAMING replay semantics (VERDICT r6 stretch #7).
+"""Differential fuzz for STREAMING replay semantics.
 
 The batch fuzz surfaces (joins/windows/setops/scalars/rollup) are covered by
 tests/test_differential_fuzz.py; what was left unpinned is the WATERMARK

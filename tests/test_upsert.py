@@ -100,8 +100,8 @@ def test_streaming_upsert_sink(spark, tmp_path):
 
 def test_streaming_sink_fresh_checkpoint_restart_not_dropped(spark, tmp_path):
     """A restart with a FRESH checkpoint restarts epochs at 0; the new
-    run's batches must land (ADVICE r6 #3 — the old epoch-named scheme
-    silently dropped them as 'replays' of the previous run)."""
+    run's batches must land (an epoch-named version scheme would drop
+    them silently as 'replays' of the previous run)."""
     from datapipelines_spark.sinks.upsert import streaming_upsert_sink
 
     path = str(tmp_path / "tbl")

@@ -173,7 +173,7 @@ def test_parse_agrees_with_urllib_reference(spark):
 
 def test_idn_spellings_collapse_to_one_domain(spark):
     """The unicode and punycode spellings of one internationalized host
-    must normalize to the SAME registrable domain (VERDICT r12 next #5) —
+    must normalize to the SAME registrable domain —
     otherwise a real crawl quotas and dedups them as two domains."""
     urls = [
         "https://bücher.example/p/1",
