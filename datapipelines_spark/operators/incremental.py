@@ -147,54 +147,6 @@ def _applied_epoch(state_dir: str) -> int | None:
     return max(epochs) if epochs else None
 
 
-def _recover_state(state_dir: str) -> None:
-    """Repair the state after a crash anywhere in the swap protocol.
-
-    A crash can leave at most one complete ``.staging-E`` (the merged
-    state for epoch E, proven complete by Spark's _SUCCESS marker) and at
-    most one ``.old-E`` (the pre-E state moved aside). Resolution order:
-
-    - state dir absent + complete staging → ADOPT the staging (it is the
-      newest state; its ``_applied-E`` marker makes the re-delivered
-      epoch E a no-op). "Complete" requires BOTH Spark's _SUCCESS marker
-      AND the ``_applied-E`` file: a crash between the parquet write and
-      the marker creation leaves a _SUCCESS-bearing but markerless
-      staging, and adopting it on the FIRST epoch (no prior state dir to
-      fall back to) would double-count the re-delivered epoch — the
-      marker is what makes re-delivery idempotent, so a markerless
-      staging is torn by definition;
-    - state dir absent + only an old dir → restore it (epoch E will be
-      re-delivered and re-merged);
-    - state dir present → every leftover staging/old is stale (its epoch
-      either committed, carrying its marker, or will be re-delivered);
-
-    then delete whatever leftovers remain. A crash therefore never leaves
-    the view absent or torn, which a delete-then-rename order would."""
-    import glob
-    import os
-    import shutil
-
-    root = state_dir.rstrip("/")
-    stagings = glob.glob(root + ".staging-*")
-    olds = glob.glob(root + ".old-*")
-    if not os.path.isdir(root):
-        complete = [
-            d
-            for d in stagings
-            if os.path.exists(os.path.join(d, "_SUCCESS"))
-            and any(n.startswith(_APPLIED_PREFIX) for n in os.listdir(d))
-        ]
-        if complete:
-            newest = max(complete, key=lambda d: int(d.rsplit("-", 1)[1]))
-            os.rename(newest, root)
-        elif olds:
-            newest = max(olds, key=lambda d: int(d.rsplit("-", 1)[1]))
-            os.rename(newest, root)
-    for d in stagings + olds:
-        if os.path.isdir(d):
-            shutil.rmtree(d, ignore_errors=True)
-
-
 def incremental_state_sink(
     state_dir: str,
     keys: list[str],
@@ -209,18 +161,17 @@ def incremental_state_sink(
     and per-batch cost is O(|state| + |batch|), independent of stream
     history.
 
-    Crash-safe swap protocol (a delete-then-rename order could silently
-    reset the view): the merged
-    state is written to ``.staging-E`` together with an ``_applied-E``
-    epoch marker (materializing the read of the old state BEFORE it is
-    replaced), the old state is renamed ASIDE to ``.old-E``, the staging
-    renamed in, and only then is the old dir deleted. New state becomes
-    visible first; history is deleted last — the same discipline as
-    sinks/upsert.py:compact. A crash at any point leaves a recoverable
-    dir, never an absent one; _recover_state (run at each batch start)
-    adopts a complete staging or restores the old state, and the marker —
-    committed atomically with the state it describes — makes the
-    re-delivered epoch idempotent (epochs ≤ the marker are skipped).
+    Crash-safe commit: the merged state is written to ``<root>.staging-E``
+    together with an ``_applied-E`` epoch marker (materializing the read of
+    the old state BEFORE it is replaced), then ``sinks/swap.py:replace_dir``
+    renames the old state aside to ``<root>.old-E``, the staging in, and
+    deletes the aside last. Each batch starts with ``recover_dir``, which
+    only restores: if the state dir is missing (a crash between the two
+    renames) the aside goes back, and every staging is deleted. The crashed
+    epoch is re-delivered and merged again; on the first epoch there is no
+    aside, so the re-delivery seeds the view. The marker, committed inside
+    the state it describes, makes a re-delivered epoch that did commit a
+    no-op (epochs ≤ the marker are skipped).
 
     Observability (the ``df.observe`` machinery applied to the sink's own
     state store): every applied epoch appends
@@ -237,21 +188,22 @@ def incremental_state_sink(
     Contract: the state dir and the stream's checkpointLocation form a
     unit — reset both together (a fresh checkpoint replays the source
     from scratch, so pairing it with existing state would double-count
-    regardless of any marker scheme). Local rename/rmtree stand in for a
-    filesystem with atomic dir rename (HDFS); object stores need a
-    manifest commit instead — see sinks/upsert.py."""
+    regardless of any marker scheme)."""
+    import glob
     import json
     import os
     import shutil
 
     from pyspark.sql import Observation
 
+    from datapipelines_spark.sinks.swap import recover_dir, replace_dir
+
     root = state_dir.rstrip("/")
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         epoch = int(epoch_id)
-        _recover_state(root)
+        recover_dir(root, glob.glob(root + ".staging-*"), glob.glob(root + ".old-*"))
         last = None
         obs_delta, obs_state = Observation(), Observation()
         delta = delta_of(batch_df).observe(
@@ -269,12 +221,7 @@ def incremental_state_sink(
         shutil.rmtree(staging, ignore_errors=True)
         merged.write.mode("overwrite").parquet(staging)  # materializes read
         open(os.path.join(staging, f"{_APPLIED_PREFIX}{epoch}"), "w").close()
-        if os.path.isdir(root):
-            old = f"{root}.old-{epoch}"
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(root, old)
-        os.rename(staging, root)
-        shutil.rmtree(f"{root}.old-{epoch}", ignore_errors=True)
+        replace_dir(staging, root, f"{root}.old-{epoch}")
         metrics = {
             "epoch": epoch,
             "delta_groups": obs_delta.get["delta_groups"],

@@ -33,9 +33,8 @@ def hyperplane(j: int, dim: int) -> list[int]:
 def lsh_signature(vec: Column | str, dim: int, num_planes: int = 16) -> Column:
     """Random-hyperplane signature: bit j = 1 iff dot(v, plane_j) >= 0.
 
-    Pass a column NAME to take the memoized plan-build path (r14, guide
-    §1.2 on the driver): the plane literals alone are dim*num_planes py4j
-    round trips (~1 s of build at 64x16), and the tree is a pure function
+    Pass a column NAME to take the memoized plan-build path: the plane
+    literals alone are dim*num_planes py4j round trips (~1 s of build at 64x16), and the tree is a pure function
     of (name, dim, num_planes); the name form casts to array<double>
     itself. A Column argument builds inline, as before."""
 
@@ -227,30 +226,25 @@ def cosine_topk_auto(
     k: int = 5,
     pair_budget: int = 5_000_000,
     max_query_rows: int = 100_000,
-    cache_probes: bool = True,
 ) -> DataFrame:
     """Route exact top-k by cost: when queries × corpus fits ``pair_budget``,
     use the broadcast-join expression path (``cosine_topk``) — pure Catalyst,
     no driver-resident matrix, no Python worker launch, so its constant cost
     is milliseconds; otherwise the BLAS ``cosine_topk_vectorized`` path whose
-    per-candidate cost wins on big corpora (r3 flagged the BLAS path's fixed
-    overhead at 10× on a 2k-vector corpus — this is the fix).
+    per-candidate cost wins on big corpora (on a 2k-vector corpus the BLAS
+    path's fixed overhead measured 10×).
 
     Both probes early-stop via ``limit(n+1).count()``: on a billion-row
     corpus the router reads a bounded prefix, never a full scan. Probe
     results are memoized per (session, analyzed plan) so repeated builds pay
-    the probe jobs once. Caveat: the memo assumes the PLAN determines the
-    count — true for immutable fixture inputs, false for mutable/appended
-    sources (a table that grows between builds can keep routing through the
-    broadcast path). Pass ``cache_probes=False`` for mutable sources; a
-    stale probe only mis-ROUTES (both paths return identical results, tie
-    order included — tested)."""
+    the probe jobs once. The memo assumes the PLAN determines the count, so
+    a source that grows between builds can keep routing through the
+    broadcast path; a stale probe only mis-ROUTES (both paths return
+    identical results, tie order included — tested)."""
     probe = pair_budget // max(k, 1)
-    n_corpus = _bounded_count(df.select(id_col), probe + 1, cache_probes)
+    n_corpus = _bounded_count(df.select(id_col), probe + 1)
     if n_corpus <= probe:
-        n_queries = _bounded_count(
-            df.where(query_pred).select(id_col), probe + 1, cache_probes
-        )
+        n_queries = _bounded_count(df.where(query_pred).select(id_col), probe + 1)
         if n_queries * n_corpus <= pair_budget:
             return cosine_topk(df, vec_col, id_col, query_pred, k)
     return cosine_topk_vectorized(
@@ -265,11 +259,9 @@ def cosine_topk_auto(
 _COUNT_CACHE: dict[tuple[str, str, int], int] = {}
 
 
-def _bounded_count(df: DataFrame, limit: int, cache: bool = True) -> int:
+def _bounded_count(df: DataFrame, limit: int) -> int:
     from datapipelines_spark.functions.partitioning import plan_fingerprint
 
-    if not cache:
-        return df.limit(limit).count()
     key = (
         df.sparkSession.sparkContext.applicationId,
         plan_fingerprint(df),
@@ -308,7 +300,7 @@ def cosine_topk_chunked(
 
     if num_chunks is None:
         # optimistic single-chunk attempt instead of a pre-count of the query
-        # side (r3 perf note): the size guard inside the vectorized path is a
+        # side: the size guard inside the vectorized path is a
         # limit(chunk_rows+1).collect(), which early-stops — a failed attempt
         # costs a bounded partial scan, not a full corpus scan. Only when the
         # guard trips do we pay one column-pruned count to size the chunks.
@@ -431,7 +423,7 @@ def knn_graph(
         # need splitting; only past that bound pay the per-cell counts
         # aggregate (one bounded n_cells-row collect, the centroid-partials
         # precedent) and teach each row its block count via a map literal.
-        # The probe is the memoized early-stopping count (r13): one
+        # The probe is the memoized early-stopping count: one
         # bounded job per distinct corpus plan per session instead of a
         # full count per build — bench repeats and composed callers skip
         # the job entirely. Memo keyed on (appId, plan fingerprint): an

@@ -15,7 +15,10 @@ deletes, both public designs) is itself expressible on bare parquet:
            equivalent max-version semi-join) keyed on the primary key —
            minus tombstones;
   compact: rewrite the merged snapshot as a new base and drop history, so
-           read cost returns to a plain scan.
+           read cost returns to a plain scan;
+  vacuum:  fold history below a cutoff into the cutoff version, REPLACED
+           through ``sinks/swap.py``; every entry point first restores a
+           version a crashed vacuum left aside, and the vacuum is re-run.
 
 Scale shape: deltas are small next to the base, so the merge shuffle
 carries base-size rows exactly once (the same cost a table format's MOR
@@ -28,11 +31,14 @@ list — out of scope here, as for any single-writer pipeline sink.
 
 from __future__ import annotations
 
+import glob
 import os
 import re
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+
+from datapipelines_spark.sinks.swap import recover_dir, replace_dir
 
 DELETED_COL = "__deleted"
 VERSION_COL = "__v"
@@ -49,42 +55,20 @@ def _versions(path: str) -> list[int]:
     return sorted(out)
 
 
-_VACUUM_MARKER = "_vacuumed-"  # underscore-prefixed: invisible to parquet
-
-
-def _recover_vacuum(path: str) -> None:
-    """Repair a vacuum interrupted between its swap renames (the only
-    window where a version dir is ever absent). Mirrors
-    operators/incremental.py:_recover_state: if ``v=V`` is missing, adopt
-    a COMPLETE staging (Spark's _SUCCESS plus the ``_vacuumed-V`` marker —
-    a markerless staging is torn by definition) else restore the
-    moved-aside original; then delete leftovers. Pre-cutoff versions a
-    crash left undeleted are NOT touched here — the folded base keeps
-    tombstones, so leftover history is merely a larger table (latest-wins
-    already correct) and the next vacuum removes it. Called from every
-    read/write entry point; single-writer per table, as documented."""
-    import glob as _glob
-    import shutil
-
+def _undo_torn_vacuum(path: str) -> None:
+    """Put back any ``v=V`` a vacuum left moved aside and delete its
+    leftovers (``sinks/swap.py:recover_dir``, one version at a time).
+    Pre-cutoff versions a crash left undeleted stay: the folded base keeps
+    tombstones, so leftover history is merely a larger table and the next
+    vacuum removes it. Called from every read/write entry point;
+    single-writer per table, as documented."""
     root = path.rstrip("/")
-    stagings = _glob.glob(root + ".vacuum-staging-*")
-    olds = _glob.glob(root + ".vacuum-old-*")
-    for leftover in stagings + olds:
-        v = int(leftover.rsplit("-", 1)[1])
-        target = os.path.join(root, f"v={v}")
-        if not os.path.isdir(target):
-            staged = root + f".vacuum-staging-{v}"
-            complete = os.path.isdir(staged) and (
-                os.path.exists(os.path.join(staged, "_SUCCESS"))
-                and os.path.exists(os.path.join(staged, f"{_VACUUM_MARKER}{v}"))
-            )
-            if complete:
-                os.rename(staged, target)
-            elif os.path.isdir(root + f".vacuum-old-{v}"):
-                os.rename(root + f".vacuum-old-{v}", target)
-    for leftover in stagings + olds:
-        if os.path.isdir(leftover):
-            shutil.rmtree(leftover, ignore_errors=True)
+    for v in {d.rsplit("-", 1)[1] for d in glob.glob(root + ".vacuum-*")}:
+        recover_dir(
+            os.path.join(root, f"v={v}"),
+            glob.glob(f"{root}.vacuum-staging-{v}"),
+            glob.glob(f"{root}.vacuum-old-{v}"),
+        )
 
 
 def _read_raw(
@@ -95,7 +79,7 @@ def _read_raw(
     absent fields read as NULL. ``as_of_version`` restricts the FILE LIST,
     not just the rows, so a time-travel read carries the schema AS OF that
     commit (a column added later does not exist in the old snapshot)."""
-    _recover_vacuum(path)
+    _undo_torn_vacuum(path)
     versions = _versions(path)
     if not versions:
         raise ValueError(
@@ -126,7 +110,7 @@ def upsert_write(df: DataFrame, path: str, *, delete: bool = False) -> int:
     earlier versions' (SCHEMA EVOLUTION): added columns read as NULL on
     old rows, omitted columns as NULL on the new ones — snapshot schema is
     the union of the versions it reads."""
-    _recover_vacuum(path)
+    _undo_torn_vacuum(path)
     version = (_versions(path)[-1] + 1) if _versions(path) else 0
     (
         df.withColumn(DELETED_COL, F.lit(bool(delete)))
@@ -219,18 +203,18 @@ def vacuum(
     away, the key would resurrect. With the tombstone kept, leftover
     history is merely a larger table. Run ``compact`` to clear tombstones.
 
-    Crash-ordering (compact's visible-first discipline + the
-    incremental-sink swap, since the cutoff dir must be REPLACED): the
-    folded base is written to ``.vacuum-staging-V`` with a ``_vacuumed-V``
-    marker riding inside, the old ``v=V`` renamed ASIDE, the staging
-    renamed in, and only then is history deleted — old-aside first,
-    pre-cutoff versions last. ``_recover_vacuum`` (run at every
-    read/write entry) adopts a complete staging or restores the aside dir,
-    so no crash point leaves a version missing or a key resurrected
+    Crash-ordering (compact's visible-first discipline, but the cutoff dir
+    must be REPLACED): the folded base is written to
+    ``<table>.vacuum-staging-V``, then ``sinks/swap.py:replace_dir`` renames
+    the old ``v=V`` aside to ``<table>.vacuum-old-V``, the staging in, and
+    deletes the aside; pre-cutoff versions are deleted last. Every
+    read/write entry first restores an aside whose ``v=V`` is missing and
+    deletes leftovers, so a crash leaves the snapshot as it was before the
+    vacuum or after it, never a version missing or a key resurrected
     (crash-point sweep in tests/test_upsert_vacuum.py)."""
     import shutil
 
-    _recover_vacuum(path)
+    _undo_torn_vacuum(path)
     versions = _versions(path)
     if retain_n < 1:
         raise ValueError(f"retain_n must be >= 1, got {retain_n}")
@@ -248,12 +232,8 @@ def vacuum(
     staging = root + f".vacuum-staging-{v_cut}"
     shutil.rmtree(staging, ignore_errors=True)
     folded.write.mode("overwrite").parquet(staging)  # materializes the read
-    open(os.path.join(staging, f"{_VACUUM_MARKER}{v_cut}"), "w").close()
-    old = root + f".vacuum-old-{v_cut}"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(os.path.join(path, f"v={v_cut}"), old)
-    os.rename(staging, os.path.join(path, f"v={v_cut}"))
-    shutil.rmtree(old, ignore_errors=True)
+    target = os.path.join(root, f"v={v_cut}")
+    replace_dir(staging, target, root + f".vacuum-old-{v_cut}")
     for v in versions:
         if v < v_cut:
             shutil.rmtree(os.path.join(path, f"v={v}"), ignore_errors=True)

@@ -99,44 +99,55 @@ def write_tar_shards(
     ``<key>.<ext>`` — executor-side tarfile writes, nothing collected; rows
     are sorted by key within each shard so output is deterministic given a
     deterministic partitioning. Returns [(shard filename, n_samples)] of
-    the shards this call wrote. ``mode="append"`` numbers its shards on
-    from the highest existing ``shard-%06d.tar`` index, so earlier shards
-    are never reopened.
+    the shards this call wrote.
+
+    The job writes into a sibling ``<path>.staging-<id>``, and the shards
+    are published only after it succeeded: ``error``/``overwrite`` swap
+    the staging dir in through ``sinks/swap.py:replace_dir`` (the old
+    shards move to ``<path>.old-<id>`` and are deleted last), ``append``
+    renames the staged shards in, numbered on from the highest existing
+    ``shard-%06d.tar`` index. So overwriting a directory with a DataFrame
+    read from it works, and a failed job deletes its staging dir and
+    leaves the previous shards untouched. Each call first runs
+    ``recover_dir``: a crash during an earlier overwrite leaves the old or
+    the new shard set whole (a crash between an append's renames leaves
+    some of its shards in, each whole). Single writer per directory.
 
     Reference parity: the reference only reads this layout
     (/root/reference/sdata/custom_datapipes.py tar loader); writing it is
     the missing half a Spark-native ETL engine must add (same reasoning as
     write_dataset above).
     """
+    import glob
     import os
     import re
     import shutil
+    import uuid
 
     import pandas as pd
     import pyspark.sql.functions as F
     from pyspark.sql import types as T
 
+    from datapipelines_spark.sinks.swap import recover_dir, replace_dir
+
     if shard_rows < 1:
         raise ValueError(f"shard_rows must be >= 1, got {shard_rows}")
     if mode not in ("error", "overwrite", "append"):
         raise ValueError(f"mode must be 'error', 'overwrite' or 'append', got {mode!r}")
-    if os.path.exists(path):
-        if mode == "error":
-            raise FileExistsError(f"{path} exists (mode='error')")
-        if mode == "overwrite":
-            shutil.rmtree(path)
-    os.makedirs(path, exist_ok=True)
-    # tarfile mode "w" truncates, so an append must not reuse a shard name
+    root = path.rstrip("/")
+    recover_dir(root, glob.glob(root + ".staging-*"), glob.glob(root + ".old-*"))
+    if mode == "error" and os.path.exists(root):
+        raise FileExistsError(f"{path} exists (mode='error')")
+    append = mode == "append" and os.path.isdir(root)
+    # an append renames its shards in, so it must not reuse a shard name
     taken = [
         int(m.group(1))
-        for f in os.listdir(path)
+        for f in (os.listdir(root) if append else ())
         if (m := re.fullmatch(r"shard-(\d+)\.tar", f))
     ]
     first_shard = max(taken, default=-1) + 1
 
     n_rows = df.count()
-    if n_rows == 0:
-        return []
     n_shards = max(1, (n_rows + shard_rows - 1) // shard_rows)
     part = (
         df.select(F.col(key_col).alias("__key__"), F.col(data_col).alias("data"))
@@ -147,6 +158,8 @@ def write_tar_shards(
     summary_schema = T.StructType(
         [T.StructField("shard", T.StringType()), T.StructField("n_samples", T.LongType())]
     )
+    write_id = uuid.uuid4().hex
+    staging = f"{root}.staging-{write_id}"
 
     def write_partition(batches):
         import io
@@ -161,7 +174,7 @@ def write_tar_shards(
             if tf is None:
                 pid = int(pdf["__pid"].iloc[0])
                 shard_name = f"shard-{first_shard + pid:06d}.tar"
-                tf = tarfile.open(os.path.join(path, shard_name), mode="w")
+                tf = tarfile.open(os.path.join(staging, shard_name), mode="w")
             for key, data in zip(pdf["__key__"], pdf["data"]):
                 for ext, payload in sorted(data.items()):
                     buf = bytes(payload) if payload is not None else b""
@@ -173,5 +186,17 @@ def write_tar_shards(
             tf.close()
             yield pd.DataFrame({"shard": [shard_name], "n_samples": [n]})
 
-    out = part.mapInPandas(write_partition, summary_schema).collect()
-    return sorted((r["shard"], r["n_samples"]) for r in out)
+    os.makedirs(staging)
+    try:
+        out = part.mapInPandas(write_partition, summary_schema).collect() if n_rows else []
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    summary = sorted((r["shard"], r["n_samples"]) for r in out)
+    if append:
+        for name, _ in summary:
+            os.rename(os.path.join(staging, name), os.path.join(root, name))
+        shutil.rmtree(staging, ignore_errors=True)
+    else:
+        replace_dir(staging, root, f"{root}.old-{write_id}")
+    return summary

@@ -3,6 +3,7 @@ must be order-independent, retractions must subtract exactly, and fully
 retracted groups must vanish."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from datapipelines_spark.operators.incremental import (
     aggregate_state,
@@ -268,6 +269,8 @@ def test_crash_at_every_swap_step_recovers_exactly_once(spark, tmp_path, monkeyp
         )
         if not crashed:
             break  # fewer fs-ops than crash points: protocol fully swept
+    else:
+        pytest.fail("no crash-free run")
 
 
 def test_metrics_sidecar_tracks_state_growth_and_redelivery(spark, tmp_path):

@@ -131,6 +131,28 @@ class TestReadTarSamples:
         assert set(df.columns) == {"__key__", "__url__", "data"}
 
 
+def _docs(spark, lo, hi):
+    return spark.createDataFrame(
+        [(f"{i:06d}", {"txt": bytearray(f"doc {i}".encode())}) for i in range(lo, hi)],
+        "`__key__` string, data map<string, binary>",
+    )
+
+
+def _samples(spark, path):
+    return sorted(
+        (r["__key__"], sorted((k, bytes(v)) for k, v in r["data"].items()))
+        for r in read_tar_samples(spark, path).collect()
+    )
+
+
+def _shard_bytes(path):
+    out = {}
+    for name in sorted(os.listdir(path)):
+        with open(os.path.join(path, name), "rb") as fh:
+            out[name] = fh.read()
+    return out
+
+
 class TestWriteTarShards:
     def test_round_trip_through_reference_format(self, spark, tmp_path):
         """write_tar_shards ∘ read_tar_samples == identity: the engine can
@@ -185,6 +207,89 @@ class TestWriteTarShards:
         assert not {name for name, _ in first} & {name for name, _ in second}
         back = read_tar_samples(spark, out_dir)
         assert sorted(r["__key__"] for r in back.collect()) == [f"{i:06d}" for i in range(20)]
+
+    def test_overwrite_with_its_own_samples_keeps_them(self, spark, tmp_path):
+        from datapipelines_spark.sinks.writer import write_tar_shards
+
+        out_dir = str(tmp_path / "tars")
+        write_tar_shards(_docs(spark, 0, 30), out_dir, shard_rows=8, mode="error")
+        want = _samples(spark, out_dir)
+        assert len(want) == 30
+        write_tar_shards(read_tar_samples(spark, out_dir), out_dir, shard_rows=8, mode="overwrite")
+        assert _samples(spark, out_dir) == want
+        assert os.listdir(tmp_path) == ["tars"]
+
+    def test_failed_job_leaves_previous_shards_byte_identical(self, spark, tmp_path):
+        import pyspark.sql.functions as F
+
+        from datapipelines_spark.sinks.writer import write_tar_shards
+
+        out_dir = str(tmp_path / "tars")
+        write_tar_shards(_docs(spark, 0, 30), out_dir, shard_rows=8, mode="error")
+        before = _shard_bytes(out_dir)
+        bad = _docs(spark, 30, 60).withColumn(
+            "data",
+            F.when(F.col("__key__") == "000045", F.raise_error(F.lit("boom"))).otherwise(
+                F.col("data")
+            ),
+        )
+        with pytest.raises(Exception, match="boom"):
+            write_tar_shards(bad, out_dir, shard_rows=8, mode="overwrite")
+        assert _shard_bytes(out_dir) == before
+        assert os.listdir(tmp_path) == ["tars"]
+
+    def test_crash_at_every_publish_step_leaves_one_whole_shard_set(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Kill an overwrite just before, and just after, each rename and
+        rmtree of its driver-side publish. The next call (mode="error")
+        must find the directory holding the old or the new shards whole,
+        with no staging or aside left beside it."""
+        import shutil
+
+        from datapipelines_spark.sinks.writer import write_tar_shards
+
+        old_df, new_df = _docs(spark, 0, 20), _docs(spark, 100, 125)
+        write_tar_shards(old_df, str(tmp_path / "old"), shard_rows=8)
+        write_tar_shards(new_df, str(tmp_path / "new"), shard_rows=8)
+        whole = [_shard_bytes(str(tmp_path / "old")), _shard_bytes(str(tmp_path / "new"))]
+        real_rename, real_rmtree = os.rename, shutil.rmtree
+
+        for when in ("before", "after"):
+            for crash_at in range(1, 10):
+                parent = tmp_path / f"{when}-{crash_at}"
+                out_dir = str(parent / "tars")
+                write_tar_shards(old_df, out_dir, shard_rows=8)
+                calls = {"n": 0}
+
+                def counting(fn, *a, **kw):
+                    calls["n"] += 1
+                    if calls["n"] == crash_at and when == "before":
+                        raise RuntimeError(f"simulated crash before fs-op {crash_at}")
+                    out = fn(*a, **kw)
+                    if calls["n"] == crash_at:
+                        raise RuntimeError(f"simulated crash after fs-op {crash_at}")
+                    return out
+
+                monkeypatch.setattr(os, "rename", lambda *a: counting(real_rename, *a))
+                monkeypatch.setattr(
+                    shutil, "rmtree", lambda *a, **kw: counting(real_rmtree, *a, **kw)
+                )
+                crashed = False
+                try:
+                    write_tar_shards(new_df, out_dir, shard_rows=8, mode="overwrite")
+                except RuntimeError:
+                    crashed = True
+                monkeypatch.undo()
+
+                with pytest.raises(FileExistsError):
+                    write_tar_shards(new_df, out_dir, shard_rows=8, mode="error")
+                assert _shard_bytes(out_dir) in whole, f"crash {when} fs-op {crash_at}"
+                assert os.listdir(parent) == ["tars"], f"crash {when} fs-op {crash_at}"
+                if not crashed:
+                    break
+            else:
+                pytest.fail("no crash-free run")
 
     @pytest.mark.parametrize(
         "kwargs, match",

@@ -170,6 +170,8 @@ def test_crash_at_every_commit_step_recovers_exactly_once(
         )
         if not crashed:
             break  # fewer fs-ops than crash points: protocol fully swept
+    else:
+        pytest.fail("no crash-free run")
 
 
 def test_compaction_preserves_state_and_later_ticks(spark, sf_dir, tmp_path):
@@ -296,6 +298,8 @@ def test_crash_during_compaction_recovers(spark, sf_dir, tmp_path, monkeypatch):
         )
         if not crashed:
             break  # fewer fs-ops than crash points: protocol fully swept
+    else:
+        pytest.fail("no crash-free run")
 
 
 def test_tuned_banding_reaches_the_ingest_surface(spark, sf_dir, tmp_path):
@@ -511,7 +515,7 @@ def test_retention_horizon_survives_later_commits(spark, sf_dir, tmp_path):
 def test_tick_verdicts_with_precomputed_corpus_artifacts_equal(
     spark, sf_dir
 ):
-    """r13: the sink precomputes the standing corpus's md5 and signature
+    """The sink precomputes the standing corpus's md5 and signature
     tables once and passes them into every tick
     (ingest_tick_verdicts(corpus_hashes=, corpus_sig_docs=)); the verdict
     table must be IDENTICAL to the derive-from-corpus path — the

@@ -121,10 +121,10 @@ def test_vacuum_folded_base_keeps_tombstones(spark, tmp_path):
 def test_vacuum_crash_at_every_fs_step_never_loses_or_resurrects(
     spark, tmp_path, monkeypatch
 ):
-    """Kill vacuum at EVERY filesystem mutation (staging cleanup, marker
-    write, rename aside, rename in, each delete), then read WITHOUT any
-    explicit recovery call — the read-path _recover_vacuum must yield the
-    exact pre-vacuum snapshot — then re-run vacuum and check again."""
+    """Kill vacuum at EVERY filesystem mutation (staging cleanup, rename
+    aside, rename in, each delete), then read WITHOUT any explicit
+    recovery call — the read path's recovery must yield the exact
+    pre-vacuum snapshot — then re-run vacuum and check again."""
     import builtins
     import shutil
 
@@ -168,6 +168,8 @@ def test_vacuum_crash_at_every_fs_step_never_loses_or_resurrects(
         assert _versions(t) == [2, 3]
         if not crashed:
             break  # fewer fs-ops than crash points: fully swept
+    else:
+        pytest.fail("no crash-free run")
 
 
 def test_reading_a_missing_table_raises_clearly(spark, tmp_path):
