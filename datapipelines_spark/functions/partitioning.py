@@ -6,7 +6,8 @@ the cluster has cores; any expensive per-row expression downstream (shingle
 construction, vector math, Python stages) then runs on a fraction of the
 machine. ``parallelize_small`` widens *only when needed* — at 100 TB a scan
 already yields thousands of splits and this is a no-op check, costing one
-metadata lookup and no shuffle.
+planning pass of the input (see ``parallelize_small`` for inputs that end in
+an exchange).
 
 This is the relational stand-in for the reference's worker fan-out
 (D4/D5, /root/reference/sdata/datapipeline.py:446-470): there, parallelism
@@ -16,53 +17,7 @@ width.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame
-
-
-def plan_fingerprint(df: DataFrame) -> str:
-    """sha256 of ``df``'s CANONICALIZED analyzed plan — a collision-safe
-    cache key, unlike ``DataFrame.semanticHash()`` whose 32 bits let distinct
-    plans collide and return each other's memoized values.
-
-    Canonicalization normalizes expression IDs (``doc_id#123L`` →
-    ``none#0L``), so two independent rebuilds of the same query fingerprint
-    identically — the raw analyzed string embeds freshly-allocated exprIds
-    and would never hit the cache for its stated purpose (bench repeats,
-    retried pipelines). The schema JSON is mixed in as a discriminator
-    because ``treeString`` elides columns past
-    ``spark.sql.debug.maxToStringFields`` (default 25): without it, two
-    distinct wide plans could share a fingerprint and return each other's
-    memoized width."""
-    qe = df._jdf.queryExecution()
-    plan = qe.analyzed().canonicalized().toString()
-    return hashlib.sha256(
-        plan.encode() + b"\x00" + df.schema.json().encode()
-    ).hexdigest()
-
-
-#: (applicationId, analyzed-plan sha256) -> probed partition width. The width
-#: of a deterministic plan over immutable inputs cannot change within a
-#: session, so repeated builds of the same query (bench repeats, retried
-#: pipelines) skip the physical-planning pass the ``.rdd`` probe forces — the
-#: session-scoped analogue of a catalog's table-statistics cache. Caveat: for
-#: mutable/appended sources the width CAN drift within a session; the cached
-#: value then only mis-sizes the widen-if-narrow check below (perf, never
-#: correctness).
-_WIDTH_CACHE: dict[tuple[str, str], int] = {}
-
-
-def plan_width(df: DataFrame) -> int:
-    """Partition count of ``df``'s physical plan, memoized per session."""
-    key = (df.sparkSession.sparkContext.applicationId, plan_fingerprint(df))
-    width = _WIDTH_CACHE.get(key)
-    if width is None:
-        if len(_WIDTH_CACHE) > 4096:
-            _WIDTH_CACHE.clear()
-        width = df.rdd.getNumPartitions()
-        _WIDTH_CACHE[key] = width
-    return width
 
 
 def parallelize_small(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -71,15 +26,16 @@ def parallelize_small(df: DataFrame, min_partitions: int | None = None) -> DataF
 
     Call sites are narrow sources (a single fixture parquet, a collected
     dimension) that would otherwise run downstream CPU-bound stages on 1-2
-    input splits. The width probe (``df.rdd.getNumPartitions()``) does force
-    physical planning of the upstream plan once per builder invocation —
-    a measurable but bounded cost — and is kept deliberately: the
-    alternative (unconditional ``repartition(target)``) would silently
-    COALESCE an already-wide input down to ``target``, destroying
-    parallelism exactly when the data is big — a scan of 100 TB yields
-    ~800k splits from ``spark.sql.files.maxPartitionBytes`` and must never
-    be squeezed to ``defaultParallelism``. Correct-at-scale beats saving
-    one planning pass.
+    input splits. The width probe (``df.rdd.getNumPartitions()``) runs on
+    every call. It plans the upstream query, and under adaptive query
+    execution a plan with an exchange must run its upstream shuffle before
+    the width is known: for a ``groupBy`` over a 100k-row parquet dir the
+    probe ran 2 jobs and took 0.2-1 s (4 vCPUs). That cost is kept
+    deliberately: the alternative (unconditional ``repartition(target)``)
+    would silently COALESCE an already-wide input down to ``target``,
+    destroying parallelism exactly when the data is big — a scan of 100 TB
+    yields ~800k splits from ``spark.sql.files.maxPartitionBytes`` and must
+    never be squeezed to ``defaultParallelism``.
     """
     if df.isStreaming:
         # a streaming plan has no .rdd to probe and its micro-batch
@@ -87,6 +43,6 @@ def parallelize_small(df: DataFrame, min_partitions: int | None = None) -> DataF
         # is a batch concern
         return df
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if plan_width(df) >= target:
+    if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

@@ -3,12 +3,12 @@
 The audio analogue of the image codecs: the reference's decode stage hands
 audio members to codec libraries this container doesn't ship; WAV/PCM needs
 none — the RIFF container and PCM frames are simple enough to parse with
-numpy directly (public Microsoft/IBM RIFF spec). This upgrades the engine's
-``decode_audio`` stage from the deterministic fake to a REAL decoder for the
-most common uncompressed interchange format, plus IMA/DVI ADPCM (WAV
-format 0x11, the common 4:1 compressed speech interchange — public IMA
-spec); perceptual codecs (mp3/ogg/flac) remain gated on external
-decoders, stated plainly.
+numpy directly (public Microsoft/IBM RIFF spec). ``real_audio_decode``,
+the default decoder of the engine's ``decode_audio`` stage, reads the
+most common uncompressed interchange format, IMA/DVI ADPCM (WAV format
+0x11, the common 4:1 compressed speech interchange — public IMA spec) and
+FLAC (operators/flaccodec.py); perceptual codecs (mp3/ogg) remain gated on
+external decoders, stated plainly.
 
 ``encode_wav`` exists so tests and oracle queries can synthesize payloads
 in-process — same pattern as the JPEG codec (operators/jpegcodec.py).
@@ -152,8 +152,7 @@ def decode_audio_payload(payload: bytes) -> tuple[np.ndarray, int]:
 def real_audio_decode(payload: bytes, envelope_bins: int = 8) -> dict:
     """REAL feature extraction for ``decode_audio``: parse the WAV or FLAC
     payload, return rate/channels/duration plus a per-bin RMS loudness
-    envelope — drop-in replacement for ``fake_audio_decode`` with the same
-    feature schema."""
+    envelope in ``AUDIO_FEATURES_SCHEMA`` (the default ``decode_fn``)."""
     samples, sr = decode_audio_payload(payload)
     n = samples.shape[0]
     mono = samples.mean(axis=1)

@@ -165,7 +165,7 @@ def count_contained(
     total volume the exploded per-row probe shipped — minus the explode
     and minus any downstream per-doc aggregation shuffle.
 
-    Non-deterministic marking is an optimizer fence (guide §4.4): callers
+    Non-deterministic marking is an optimizer fence: callers
     filter on this count, and a pushed-down filter would otherwise clone
     the ArrowEvalPython node, probing every document twice."""
     bc = spark.sparkContext.broadcast(bloom_bits)
@@ -236,14 +236,14 @@ def contamination_overlap_bloom(
     num_hashes = optimal_hashes(num_bits, expected_items)
     bits = build_bloom(ev, "s", num_bits, num_hashes)
 
-    # Fused per-document probe (r14, guide §4.1/§2.4): a document's
+    # Fused per-document probe: a document's
     # (already per-doc-distinct) shingles are born together in one array,
     # so the overlap count never needs them apart — hash the array in
     # place JVM-side and count bitmap hits per doc in one Arrow crossing.
-    # The r13 shape exploded to one row per shingle, probed row-wise, and
-    # shuffled every hit into a per-doc count aggregate; the explode, the
-    # per-row probe column and the count exchange all collapse — the
-    # training corpus now never shuffles at all.
+    # A row-wise shape would explode to one row per shingle, probe each,
+    # and shuffle every hit into a per-doc count aggregate; here the
+    # explode, the per-row probe column and the count exchange all
+    # collapse — the training corpus never shuffles at all.
     from datapipelines_spark.operators.dedup import doc_shingles
 
     tr = doc_shingles(train, text_col, id_col, n)

@@ -53,7 +53,7 @@ def connected_components(
 
     # the edge list is re-joined every iteration: persist it, or each round
     # re-runs the whole upstream pair pipeline (LSH, verification, ...).
-    # The undirected pair list is persisted FIRST (r13): the two union
+    # The undirected pair list is persisted FIRST: the two union
     # branches below are different projections of the same pair plan, and
     # without the persist each branch re-executed the upstream
     # candidate-join pipeline past its last exchange.
@@ -74,7 +74,7 @@ def connected_components(
     # round 1's neighbor-min is just min(neighbor ids), so
     # label0(v) = min(v, min neighbors) comes out of ONE aggregate over the
     # edge list — same result as init-to-self + one full round, minus one
-    # checkpoint+convergence job pair (r5 perf: the CC rounds are
+    # checkpoint+convergence job pair (the CC rounds are
     # fixed-overhead-dominated at small scale).
     labels = (
         edges.groupBy("u")

@@ -20,8 +20,8 @@ Spark shape: selection is ENTIRELY row-local — shingles AND the sliding
 minimum are array expressions inside one codegen stage (the window minimum
 is an array_min over slices of the per-document shingle array, deduplicated
 with array_distinct before the explode), so selection moves no data at all
-(r7; previously a window function shuffled and SORTED every shingle row by
-doc id — the bench's one linear-growth flag). Narrow sources get a
+(a window function would shuffle and SORT every shingle row by doc id,
+which the bench flagged as linear growth). Narrow sources get a
 round-robin parallelism floor (parallelize_small, the minhash discipline);
 the first data-keyed exchange in the pipeline is the overlap join's
 aggregation, carrying ~1/window of the shingle volume.
@@ -97,9 +97,9 @@ def fingerprint_overlap_pairs(
     pipeline, not the pair detector; same cap discipline as
     operators/dedup.py). ``None`` disables the cap AND its machinery —
     the same ``is not None`` gate as ngram_jaccard_pairs' max_doc_freq
-    (r14: the r13 shape paid a per-posting window count even when the
-    caller's cap could never engage)."""
-    # Hot-key guard (r14, guide §2.5): the r13 shape computed the
+    (a per-posting window count would be paid even when the caller's cap
+    could never engage)."""
+    # Hot-key guard: a window shape would compute the
     # doc-frequency cap as a count over Window.partitionBy("fp") after one
     # repartition("fp") — minimal exchanges, but the window exec BUFFERS
     # each fp's whole posting list in one task before the cap can drop it,

@@ -17,18 +17,18 @@ leaving the executors.
             once per epoch and is never collected;
   score:    one more broadcast-join + per-doc sum; prediction = score > 0.
 
-Numeric discipline for cross-engine replay (hardened after the round-9
-driver red): the ENTIRE replay surface is integers plus IEEE-754
-correctly-rounded double primitives, so any two conforming engines produce
-bit-identical training runs.
+Numeric discipline for cross-engine replay (hardened after exp() broke a
+digit-exact replay on another engine): the ENTIRE replay surface is
+integers plus IEEE-754 correctly-rounded double primitives, so any two
+conforming engines produce bit-identical training runs.
 
   - Weights are BIGINT micro-units (1e-6): integer sums are exact and
     order-independent, so partitioning cannot change a digit.
   - The squashing function is the division-only rational sigmoid
     s(z) = 0.5 + z / (2 * (1 + |z|))  — range (0,1), monotone, s(0)=0.5.
     abs / add / multiply-by-2 / divide are all correctly rounded under
-    IEEE-754, unlike exp(), whose 1-ulp license across libm builds is
-    exactly what broke the digit-exact replay in round 9.
+    IEEE-754, unlike exp(), whose 1-ulp license across libm builds can
+    break a digit-exact replay.
   - Quantization is floor-scaled (FLOOR(x * 1e6) -> BIGINT), never
     round(double, n): floor is exact and has no half-way rule for engines
     to disagree on.

@@ -82,8 +82,6 @@ def bigram_lm_score(
     exp(-avg_logp); callers threshold either form). Unseen bigrams and
     unseen histories degrade smoothly through the add-``alpha`` smoothing.
     """
-    from datapipelines_spark.operators.similarity import _bounded_count
-
     big, hist, vocab = bigram_lm_train(ref, text_col, id_col)
     # The broadcast-size probe is an ACTION on the full bigram aggregate;
     # without a cache the same reference scan + aggregation would rerun for
@@ -94,7 +92,7 @@ def bigram_lm_score(
     big = big.persist()
     hist = hist.persist()
     probe = BROADCAST_MAX_MODEL_ROWS
-    small = _bounded_count(big.select("v"), probe + 1) <= probe
+    small = big.select("v").limit(probe + 1).count() <= probe
     maybe_broadcast = F.broadcast if small else (lambda d: d)
 
     logp = F.round(

@@ -9,11 +9,11 @@ Decode / feature-extract / crop-resize / frame-sample run as Arrow-batched
 Pandas UDFs over ``mapInPandas``, all through one runner
 (``_payload_stage``) that owns batch iteration, the per-call deadline and
 the ``on_error`` contract; each stage supplies only its per-payload function
-and output schema. The codec is pluggable: ``real_decode`` actually
-decodes PPM/PGM, uncompressed BMP, JPEG (baseline + progressive,
-jpegcodec.py) and PNG (pngcodec.py) payloads pure-Python in this container;
-``fake_decode`` stays available as the deterministic stand-in for arbitrary
-binary payloads.
+and output schema. The codec is pluggable; the defaults are the real
+decoders: ``real_decode`` decodes PPM/PGM, uncompressed BMP, GIF, TIFF,
+JPEG (baseline + progressive, jpegcodec.py), QOI and PNG (pngcodec.py)
+payloads in pure Python, and ``real_audio_decode`` (audio.py) decodes WAV
+and FLAC.
 
 Scale notes: media rows are wide (MBs), so these stages cap Arrow batch
 sizes (``spark.sql.execution.arrow.maxRecordsPerBatch``) and should follow a
@@ -22,13 +22,14 @@ sizes (``spark.sql.execution.arrow.maxRecordsPerBatch``) and should follow a
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from datapipelines_spark.operators.audio import real_audio_decode
 
 #: Output schema of decode_images: per-row metadata + a small feature vector.
 IMAGE_FEATURES_SCHEMA = T.StructType(
@@ -41,21 +42,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
         T.StructField("decode_error", T.StringType()),
     ]
 )
-
-
-def fake_decode(payload: bytes) -> dict:
-    """Deterministic stand-in for an image codec: derives stable
-    width/height/mean from the payload digest. Replace with a real
-    PIL/cv2-backed fn in production."""
-    if payload is None or len(payload) == 0:
-        raise ValueError("empty payload")
-    digest = hashlib.md5(payload).digest()
-    return {
-        "width": 16 + digest[0] % 64,
-        "height": 16 + digest[1] % 64,
-        "n_channels": 3,
-        "mean_pixel": digest[2] / 255.0,
-    }
 
 
 def decode_ppm(payload: bytes):
@@ -135,7 +121,7 @@ def decode_array(payload: bytes):
     """Route a payload to a real decoder by magic bytes: PPM/PGM, BMP, GIF,
     PNG, and JPEG (baseline + progressive, operators/jpegcodec.py) are
     decoded pure-Python in-container; anything else goes to PIL when
-    installed, else raises (plumbing stays testable via fake_decode)."""
+    installed, else raises."""
     if payload is None or len(payload) == 0:
         raise ValueError("empty payload")
     if payload[:2] in (b"P6", b"P5"):
@@ -177,8 +163,8 @@ def decode_array(payload: bytes):
     except ImportError as e:  # pragma: no cover - env lacks codecs
         raise NotImplementedError(
             "payload is not PPM/BMP/JPEG/PNG (in-repo codecs) and Pillow is "
-            "not installed in this container; pass decode_fn=fake_decode or "
-            "install Pillow"
+            "not installed; pass a decode_fn for this format or install "
+            "Pillow"
         ) from e
     import io  # pragma: no cover
 
@@ -291,7 +277,7 @@ def decode_images(
     df: DataFrame,
     payload_col: str = "jpg",
     key_col: str = "__key__",
-    decode_fn: Callable[[bytes], dict] = fake_decode,
+    decode_fn: Callable[[bytes], dict] = real_decode,
     on_error: str = "quarantine",
     timeout_s: float | None = None,
 ) -> DataFrame:
@@ -322,31 +308,11 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def fake_audio_decode(payload: bytes, envelope_bins: int = 8) -> dict:
-    """Deterministic stand-in for an audio codec (ffmpeg/librosa not in this
-    container): derives stable metadata + a loudness envelope from payload
-    bytes. Replace with a real decoder in production."""
-    if payload is None or len(payload) == 0:
-        raise ValueError("empty payload")
-    digest = hashlib.md5(payload).digest()
-    step = max(len(payload) // envelope_bins, 1)
-    env = [
-        sum(payload[i : i + step]) / (255.0 * max(len(payload[i : i + step]), 1))
-        for i in range(0, step * envelope_bins, step)
-    ]
-    return {
-        "sample_rate": 8000 * (1 + digest[0] % 6),
-        "n_channels": 1 + digest[1] % 2,
-        "duration_s": len(payload) / 16000.0,
-        "envelope": env,
-    }
-
-
 def decode_audio(
     df: DataFrame,
     payload_col: str = "wav",
     key_col: str = "__key__",
-    decode_fn: Callable[[bytes], dict] = fake_audio_decode,
+    decode_fn: Callable[[bytes], dict] = real_audio_decode,
     on_error: str = "quarantine",
 ) -> DataFrame:
     """Audio analogue of decode_images: binary column -> typed features via

@@ -55,11 +55,11 @@ def pq_fit(
     first row). Each subspace trains with the deterministic kmeans
     contract (lowest-id init, ``tol=0`` fixed iterations).
 
-    r13 plan shape: all ``m`` subspaces train in ONE fused pass — one
+    Plan shape: all ``m`` subspaces train in ONE fused pass — one
     seed collect and one mapInPandas partial-aggregate job per Lloyd
     iteration, instead of ``m`` independent ``kmeans_fit`` runs (each with
     its own persist, seed collect, and per-iteration job: 4 subspaces cost
-    ~12 serial driver jobs before, 3 after — guide §1.2 step 1, the
+    ~12 serial driver jobs before, 3 after — the
     dominant cost of the PQ queries was the serial job ladder, not
     compute). Arithmetic per subspace is unchanged (same argmin, same
     np.add.at partial accumulation, same driver-side partial reduce in

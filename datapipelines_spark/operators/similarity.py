@@ -235,45 +235,18 @@ def cosine_topk_auto(
     path's fixed overhead measured 10×).
 
     Both probes early-stop via ``limit(n+1).count()``: on a billion-row
-    corpus the router reads a bounded prefix, never a full scan. Probe
-    results are memoized per (session, analyzed plan) so repeated builds pay
-    the probe jobs once. The memo assumes the PLAN determines the count, so
-    a source that grows between builds can keep routing through the
-    broadcast path; a stale probe only mis-ROUTES (both paths return
-    identical results, tie order included — tested)."""
+    corpus the router reads a bounded prefix, never a full scan. Each build
+    runs its probe jobs against the data as it is at build time; both paths
+    return identical results, tie order included (tested)."""
     probe = pair_budget // max(k, 1)
-    n_corpus = _bounded_count(df.select(id_col), probe + 1)
+    n_corpus = df.select(id_col).limit(probe + 1).count()
     if n_corpus <= probe:
-        n_queries = _bounded_count(df.where(query_pred).select(id_col), probe + 1)
+        n_queries = df.where(query_pred).select(id_col).limit(probe + 1).count()
         if n_queries * n_corpus <= pair_budget:
             return cosine_topk(df, vec_col, id_col, query_pred, k)
     return cosine_topk_vectorized(
         df, vec_col, id_col, query_pred, k, max_query_rows=max_query_rows
     )
-
-
-#: (applicationId, analyzed-plan sha256, limit) -> bounded count; see
-#: functions/partitioning.plan_width for the rationale. Keyed on the full
-#: analyzed plan string, not DataFrame.semanticHash() — that is a 32-bit
-#: hash, so distinct plans can collide and return each other's counts.
-_COUNT_CACHE: dict[tuple[str, str, int], int] = {}
-
-
-def _bounded_count(df: DataFrame, limit: int) -> int:
-    from datapipelines_spark.functions.partitioning import plan_fingerprint
-
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        plan_fingerprint(df),
-        limit,
-    )
-    n = _COUNT_CACHE.get(key)
-    if n is None:
-        if len(_COUNT_CACHE) > 4096:
-            _COUNT_CACHE.clear()
-        n = df.limit(limit).count()
-        _COUNT_CACHE[key] = n
-    return n
 
 
 def cosine_topk_chunked(
@@ -423,14 +396,9 @@ def knn_graph(
         # need splitting; only past that bound pay the per-cell counts
         # aggregate (one bounded n_cells-row collect, the centroid-partials
         # precedent) and teach each row its block count via a map literal.
-        # The probe is the memoized early-stopping count: one
-        # bounded job per distinct corpus plan per session instead of a
-        # full count per build — bench repeats and composed callers skip
-        # the job entirely. Memo keyed on (appId, plan fingerprint): an
-        # in-place-growing source under an identical plan would reuse a
-        # stale block-sizing decision (mis-sized blocks, never wrong
-        # results); sources are immutable snapshots here.
-        if _bounded_count(e.select(F.lit(1)), int(cell_block) + 1) <= int(cell_block):
+        # The probe is an early-stopping count: one bounded job per build
+        # that reads at most cell_block + 1 rows, never a full count.
+        if e.select(F.lit(1)).limit(int(cell_block) + 1).count() <= int(cell_block):
             n_blocks = {}
         else:
             cell_counts = {

@@ -58,7 +58,7 @@ def _normalized_vec(df: DataFrame, vec_col: str, normalize: bool) -> DataFrame:
     sqrt and divide are correctly rounded, so normalized values are
     engine-portable bit-for-bit.
 
-    Shape note (r14): the obvious ``transform(v, x -> x / nrm_col)`` is an
+    Shape note: the obvious ``transform(v, x -> x / nrm_col)`` is an
     O(D²)-per-row trap — Catalyst's CollapseProject inlines the single-use
     ``nrm`` alias INTO the lambda body, and higher-order functions never
     codegen, so the whole 64-step norm fold re-ran (interpreted) for every
@@ -188,18 +188,9 @@ def sq8_adc_rerank_topk(
     explicitly to accept the flat scan anyway."""
     if shortlist < top_k:
         raise ValueError("shortlist must be >= top_k")
-    # memoized bounded count (similarity._bounded_count): the guard probe
-    # is one early-stopping job per distinct corpus plan per session, not
-    # one per call — bench repeats and composed pipelines skip it.
-    # ASSUMPTION: the memo key is (appId, plan fingerprint),
-    # so a source that GROWS in-place within one session under an identical
-    # plan (parquet dir appended between calls) would reuse a stale count
-    # and could slip past this cap. Sources here are immutable snapshots
-    # (the bench fixtures and any sane table layout); pass cache=False to
-    # _bounded_count if that ever changes.
-    from datapipelines_spark.operators.similarity import _bounded_count
-
-    n_corpus = _bounded_count(corpus_df.select(F.lit(1)), max_corpus + 1)
+    # early-stopping guard probe: one job per call that reads at most
+    # max_corpus + 1 rows of the corpus as it is now
+    n_corpus = corpus_df.select(F.lit(1)).limit(max_corpus + 1).count()
     if n_corpus > max_corpus:
         raise ValueError(
             f"sq8_adc_rerank_topk: corpus exceeds max_corpus={max_corpus}; "

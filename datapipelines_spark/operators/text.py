@@ -163,15 +163,15 @@ def contamination_overlap(
     """Benchmark decontamination: train docs sharing ≥ ``min_overlap``
     distinct word ``n``-grams with ANY eval document.
 
-    Fused per-document probe (r14, guide §4.1/§2.4): the distinct eval
+    Fused per-document probe: the distinct eval
     n-gram set is collected and broadcast as a Python set (eval sets are
     tiny next to a training corpus — the operator's standing contract),
     and ONE Arrow stage takes each train document's text and returns its
     overlap count directly: shingle construction and set membership fuse
-    into a single crossing that ships one int64 back per document. The
-    r13 shape built the shingle arrays in Arrow, shipped them back,
-    exploded to one row per shingle, hash-joined against a broadcast
-    DataFrame, and shuffled the hits into a per-doc count — same result,
+    into a single crossing that ships one int64 back per document. A
+    row-wise shape would build the shingle arrays in Arrow, ship them back,
+    explode to one row per shingle, hash-join against a broadcast
+    DataFrame, and shuffle the hits into a per-doc count — same result,
     plus an explode, a join and an exchange that all scale with corpus
     size. The training corpus now never shuffles and never ships its
     shingles anywhere. Exact string membership — no hashing, no false
@@ -204,7 +204,7 @@ def contamination_overlap(
         F.size(words) >= n
     )
     # asNondeterministic: the caller filters on the count, and a pushed
-    # predicate would clone the ArrowEvalPython node (guide §4.4) —
+    # predicate would clone the ArrowEvalPython node —
     # every document would shingle twice
     probe = overlap_count.asNondeterministic()(F.col(text_col))
     return base.select(F.col(id_col), probe.alias("n_overlap")).where(
@@ -309,7 +309,7 @@ def bm25_search(
     ``(id, term, tf)`` term-frequency table — the hook for data-derived
     queries (e.g. "the corpus's most frequent terms") to aggregate from
     the index that is already built instead of paying a second tokenize
-    pass over the corpus (guide §2.4/§5; at 100 TB the query derivation
+    pass over the corpus (at 100 TB the query derivation
     must never rescan the collection).
     """
     from datapipelines_spark.functions.caching import managed_persist

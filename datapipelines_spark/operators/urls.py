@@ -282,11 +282,11 @@ def parse_urls(
     empty parts rather than an error; gate upstream if the domain
     requires well-formed URLs.
 
-    IDN normalization shape (r14, guide §4.1): punycode runs over the
+    IDN normalization shape: punycode runs over the
     DISTINCT non-ASCII hosts only — a UDF pass over a near-empty dimension
     — and rejoins as a broadcast hash join, so the corpus-sized pass has
-    NO Python node at all (the r13 hybrid kept ASCII bytes out of Arrow
-    but still walked every row through ArrowEvalPython). The distinct
+    NO Python node at all (a per-row hybrid that keeps ASCII bytes out of
+    Arrow still walks every row through ArrowEvalPython). The distinct
     non-ASCII host set of a crawl is bounded by vocabulary, not corpus
     size (~1-2% of distinct hosts; a few MB broadcast at web scale).
     Streaming plans keep the inline hybrid — a per-row expression — since

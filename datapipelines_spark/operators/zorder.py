@@ -249,7 +249,7 @@ def _with_fst_code(
     fst_key: str,
 ) -> DataFrame:
     """Attach an FST code column with the chain expression MEMOIZED
-    (r14, guide §1.2 applied to the driver): the per-bit-level lookup
+    (functions/caching.py:expr_memo): the per-bit-level lookup
     chain is hundreds of py4j calls per build, but it is a pure function
     of (tables, dims, bits) over column NAMES — the data-dependent
     quantization bounds ride separate placeholder columns so the

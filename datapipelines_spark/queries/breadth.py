@@ -176,7 +176,7 @@ def null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
         # o_totalprice is 2-dp money: decimal addition is order-independent,
         # so the SUM hashes identically against the oracle regardless of
         # partition/summation order (a double SUM at 2.5e9 magnitude differs
-        # in the last ulps between engines — the r3 red).
+        # in the last ulps between engines).
         F.sum(F.coalesce(F.col("maybe_price").cast("decimal(18,2)"), F.lit(0)))
         .cast("double")
         .alias("total_coalesced"),
@@ -397,7 +397,7 @@ def map_type_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("m", "F").alias("n_final"),
         F.element_at("m", "O").alias("n_open"),
         # joined to a scalar string: the driver canonicalizer sorts rows via
-        # pandas, which cannot factorize list cells (r3 red) — driver-checked
+        # pandas, which cannot factorize list cells — driver-checked
         # queries must emit scalar columns only
         F.array_join(F.array_sort(F.map_keys("m")), ",").alias("statuses"),
     ).orderBy("o_orderpriority")

@@ -1268,7 +1268,7 @@ def _logreg_oracle_sql(buckets: int, epochs: int, lr: float) -> str:
     count, so every gradient step is string-identical SQL — the BPE/nbayes
     replay precedent extended to an iterative model.
 
-    Portability (the round-9 driver red): the replay surface is BIGINT
+    Portability: the replay surface is BIGINT
     micro-unit weights + the division-only rational sigmoid
     0.5 + z/(2*(1+|z|)) + floor-scaled quantization — every double
     primitive (abs/add/mul/div/floor) is IEEE-754 correctly rounded, so no
@@ -1351,8 +1351,8 @@ def quality_linear_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigmoid, and quantization is floor-scaled — every double primitive in
     the loop is IEEE-correctly-rounded, so the oracle (generated with the
     SAME epoch unrolling) replays training bit-identically on any
-    conforming engine, independent of libm build (the r9 driver red was
-    exp()'s 1-ulp cross-build license)."""
+    conforming engine, independent of libm build (exp() may differ by
+    1 ulp across builds)."""
     from datapipelines_spark.operators.linear import (
         hashed_ngram_features,
         logreg_score,

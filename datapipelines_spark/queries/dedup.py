@@ -918,7 +918,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged feeds both the corpus and batch branches, each of which scans
     # it 2-3 times (md5 table, signature table, final join): persist the
     # planted fixture once instead of re-running its 3-scan self-join plan
-    # per consumer (r13, guide §5)
+    # per consumer
     staged = managed_persist(staged_dup_docs(spark, sf_dir))
     corpus = staged.where(F.col("doc_id") % 4 != 0)
     batch = staged.where(F.col("doc_id") % 4 == 0)

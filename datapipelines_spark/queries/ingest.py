@@ -158,7 +158,7 @@ def corpus_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crawl/gate branch; the quota-gated batch feeds the verdict operator's
     # exact/signature stages AND the final join. Persist both so the
     # staged fixture's 3-scan self-join plan and the URL-parse + quota
-    # window run once, not once per consumer (guide §5; without the
+    # window run once, not once per consumer (without the
     # persists the physical plan re-derives each of them ~5x)
     staged = managed_persist(staged_dup_docs(spark, sf_dir))
     corpus = staged.where(F.col("doc_id") % 4 != 0)
@@ -375,7 +375,7 @@ def stream_ingest_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_ingest_asof_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME TRAVEL over the streaming ingest state (the audit face of the
-    r13 manifest protocol): run the full 4-tick replay, then read the
+    manifest protocol): run the full 4-tick replay, then read the
     verdict log AS OF epoch 1 — the exact decision table after the first
     TWO ticks committed, reconstructed from the manifest's epoch deltas
     without replaying anything.

@@ -341,12 +341,11 @@ def dedup_recall_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
             aug, text_col="text", id_col="doc_id", n=3, threshold=0.5
         ).select("doc_a", "doc_b")
     )
-    # r13 plan shape: ONE signature pass and ONE candidate computation per
+    # Plan shape: ONE signature pass and ONE candidate computation per
     # banding config, shared by the bands arm and the verified arm — the
     # previous per-arm operator calls re-derived the Arrow shingle+minhash
-    # pipeline four times and the band buckets twice per config (guide §5:
-    # persist what is reused; outputs are identical, candidates are a
-    # deterministic set).
+    # pipeline four times and the band buckets twice per config (outputs
+    # are identical, candidates are a deterministic set).
     sig_docs = {
         cfg: managed_persist(
             _docs_with_signatures(aug, "text", "doc_id", cfg)
@@ -424,7 +423,7 @@ def sim_recall_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
     specs = _family_specs()
 
     # exact feeds the hits join AND the n_queries aggregate: persist, or
-    # the brute-force ground-truth pipeline executes twice (r13, guide §5)
+    # the brute-force ground-truth pipeline executes twice
     def _build_exact() -> DataFrame:
         return managed_persist(
             _REGISTRY["sim_topk_bruteforce"]
@@ -433,7 +432,7 @@ def sim_recall_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # The four IVF probe arms share ONE scored candidate table
-    # (ivf_topk_multiprobe, r13): identical pairs to the per-arm
+    # (ivf_topk_multiprobe): identical pairs to the per-arm
     # ivf_topk_probe builders the oracle replays, one scoring pass.
     def _build_ivf() -> dict[int, DataFrame]:
         return ivf_topk_multiprobe(spark, sf_dir, _IVF_PROBES)
@@ -442,7 +441,7 @@ def sim_recall_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BLOCKING driver jobs while its plan is BUILT (the exact router's
     # count probes, two sq8_fit min/max collects, pq_fit's fused Lloyd
     # partials, the query-code collect) — ~8 serial jobs. Build the arms
-    # from a thread pool (guide §2.6: overlap independent jobs) so those
+    # from a thread pool so those
     # jobs overlap; the assembled plan is IDENTICAL (same spec order, same
     # union, so the physical plans diff empty), only build latency changes.
     # Measured: 9.92 -> 6.91 s median build, interleaved same-JVM A/B,

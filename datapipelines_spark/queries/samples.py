@@ -233,7 +233,7 @@ def mapper_einops_reduce_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         sizes={"g": 8, "d": 8}, reduction="sum",
     )
     # exploded to scalar (vec_id, group_idx, group_sum) rows: the driver
-    # canonicalizer cannot hash array-typed cells (r3 red)
+    # canonicalizer cannot hash array-typed cells
     return (
         e.select("vec_id", F.posexplode(reduced).alias("group_idx", "group_sum"))
         .select(

@@ -284,7 +284,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The query terms are derived from the operator's own persisted
     ``(doc_id, term, tf)`` index instead of a second tokenize pass over the
-    corpus (r14, guide §5): the en-slice token count of a term is exactly
+    corpus: the en-slice token count of a term is exactly
     ``SUM(tf)`` over en doc_ids, so the before-plan's second scan→explode→
     aggregate subtree collapses to a broadcast semi-join on the index."""
     d = load_table(spark, sf_dir, "documents")
@@ -493,12 +493,12 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bigram-count table itself (vocabulary-sized partial aggregates over
     # bc, never a second pass over the corpus) — the textbook bigram-PMI
     # sample space, and at scale the difference between scanning 100 TB
-    # once or twice. The persist is what MAKES it one scan (r14): bc has
+    # once or twice. The persist is what MAKES it one scan: bc has
     # four consumers (ma, mb, tot, the scored join) and the static plan
     # duplicated the whole scan→explode→aggregate subtree into each —
-    # the r14 before-capture shows 4 parquet scans and 4 Generate nodes,
+    # the plan without it shows 4 parquet scans and 4 Generate nodes,
     # and the 8-core bench beat the 32-core one (0.36 ratio) because the
-    # duplicated explodes dominated. Guide §5: persist what is reused.
+    # duplicated explodes dominated.
     from datapipelines_spark.functions.caching import managed_persist
 
     bc = managed_persist(bi.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab")))

@@ -163,7 +163,7 @@ def _planted_urls(
 def url_parse_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL parse + registrable domain + blocklist gate
     (operators/urls.py): every planted URL — userinfo prefixes, :8080
-    ports, mixed-case hosts, compound co.uk suffixes, and (since r13)
+    ports, mixed-case hosts, compound co.uk suffixes, and
     the unicode and punycode spellings of one internationalized domain —
     decomposes into (scheme, host, domain, path, query) with the
     blocklist verdict on the REGISTRABLE domain, so tracker.spam.net and

@@ -295,12 +295,12 @@ def ivf_topk_probe(spark: SparkSession, sf_dir: str, probes: int = 2) -> DataFra
 def ivf_topk_multiprobe(
     spark: SparkSession, sf_dir: str, probes: tuple[int, ...] = (1, 2, 4, 8)
 ) -> dict[int, DataFrame]:
-    """Every probe arm of ``ivf_topk_probe`` from ONE shared scored table
-    (r13, guide §1.2 "the distributed algorithm"): the arms differ only in
-    how many of each query's ranked cells are probed, and the probed-cell
-    sets are NESTED (arm p's candidates ⊂ arm max(probes)'s), so the exact
-    scoring join runs ONCE at the largest probe count with each
-    candidate's probe rank attached, and every smaller arm is a filter +
+    """Every probe arm of ``ivf_topk_probe`` from ONE shared scored table:
+    the arms differ only in how many of each query's ranked cells are
+    probed, and the probed-cell sets are NESTED (arm p's candidates ⊂ arm
+    max(probes)'s), so the exact scoring join runs ONCE at the largest
+    probe count with each candidate's probe rank attached, and every
+    smaller arm is a filter +
     its own top-5 window over the persisted scored table. Bit-identical to
     per-arm ``ivf_topk_probe`` calls: the candidate set per arm is the
     same set, ``cos_raw`` is the same sequential-fold expression over the
@@ -381,7 +381,7 @@ def ivf_topk_multiprobe(
 
 #: The probes -> recall@5 curve MEASURED by sim_recall_harness
 #: (queries/recall.py) on the sf0.01 embeddings fixture, in basis points
-#: (driver-verified integers, r13). probes=8 probes every cell of the
+#: (driver-verified integers). probes=8 probes every cell of the
 #: 8-cell index, so 10000 bp is the exhaustive anchor, not an estimate.
 #: Unlike LSH banding there is no closed form for the IVF curve — recall
 #: depends on how the data clusters around the centroids — so the
@@ -488,7 +488,7 @@ def kmeans_centroids_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cross-join argmin with low-index tiebreak + per-dim AVG) and compares
     round-2 cluster sizes + final centroids to 6 dp, exploded to scalar
     (cluster, n_members, dim, value) rows — the driver canonicalizer cannot
-    hash array-typed cells (r3 red)."""
+    hash array-typed cells."""
     import numpy as np
 
     from datapipelines_spark.operators.clustering import kmeans_assign, kmeans_fit

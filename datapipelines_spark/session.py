@@ -300,7 +300,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32);
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, and without that
+    variable to one thread per CPU this process may run on;
     ``shuffle_partitions`` defaults to the same width so local shuffles use
     every core without oversplitting tiny test data (AQE coalesces further).
     A new driver JVM launches from this JDK's class-data archive of the
@@ -308,7 +309,7 @@ def get_spark(
     """
     if shuffle_partitions is not None and shuffle_partitions < 1:
         raise ValueError(f"shuffle_partitions must be >= 1, got {shuffle_partitions}")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)

@@ -34,7 +34,7 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 #: (applicationId, abs sf_dir, table) -> resolved DataFrame. ``spark.read
 #: .parquet`` re-lists the path and re-reads footers for schema inference on
 #: EVERY call — ~30-60 ms of driver-side fixed cost per table per query
-#: build, which dominated sub-second bench queries (r4 perf flags). A real
+#: build, which dominated sub-second bench queries. A real
 #: deployment resolves a table once per session through a metastore catalog;
 #: this memo is that, scoped per live session so a restarted session (new
 #: applicationId) re-resolves. Fixture dirs are immutable, so no staleness.

@@ -12,9 +12,8 @@ an immutable per-epoch DELTA under a MANIFEST — the merge-on-read
 discipline of sinks/upsert.py applied to ingest state. Per tick the sink
 WRITES O(batch): only the tick's admitted docs and verdict rows land on
 disk; the standing index and the cumulative verdict log are never
-rewritten (the r12 design re-wrote both wholesale each epoch —
-O(total admitted) I/O per tick, the one shape that was not yet the
-100 TB shape).
+rewritten (re-writing both wholesale each epoch would cost
+O(total admitted) I/O per tick, which does not hold at 100 TB).
 
 Commit protocol: the tick's delta directory is written first
 (``deltas/e=E/index`` + ``deltas/e=E/verdicts``), then ONE atomic
@@ -346,7 +345,7 @@ def ingest_dedup_sink(
     root = state_dir.rstrip("/")
     config = _resolve_config(config, threshold, target_recall)
 
-    # Standing-index artifacts (r13): the corpus is immutable for the life
+    # Standing-index artifacts: the corpus is immutable for the life
     # of the sink, so its md5 table and signature table are computed once,
     # persisted, and reused by EVERY tick — previously each tick re-ran
     # both corpus passes (the Arrow shingle+minhash scan being the

@@ -116,11 +116,11 @@ def check_numeric_kinds(
 def check_scalar_columns(spark_df: DataFrame) -> str | None:
     """Driver-faithful type gate: the driver canonicalizer sorts rows via
     pandas ``sort_values``, which raises ``TypeError: unhashable type: 'list'``
-    on array/map-typed cells (the r3 reds: map_type_status_counts,
-    mapper_einops_reduce_groups, kmeans_centroids_2iter). Oracle-checked
-    queries must therefore emit scalar columns only — stringify with
-    array_join/concat_ws or explode to rows. Return an error string naming
-    the offending columns, else None."""
+    on array/map-typed cells (as map_type_status_counts,
+    mapper_einops_reduce_groups and kmeans_centroids_2iter once did).
+    Oracle-checked queries must therefore emit scalar columns only —
+    stringify with array_join/concat_ws or explode to rows. Return an error
+    string naming the offending columns, else None."""
     from pyspark.sql import types as T
 
     bad = [

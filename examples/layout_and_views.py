@@ -1,5 +1,4 @@
-"""Warehouse layout + live views on plain parquet: the r7 additions as one
-workflow.
+"""Warehouse layout + live views on plain parquet as one workflow.
 
 z-order the fact table (file skipping on two dimensions) -> build a
 materialized monthly rollup as mergeable state -> apply a correction delta

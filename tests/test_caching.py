@@ -33,12 +33,38 @@ def test_release_unpersists_everything(spark):
     assert b.storageLevel == StorageLevel.NONE
 
 
+def test_rebuilt_plan_takes_one_slot(spark):
+    release_persists()
+    a = managed_persist(spark.range(10).selectExpr("id * 2 AS x"))
+    b = managed_persist(spark.range(10).selectExpr("id * 2 AS x"))
+    assert _live_count() == 1
+    assert a.storageLevel != StorageLevel.NONE
+    release_persists()
+    assert b.storageLevel == StorageLevel.NONE
+
+
+def test_same_schema_datasets_register_separately(spark, tmp_path):
+    """Two parquet dirs with one schema have the same plan string; each
+    persist is its own cache entry and release must drop both."""
+    dir_a, dir_b = str(tmp_path / "a"), str(tmp_path / "b")
+    spark.range(10).write.parquet(dir_a)
+    spark.range(1000).write.parquet(dir_b)
+    release_persists()
+    a = managed_persist(spark.read.parquet(dir_a).selectExpr("1 AS one"))
+    b = managed_persist(spark.read.parquet(dir_b).selectExpr("1 AS one"))
+    assert (a.count(), b.count()) == (10, 1000)
+    assert _live_count() == 2
+    release_persists()
+    assert a.storageLevel == StorageLevel.NONE
+    assert b.storageLevel == StorageLevel.NONE
+
+
 def test_concurrent_registration_keeps_registry_paired(spark):
     """Builders register persists from concurrent driver threads
-    (queries/recall.py builds its family arms from a thread pool, guide
-    §2.6): racing registrations — including idempotent re-registrations of
-    the same plan — must leave _LIVE/_KEYS paired, bounded, and every
-    returned DataFrame usable."""
+    (queries/recall.py builds its family arms from a thread pool): racing
+    registrations — including idempotent re-registrations of the same plan
+    — must leave the registry bounded and every returned DataFrame
+    usable."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -58,10 +84,9 @@ def test_concurrent_registration_keeps_registry_paired(spark):
     assert all(
         c == 1000 or c > 1000 for c in counts
     )
-    assert len(caching._LIVE) == len(caching._KEYS)
     assert len(caching._LIVE) <= caching._MAX_LIVE
     release_persists()
-    assert len(caching._LIVE) == len(caching._KEYS) == 0
+    assert len(caching._LIVE) == 0
 
 
 def test_eviction_only_costs_recompute(spark):

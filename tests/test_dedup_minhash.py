@@ -157,7 +157,7 @@ def test_incremental_verdicts_precedence_and_match_ids(spark):
 
 
 def test_band_struct_expression_memoized_per_config(spark):
-    """r14 plan-build memo: the banding expression tree is a pure function
+    """Plan-build memo: the banding expression tree is a pure function
     of (num_hashes, bands) over fixed column names, so repeated builds in
     one application return the SAME Column object (thousands of py4j
     round trips per verdict build collapse to a dict hit), while a

@@ -20,6 +20,7 @@ from datapipelines_spark.operators.multimodal import decode_images
 from datapipelines_spark.operators.transforms import KeyFilter, SizeFilter
 from datapipelines_spark.sinks.loader import create_loader
 from datapipelines_spark.sources.shards import read_tar_samples
+from tests.codec_stand_ins import fake_decode
 
 
 @pytest.fixture()
@@ -93,7 +94,7 @@ def test_full_image_pipeline(spark, image_shards):
     assert all(geo[k]["crop_top"] == again[k]["crop_top"] for k in geo)
 
     # 6. multimodal decode stub (M4): bytes -> feature columns, no errors
-    feats = decode_images(df, payload_col="jpg", key_col="__key__")
+    feats = decode_images(df, payload_col="jpg", key_col="__key__", decode_fn=fake_decode)
     assert feats.where(F.col("decode_error").isNotNull()).count() == 0
 
     # 7. sink (B1-B3): batched dict-of-columns

@@ -129,7 +129,7 @@ def test_trainer_matches_pure_python_replay(spark):
 
 
 def test_replay_surface_has_no_exp_or_round(spark):
-    """Regression guard for the r9 driver red: neither the trainer nor the
+    """Regression guard: neither the trainer nor the
     generated oracle may reintroduce exp() or round() on doubles — the two
     primitives whose cross-build variance broke the digit-exact replay."""
     import inspect

@@ -97,7 +97,7 @@ def test_winnow_guarantee_shared_run_yields_shared_fingerprint(spark, seed, run_
 
 
 def test_winnow_fingerprints_plan_is_row_local(spark):
-    """r7 rewrite contract: fingerprint SELECTION is row-local array math —
+    """Fingerprint SELECTION is row-local array math —
     no window function, no sort, no per-doc hash shuffle, no Python. (A
     ROUND-ROBIN widening exchange may appear on narrow sources via
     parallelize_small; that is a parallelism floor, not data movement
@@ -116,12 +116,12 @@ def test_winnow_fingerprints_plan_is_row_local(spark):
 
 
 def test_overlap_hot_fingerprint_dropped_before_join(spark):
-    """r14 hot-key guard: a boilerplate fingerprint held by more than
+    """Hot-key guard: a boilerplate fingerprint held by more than
     ``max_fp_docs`` documents is removed by a broadcast anti-join against a
     partially-aggregated hot-key set BEFORE the inverted index is
     positioned on fp — no task ever buffers an uncapped key's postings
-    (the r13 shape counted inside a Window over the fp partition, which
-    shipped every occurrence of the hot key to one task first)."""
+    (a count inside a Window over the fp partition would ship every
+    occurrence of the hot key to one task first)."""
     boiler = "x1 x2 x3 x4 x5 x6"  # identical in every doc -> hot bucket
     priv = "p1 p2 p3 p4 p5 p6"  # shared by exactly two docs -> kept
     rows = [(i, boiler) for i in range(1, 7)]

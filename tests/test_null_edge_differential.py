@@ -5,7 +5,7 @@ NULL text / lang / source / n_chars, empty and whitespace-only texts,
 multi-byte scripts, embedded tabs/newlines, NULL ts / event_type / value /
 user_id, duplicate timestamps, NULL embeddings, zero vectors, NULL labels.
 
-This audit found (r8): an ANSI 1/0 crash in the quality score, md5('')
+This audit found: an ANSI 1/0 crash in the quality score, md5('')
 fingerprints for NULL texts, NULLS FIRST/LAST rank shifts in winsorize /
 percent-rank / MAD / moving averages, XML whitespace trimming, to_json
 dropping null fields, engine-vs-oracle row contracts on unnest-dropped

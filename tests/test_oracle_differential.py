@@ -25,8 +25,8 @@ def test_every_query_has_an_oracle():
 def test_list_valued_query_fails_gate_loudly(spark):
     """A query emitting an array column must be rejected by the local gate
     BEFORE any value compare — the driver canonicalizer dies on list cells
-    (r3: map_type_status_counts / einops / kmeans), so local green must
-    imply driver green."""
+    (as map_type_status_counts / einops / kmeans once did), so local green
+    must imply driver green."""
     import pyspark.sql.functions as F
 
     from datapipelines_spark.testing import check_scalar_columns

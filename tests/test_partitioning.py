@@ -1,56 +1,7 @@
-"""plan_fingerprint / plan_width / parallelize_small (functions/partitioning.py).
+"""parallelize_small (functions/partitioning.py): a partition-count floor
+that never coalesces and passes streaming frames through."""
 
-The fingerprint must be stable across rebuilds of the same query (exprIds are
-reallocated per build — canonicalization strips them) and must distinguish
-wide plans whose treeStrings are elided past maxToStringFields."""
-
-from pyspark.sql import functions as F
-
-from datapipelines_spark.functions.partitioning import (
-    parallelize_small,
-    plan_fingerprint,
-    plan_width,
-)
-
-
-def _build(spark, flip=False):
-    df = spark.range(100).withColumn("doc_id", F.col("id") * 2)
-    return df.filter(F.col("doc_id") > (10 if not flip else 20)).select(
-        "id", "doc_id"
-    )
-
-
-def test_fingerprint_stable_across_rebuilds(spark):
-    # Two independent builds allocate fresh exprIds; canonicalized plans match.
-    assert plan_fingerprint(_build(spark)) == plan_fingerprint(_build(spark))
-
-
-def test_fingerprint_distinguishes_plans(spark):
-    assert plan_fingerprint(_build(spark)) != plan_fingerprint(
-        _build(spark, flip=True)
-    )
-
-
-def test_fingerprint_distinguishes_wide_plans_past_tostring_elision(spark):
-    # 40 columns > spark.sql.debug.maxToStringFields (25): the treeString
-    # elides the tail, so the schema discriminator must separate these.
-    base = spark.range(10)
-    wide_a = base.select("id", *[F.lit(i).alias(f"c{i}") for i in range(40)])
-    wide_b = base.select(
-        "id", *[F.lit(i).alias(f"c{i}") for i in range(39)], F.lit(0).alias("zz")
-    )
-    assert plan_fingerprint(wide_a) != plan_fingerprint(wide_b)
-
-
-def test_plan_width_memoizes_across_rebuilds(spark):
-    from datapipelines_spark.functions import partitioning as P
-
-    P._WIDTH_CACHE.clear()
-    w1 = plan_width(_build(spark))
-    assert len(P._WIDTH_CACHE) == 1
-    w2 = plan_width(_build(spark))  # rebuild: same fingerprint, cache hit
-    assert w2 == w1
-    assert len(P._WIDTH_CACHE) == 1
+from datapipelines_spark.functions.partitioning import parallelize_small
 
 
 def test_parallelize_small_is_floor_not_coalesce(spark):
@@ -58,6 +9,20 @@ def test_parallelize_small_is_floor_not_coalesce(spark):
     widened = parallelize_small(narrow, min_partitions=4)
     assert widened.rdd.getNumPartitions() >= 4
     wide = spark.range(100).repartition(8)
+    assert parallelize_small(wide, min_partitions=4) is wide
+
+
+def test_parallelize_small_probes_each_input(spark, tmp_path):
+    """A narrow and a wide parquet dir with one schema have the same plan
+    string; the wide one must be probed itself and returned unchanged."""
+    narrow_dir, wide_dir = str(tmp_path / "narrow"), str(tmp_path / "wide")
+    spark.range(10).coalesce(1).write.parquet(narrow_dir)
+    spark.range(80).repartition(8).write.parquet(wide_dir)
+    narrow = spark.read.parquet(narrow_dir)
+    assert narrow.rdd.getNumPartitions() == 1
+    assert parallelize_small(narrow, min_partitions=4) is not narrow
+    wide = spark.read.parquet(wide_dir)
+    assert wide.rdd.getNumPartitions() >= 4
     assert parallelize_small(wide, min_partitions=4) is wide
 
 

@@ -387,31 +387,34 @@ class TestMixing:
 class TestMultimodal:
     def test_decode_images_quarantine(self, spark):
         from datapipelines_spark.operators.multimodal import decode_images
+        from tests.codec_stand_ins import fake_decode
 
         df = spark.createDataFrame(
             [("k1", b"realbytes"), ("k2", None), ("k3", b"")],
             "`__key__` string, jpg binary",
         )
-        out = {r["__key__"]: r for r in decode_images(df).collect()}
+        out = {r["__key__"]: r for r in decode_images(df, decode_fn=fake_decode).collect()}
         assert out["k1"]["decode_error"] is None and out["k1"]["width"] >= 16
         assert out["k2"]["decode_error"] is not None
         assert out["k3"]["decode_error"] is not None
 
     def test_decode_images_skip_mode(self, spark):
         from datapipelines_spark.operators.multimodal import decode_images
+        from tests.codec_stand_ins import fake_decode
 
         df = spark.createDataFrame(
             [("k1", b"realbytes"), ("k2", None)], "`__key__` string, jpg binary"
         )
-        out = decode_images(df, on_error="skip").collect()
+        out = decode_images(df, decode_fn=fake_decode, on_error="skip").collect()
         assert [r["__key__"] for r in out] == ["k1"]
 
     def test_decode_images_fail_mode(self, spark):
         from datapipelines_spark.operators.multimodal import decode_images
+        from tests.codec_stand_ins import fake_decode
 
         df = spark.createDataFrame([("k2", None)], "`__key__` string, jpg binary")
         with pytest.raises(Exception):
-            decode_images(df, on_error="fail").collect()
+            decode_images(df, decode_fn=fake_decode, on_error="fail").collect()
 
 
 class TestJoins:

@@ -92,7 +92,7 @@ def test_q21_single_fact_scan(spark):
 
 
 def test_decontaminate_fused_probe_never_shuffles_train(spark):
-    """r14 fused shape: the eval n-gram set rides a Python broadcast into
+    """Fused shape: the eval n-gram set rides a Python broadcast into
     ONE Arrow probe per training document — no join, no per-shingle
     explode, and no aggregation exchange on the training side (the only
     exchanges are input widening and the presentation sort)."""

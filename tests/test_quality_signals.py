@@ -1,4 +1,4 @@
-"""Compression-ratio text signal and audio spectral features — the two r5
+"""Compression-ratio text signal and audio spectral features — two
 non-relational quality operators (stdlib zlib / numpy FFT in Arrow stages)."""
 
 import numpy as np

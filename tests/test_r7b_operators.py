@@ -1,5 +1,5 @@
-"""Boundary and brute-force-parity tests for the second r7 operator batch:
-token-budget selection, winsorization, repeated-n-gram spans, SemDeDup."""
+"""Boundary and brute-force-parity tests for token-budget selection,
+winsorization, repeated-n-gram spans, SemDeDup."""
 
 import random
 

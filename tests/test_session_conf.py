@@ -155,3 +155,24 @@ def test_shuffle_partitions_below_one_raises_before_launch(monkeypatch, shuffle_
     monkeypatch.setattr(session, "_launch", no_launch)
     with pytest.raises(ValueError, match="shuffle_partitions"):
         session.get_spark(shuffle_partitions=shuffle_partitions)
+
+
+def test_default_width_is_this_process_cpus(monkeypatch):
+    from types import SimpleNamespace
+
+    from datapipelines_spark import session
+
+    launched = {}
+
+    def capture(app_name, master, conf, launch):
+        launched.update(master=master, conf=conf)
+        return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session, "_archive_launch", lambda extra_class_path: None)
+    monkeypatch.setattr(session, "_launch", capture)
+    session.get_spark()
+    cpus = len(os.sched_getaffinity(0))
+    assert launched["master"] == f"local[{cpus}]"
+    assert launched["conf"]["spark.default.parallelism"] == str(cpus)
+    assert launched["conf"]["spark.sql.shuffle.partitions"] == str(cpus)

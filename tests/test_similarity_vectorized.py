@@ -81,8 +81,8 @@ def test_chunked_equals_vectorized(spark, sf_dir):
 
 def test_auto_router_matches_both_paths(spark, sf_dir):
     """cosine_topk_auto must return identical results whichever path the
-    pair-budget routes to (r3 perf fix: small corpora skip the BLAS
-    worker-launch overhead)."""
+    pair-budget routes to (small corpora skip the BLAS worker-launch
+    overhead)."""
     import pyspark.sql.functions as F
 
     from datapipelines_spark.operators.similarity import (

@@ -192,9 +192,23 @@ def test_guards(spark):
         )
 
 
+def test_max_corpus_guard_counts_each_corpus(spark):
+    """Two corpora with one schema have the same plan string; the guard must
+    still count the second one rather than reuse the first one's count."""
+    small = _df(spark, _vectors(n=5))
+    sq8_adc_rerank_topk(
+        small, small, "embedding", "vec_id", shortlist=5, top_k=5, max_corpus=9
+    )
+    big = _df(spark, _vectors(n=120))
+    with pytest.raises(ValueError, match="max_corpus"):
+        sq8_adc_rerank_topk(
+            big, big, "embedding", "vec_id", shortlist=5, top_k=5, max_corpus=9
+        )
+
+
 def test_normalized_vec_edge_values_match_transform_shape(spark):
     """_normalized_vec switched from transform-with-inlined-norm (an
-    O(D²)-per-row CollapseProject trap, r14) to zip_with/array_repeat —
+    O(D²)-per-row CollapseProject trap) to zip_with/array_repeat —
     per-position division is value-identical; pin the edges where the two
     shapes could conceivably diverge: NULL vector, empty vector, NULL
     element, zero-norm vector."""

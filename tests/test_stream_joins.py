@@ -43,15 +43,16 @@ def test_stream_static_dimension_join(spark, sf_dir):
 
 def test_decode_audio_stub(spark):
     from datapipelines_spark.operators.multimodal import decode_audio
+    from tests.codec_stand_ins import fake_audio_decode
 
     df = spark.createDataFrame(
         [("a1", b"fakewavbytes" * 100), ("a2", None)], "`__key__` string, wav binary"
     )
-    out = {r["__key__"]: r for r in decode_audio(df).collect()}
+    out = {r["__key__"]: r for r in decode_audio(df, decode_fn=fake_audio_decode).collect()}
     assert out["a1"]["decode_error"] is None
     assert len(out["a1"]["envelope"]) == 8
     assert out["a1"]["duration_s"] == pytest.approx(1200 / 16000.0)
     assert out["a2"]["decode_error"] is not None
     # determinism: same payload -> same features
-    out2 = {r["__key__"]: r for r in decode_audio(df).collect()}
+    out2 = {r["__key__"]: r for r in decode_audio(df, decode_fn=fake_audio_decode).collect()}
     assert out["a1"]["envelope"] == out2["a1"]["envelope"]

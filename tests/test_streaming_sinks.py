@@ -54,7 +54,7 @@ def test_rate_source_smoke(spark):
         import time
 
         # bounded poll, not a fixed sleep: under load the first micro-batch
-        # can take >4 s to land (r3 flake); deadline generous, exit early
+        # can take >4 s to land; deadline generous, exit early
         deadline = time.monotonic() + 60
         rows = 0
         while time.monotonic() < deadline:
