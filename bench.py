@@ -35,7 +35,7 @@ median-of-repeats protocol, Spark only) against a factor×-replicated fixture
 (datapipelines_spark/benchscale.py) under the "scaled" JSON key — at sf0.1
 many per-query numbers sit at Spark's ~0.5 s scheduler floor, where a 0.15 s
 swing reads as a 13x "regression"; at 4× the floor is amortized and
-round-over-round comparisons are meaningful. Disable with
+run-over-run comparisons are meaningful. Disable with
 SPARK_GRAFT_BENCH_SCALED=0.
 """
 
@@ -83,15 +83,15 @@ HEADLINE = [
     "text_tfidf_top_terms",
     "decontaminate_ngram_overlap",
     "pack_sequences_budget",
-    # r5 additions: learned quality gate, ranked retrieval, graph analytics
+    # learned quality gate, ranked retrieval, graph analytics
     "quality_nb_classifier",
     "text_bm25_search",
     "graph_pagerank_trade",
-    # --- r6 additions below are NOT in R5_COMPARABLE: the aggregate ratio
+    # --- entries below are NOT in R5_COMPARABLE: the aggregate ratio
     # moves when sub-second queries join the set (composition, not
-    # regression) — the "r5_subset" JSON block keeps a round-over-round
-    # comparable number on the frozen 34-query set ---
-    # r6 additions: Bloom decontamination, perplexity filter, winnowing,
+    # regression) — the "r5_subset" JSON block keeps a number comparable
+    # across catalog growth on the frozen 34-query set ---
+    # Bloom decontamination, perplexity filter, winnowing,
     # heavy hitters, weighted sampling, MOR upsert, constraint gate — all
     # with comparable real work on the oracle side (the invariant-style
     # boolean queries stay out: their oracles are trivial SELECT TRUEs)
@@ -102,8 +102,8 @@ HEADLINE = [
     "sample_weighted_topk",
     "upsert_orders_snapshot",
     "quality_constraint_checks",
-    # r7 additions (same rule: real work on the oracle side; the
-    # invariant-boolean text_bpe_tokenize stays out): RAG chunking,
+    # same rule (real work on the oracle side; the invariant-boolean
+    # text_bpe_tokenize stays out): RAG chunking,
     # Z-order codes, incremental view maintenance, MOR version diff,
     # cross-corpus minhash decontamination, PQ shortlist+rerank
     "chunk_fixed_overlap",
@@ -121,7 +121,7 @@ HEADLINE = [
     "scd2_orders_history",
     "sim_hard_negatives",
     "text_pmi_collocations",
-    # r9 additions (same rule): variable-length substring dedup (spans +
+    # same rule: variable-length substring dedup (spans +
     # applied removal), in-plan logistic-regression quality gate, MOR
     # schema evolution + vacuum, mutual kNN graph (+ its component
     # closure), 2-D and 3-D Hilbert layout codes, exact incremental
@@ -135,7 +135,7 @@ HEADLINE = [
     "layout_hilbert_orders",
     "layout_hilbert3_orders",
     "incremental_distinct_customers",
-    # r10 additions (same rule): the composed cleaning pipeline with the
+    # same rule: the composed cleaning pipeline with the
     # Lee-et-al substring cut, the layout advisor (both curves + rollup in
     # one pass), URL ops, and incremental MIN/MAX. The streaming replay
     # queries stay out, as all stream_*_replay always have: their wall is
@@ -150,8 +150,8 @@ HEADLINE = [
     "incremental_minmax_order_price",
     "c4_line_clean_documents",
     "dedup_normalized_exact",
-    # late-r10 additions (same rule; stream_incremental_minmax_replay stays
-    # out with the other stream_*_replay): the theta distinct sketch, SQ8
+    # same rule (stream_incremental_minmax_replay stays out with the other
+    # stream_*_replay): the theta distinct sketch, SQ8
     # quantized ANN, and ingest-time incremental dedup
     "agg_theta_sketch_distinct",
     "sim_sq8_rerank_topk",
@@ -159,7 +159,7 @@ HEADLINE = [
     "layout_hilbert4_orders",
     "sim_ivf_sq8_topk",
     "multimodal_qoi_decode",
-    # r11 additions (same rule): the composed URL-governance + incremental
+    # same rule: the composed URL-governance + incremental
     # dedup ingest tick, and the ANN recall harness (4 family pipelines +
     # exact ground truth in one plan — the most join-heavy query in the
     # catalog, a real stressor for both engines)
@@ -168,8 +168,7 @@ HEADLINE = [
     "dedup_recall_harness",
 ]
 
-# HEADLINE ADMISSION RULE (VERDICT r12 "What's wrong" #3 — one rule,
-# stated once, applied consistently):
+# HEADLINE ADMISSION RULE (one rule, stated once, applied consistently):
 #
 #   A query is EXCLUDED from the headline iff its PER-RUN wall is
 #   dominated by a physical commit protocol rather than query execution —
@@ -207,15 +206,15 @@ def _non_headline(names: list[str]) -> list[str]:
 #: absolute 1 s of Spark wall time is a regression worth naming even when
 #: the aggregate gate passes. The bar is on SPARK time, not oracle time:
 #: an oracle-side floor (>=50 ms) let a 23x ratio escape unflagged when the
-#: oracle took 49.6 ms (VERDICT r5 #1); an absolute Spark bar can't be
+#: oracle took 49.6 ms; an absolute Spark bar can't be
 #: dodged by a fast oracle, while still ignoring sub-second queries pinned
 #: at the ~0.5 s scheduler floor where ratios are meaningless.
 SLOW_RATIO = 10.0
 SLOW_MIN_SPARK_SEC = 1.0
 
-#: The frozen r5 headline set (first 34 entries): the aggregate ratio over
-#: exactly these queries is emitted as "r5_subset" so round-over-round
-#: comparisons are composition-independent.
+#: The frozen headline set (first 34 entries): the aggregate ratio over
+#: exactly these queries is emitted as "r5_subset", so comparisons across
+#: catalog growth are composition-independent.
 R5_COMPARABLE = 34
 
 
@@ -224,7 +223,7 @@ def _median(xs: list[float]) -> float:
 
 
 def _growth_class(base: float, scaled: float, factor: int) -> str:
-    """Adjudicate a scaled re-measurement (VERDICT r6 #5): classify how wall
+    """Adjudicate a scaled re-measurement: classify how wall
     time responded to a ``factor``× bigger input, so the driver can gate on
     growth class instead of eyeballing pairs of seconds.
 
@@ -328,10 +327,10 @@ def main() -> None:
         if r > SLOW_RATIO and per_query[n] >= SLOW_MIN_SPARK_SEC
     )
 
-    # Scaled second pass (VERDICT r4 #6): re-measure the most expensive
+    # Scaled second pass: re-measure the most expensive
     # queries at factor× the fixture, where real regressions sit well above
     # Spark's ~0.5 s fixed scheduler floor. Spark-only — the DuckDB ratio is
-    # pass 1's job; this pass exists to make round-over-round Spark numbers
+    # pass 1's job; this pass exists to make run-over-run Spark numbers
     # comparable above the noise. Every FLAGGED query joins the set so each
     # slow_queries entry ships with its own scaled-growth evidence.
     scaled_out = None
@@ -350,7 +349,7 @@ def main() -> None:
         # watch list: queries whose base-sf ratio looks alarming but whose
         # Spark wall sits under the flag bar (sub-second job floor) — the
         # scaled re-measurement is the evidence that settles them
-        # (VERDICT r7 #5: diff_orders_versions at 44x / 0.52 s)
+        # (diff_orders_versions measured 44x / 0.52 s)
         watch = os.environ.get(
             "SPARK_GRAFT_BENCH_SCALE_WATCH", "diff_orders_versions"
         )
@@ -367,7 +366,7 @@ def main() -> None:
                 times.append(time.perf_counter() - t0)
             med = _median(times)
             if _growth_class(per_query[name], med, scale_factor) == "superlinear":
-                # Contention check (VERDICT r7 #2): the scaled set runs many
+                # Contention check: the scaled set runs many
                 # heavy queries back-to-back in one session, and accumulated
                 # executor pressure once mis-classed a floor-bound query as
                 # superlinear (pagerank: 9.82 s in-sequence vs 3.42 s
@@ -500,7 +499,7 @@ def main() -> None:
                 "scale_factor": scale_factor if scaled_out else None,
                 # the flag's adjudication: "floor_bound"/"sublinear" means
                 # the >10x ratio is a fixed-cost artifact of the small
-                # fixture, not a plan defect (VERDICT r6 #6); only
+                # fixture, not a plan defect; only
                 # "superlinear" (or missing scaled evidence) marks a flag
                 # as a genuine scale concern
                 "growth_class": (

@@ -32,6 +32,8 @@ def batched_transform(
     matching how the reference's loader-level handler skips whole collated
     batches); 'fail' re-raises.
     """
+    if on_error not in ("fail", "skip"):
+        raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

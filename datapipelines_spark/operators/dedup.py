@@ -40,6 +40,7 @@ from pyspark.sql.functions import pandas_udf
 from datapipelines_spark.functions.caching import expr_memo as _expr_memo
 from datapipelines_spark.functions.caching import managed_persist
 from datapipelines_spark.functions.hashing import portable_hash64
+from datapipelines_spark.operators import cosine_blocks as cb
 
 #: 2^31 - 1; modulus for the universal-hash family. Coefficients are kept
 #: < 2^20 so a*h + b stays < 2^52 — exact in BIGINT arithmetic in Spark,
@@ -622,13 +623,32 @@ def embedding_cosine_pairs(
     )
 
 
+def _pairs_at_least(threshold: float):
+    """Reducer keeping ``(min id, max id, cosine)`` for cosine >=
+    ``threshold``, the cosine rounded half-up to 6 places as Spark's
+    ``F.round`` and the oracles do."""
+    thr = float(threshold)
+
+    def reduce(S, ids_r, ids_c):
+        ia, ic = np.nonzero(S >= thr)
+        a, b = ids_r[ia], ids_c[ic]
+        return pd.DataFrame(
+            {
+                "vec_a": np.minimum(a, b),
+                "vec_b": np.maximum(a, b),
+                "cosine": np.floor(S[ia, ic] * 1e6 + 0.5) / 1e6,
+            }
+        )
+
+    return reduce
+
+
 def embedding_cosine_pairs_blocked(
     df: DataFrame,
     vec_col: str,
     id_col: str,
     threshold: float = 0.9,
     block_size: int = 2048,
-    min_blocks: int = 8,
     prefilter: str | None = None,
     n_cells: int = 64,
     probes: int = 4,
@@ -643,186 +663,56 @@ def embedding_cosine_pairs_blocked(
     followed by an Arrow-batched numpy matmul per task — no theta join, no
     nested-loop product, no per-pair interpreted expressions.
 
-    How it distributes: ids are hashed into ``B`` blocks; every vector is
-    replicated to its ``B`` block-pair tasks (side "a" for tasks (blk, j≥blk),
-    side "b" for (i<blk, blk)), so shuffle volume is n·B vectors and the
-    B(B+1)/2 tasks each run an ~(n/B)² GEMM. Exact all-pairs work is
-    inherently O(n²) — what changes at scale is that the n² lands in BLAS
-    flops evenly spread across the cluster instead of a nested loop. Pick
-    ``block_size`` so one task's (n/B)² float64 score matrix fits executor
-    memory (default 2048² = 32 MB). For genuinely approximate near-dup at
-    larger thresholds, hyperplane-LSH bucketing (operators/similarity.py)
-    prunes candidates instead; at thresholds near 0.45 (≈63°, barely above
-    random) no LSH family can prune without losing recall, so exact-blocked
-    is the honest default.
+    How it distributes (operators/cosine_blocks.py): an input larger than
+    ``block_size`` is hashed into ``B = ceil(n / block_size)`` blocks;
+    every vector is replicated to its ``B`` block-pair tasks, so shuffle
+    volume is n·B vectors and the B(B+1)/2 tasks each run an ~(n/B)² GEMM.
+    Exact all-pairs work is inherently O(n²) — what changes at scale is
+    that the n² lands in BLAS flops evenly spread across the cluster
+    instead of a nested loop. Pick ``block_size`` so one task's score
+    chunk (``block_size`` rows by one block) fits executor memory (default
+    2048² float64 = 32 MB). For genuinely approximate near-dup at larger
+    thresholds, hyperplane-LSH bucketing (operators/similarity.py) prunes
+    candidates instead; at thresholds near 0.45 (≈63°, barely above
+    random) no LSH family can prune without losing recall, so
+    exact-blocked is the honest default.
 
     Reference parity: the reference has no vector dedup at all; this extends
     sdata's dedup surface per the LLM-pipeline mandate (SURVEY §2.10).
 
-    ``prefilter='ivf'`` swaps the exact O(n²/B)
-    block-pair sweep for IVF pre-blocking: k-means cells are trained on the
-    corpus, each vector multi-assigns to its ``probes`` nearest cells
-    (broadcast centroids, no corpus shuffle), and the GEMM runs only WITHIN
-    cells — total work drops from n² to Σ|cell|², the true-100 TB shape.
+    ``prefilter='ivf'`` swaps the exact block-pair sweep for IVF
+    pre-blocking: k-means cells are trained on the corpus, each vector
+    multi-assigns to its ``probes`` nearest cells (broadcast centroids, no
+    corpus shuffle), and the GEMM runs only WITHIN cells — total work drops
+    from n² to Σ|cell|², the true-100 TB shape. A cell larger than
+    ``block_size`` splits into block pairs like the exact path, and a
+    ``distinct`` collapses pairs found through more than one shared cell.
     Approximate: a pair is missed iff the two vectors share none of their
     ``probes`` nearest cells; recall vs the exact path is measured by
     tests/test_dedup_ivf_prefilter.py on the embeddings fixture, and every
     emitted pair is a true pair with the identical rounded cosine.
     """
-    import math
-
-    from datapipelines_spark.functions.partitioning import parallelize_small
-
-    if prefilter == "ivf":
-        return _embedding_cosine_pairs_ivf(
-            df, vec_col, id_col, threshold, n_cells, probes, kmeans_iters, block_size
-        )
-    if prefilter is not None:
+    if prefilter not in (None, "ivf"):
         raise ValueError(f"unknown prefilter {prefilter!r}; None or 'ivf'")
-
-    e = managed_persist(
-        parallelize_small(
-            df.select(
-                F.col(id_col).cast("long").alias("__id"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-        )
-    )
-    # the count that sizes the blocks also materializes the cache the GEMM
-    # job reuses — one scan total, not two
-    n = e.count()
-    if n == 0:
-        return df.sparkSession.createDataFrame(
-            [], "vec_a long, vec_b long, cosine double"
-        )
-    num_blocks = max(min_blocks, math.ceil(n / block_size))
-    tagged = e.withColumn(
-        "blk", F.pmod(F.xxhash64(F.col("__id")), F.lit(num_blocks)).cast("int")
-    )
-    # Side "a" tasks: (blk, j) for j in blk..B-1 (diagonal handled a-side
-    # only); side "b" tasks: (i, blk) for i in 0..blk-1.
-    a_tasks = F.transform(
-        F.sequence(F.col("blk"), F.lit(num_blocks - 1)),
-        lambda j: F.struct(
-            F.col("blk").alias("bi"), j.cast("int").alias("bj"), F.lit("a").alias("side")
-        ),
-    )
-    b_tasks = F.when(
-        F.col("blk") > 0,
-        F.transform(
-            F.sequence(F.lit(0), F.col("blk") - 1),
-            lambda i: F.struct(
-                i.cast("int").alias("bi"), F.col("blk").alias("bj"), F.lit("b").alias("side")
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<bi:int,bj:int,side:string>>"))
-    tasks = tagged.select(
-        "__id", "v", F.explode(F.concat(a_tasks, b_tasks)).alias("t")
-    ).select("__id", "v", F.col("t.bi").alias("bi"), F.col("t.bj").alias("bj"), F.col("t.side").alias("side"))
-
-    thr = float(threshold)
-
-    def _keep_mask(C, t):
-        # Zero-norm vectors: numpy normalization gives NaN cosines and
-        # `>=` drops them — the SAME outcome as the all-pairs operator
-        # under the engine session (non-ANSI Spark returns NULL for 0/0
-        # and `NULL >= t` filters the row), pinned by
-        # test_blocked_zero_vector_pairs_dropped_like_allpairs.
-        # Thresholding BEFORE building index arrays avoids materializing
-        # the full cross-product index set just to discard most of it.
-        return C >= t
-
-    def _gemm(key, pdf):
-        bi, bj = key
-        rows_a = pdf[pdf["side"] == "a"]
-        ids_a = rows_a["__id"].to_numpy(dtype=np.int64)
-        if len(ids_a) == 0:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-            )
-        Va = np.stack(rows_a["v"].to_numpy())
-        Va = Va / np.linalg.norm(Va, axis=1, keepdims=True)
-        if bi == bj:
-            C = Va @ Va.T
-            keep = _keep_mask(C, thr)
-            keep &= np.tri(len(ids_a), k=-1, dtype=bool).T  # strict upper triangle
-            ia, ib = np.nonzero(keep)
-            left, right = ids_a[ia], ids_a[ib]
-            cos = C[ia, ib]
-        else:
-            rows_b = pdf[pdf["side"] == "b"]
-            ids_b = rows_b["__id"].to_numpy(dtype=np.int64)
-            if len(ids_b) == 0:
-                return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
-                    {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-                )
-            Vb = np.stack(rows_b["v"].to_numpy())
-            Vb = Vb / np.linalg.norm(Vb, axis=1, keepdims=True)
-            C = Va @ Vb.T
-            ia, ib = np.nonzero(_keep_mask(C, thr))
-            left, right = ids_a[ia], ids_b[ib]
-            cos = C[ia, ib]
-        lo = np.minimum(left, right)
-        hi = np.maximum(left, right)
-        # round half-up to 6 dp, matching Spark's F.round / the oracle
-        return pd.DataFrame(
-            {"vec_a": lo, "vec_b": hi, "cosine": np.floor(cos * 1e6 + 0.5) / 1e6}
+    cb.require_positive(block_size=block_size)
+    if prefilter == "ivf":
+        cb.require_positive(n_cells=n_cells, probes=probes)
+    schema = "vec_a long, vec_b long, cosine double"
+    e = cb.prepare(df, vec_col, id_col)
+    if prefilter is None:
+        return cb.score_blocks(
+            e, e, None, block_size, _pairs_at_least(threshold), schema
         )
 
-    return tasks.groupBy("bi", "bj").applyInPandas(
-        _gemm, "vec_a long, vec_b long, cosine double"
-    )
-
-
-def _embedding_cosine_pairs_ivf(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    threshold: float,
-    n_cells: int,
-    probes: int,
-    kmeans_iters: int,
-    block_size: int,
-) -> DataFrame:
-    """IVF pre-blocking for near-dup pairs: per-cell GEMM after multi-probe
-    cell assignment. See ``embedding_cosine_pairs_blocked(prefilter='ivf')``.
-
-    Plan shape: one Arrow pass for assignment (broadcast centroids), one hash
-    shuffle keyed on cell, Σ|cell|² BLAS flops, then a distinct to collapse
-    pairs discovered through more than one shared cell. Row chunking inside
-    the per-cell GEMM bounds the score matrix at ``block_size × |cell|``
-    float64 regardless of cell skew.
-    """
-    from datapipelines_spark.functions.partitioning import parallelize_small
     from datapipelines_spark.operators.clustering import kmeans_fit
 
-    import pyspark.sql.types as T
-
-    e = managed_persist(
-        parallelize_small(
-            df.select(
-                F.col(id_col).cast("long").alias("__id"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-        )
-    )
     n = e.count()
     if n == 0:
-        return df.sparkSession.createDataFrame(
-            [], "vec_a long, vec_b long, cosine double"
-        )
+        return df.sparkSession.createDataFrame([], schema)
     k = int(min(n_cells, max(1, n // max(2 * probes, 4))))
     cents, _ = kmeans_fit(e, "v", "__id", k=k, max_iter=kmeans_iters, tol=0)
     pr = int(min(probes, k))
     bc = df.sparkSession.sparkContext.broadcast(cents)
-
-    assign_schema = T.StructType(
-        [
-            T.StructField("__id", T.LongType()),
-            T.StructField("v", T.ArrayType(T.DoubleType())),
-            T.StructField("cell", T.IntegerType()),
-        ]
-    )
 
     def multi_assign(batches):
         c = bc.value
@@ -839,48 +729,10 @@ def _embedding_cosine_pairs_ivf(
                     {"__id": ids, "v": pdf["v"], "cell": top[:, p].astype("int32")}
                 )
 
-    cells = e.mapInPandas(multi_assign, assign_schema)
-    thr = float(threshold)
-    bs = int(block_size)
-
-    def cell_gemm(key, pdf):
-        pdf = pdf.sort_values("__id", kind="mergesort")
-        ids = pdf["__id"].to_numpy(dtype=np.int64)
-        if len(ids) < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-            )
-        V = np.stack(pdf["v"].to_numpy())
-        V = V / np.linalg.norm(V, axis=1, keepdims=True)
-        outs = []
-        for c0 in range(0, len(ids), bs):
-            C = V[c0:c0 + bs] @ V.T
-            keep = C >= thr  # NaN (zero-norm) drops, same as the exact paths
-            # strict upper triangle in GLOBAL row order (ids ascending)
-            rows = np.arange(c0, min(c0 + bs, len(ids)))
-            keep &= rows[:, None] < np.arange(len(ids))[None, :]
-            ia, ib = np.nonzero(keep)
-            if len(ia):
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": ids[rows[ia]],
-                            "vec_b": ids[ib],
-                            "cosine": np.floor(C[ia, ib] * 1e6 + 0.5) / 1e6,
-                        }
-                    )
-                )
-        if not outs:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    return (
-        cells.groupBy("cell")
-        .applyInPandas(cell_gemm, "vec_a long, vec_b long, cosine double")
-        .distinct()
-    )
+    cells = e.mapInPandas(multi_assign, "__id long, v array<double>, cell int")
+    return cb.score_blocks(
+        e, cells, "cell", block_size, _pairs_at_least(threshold), schema
+    ).distinct()
 
 
 def minhash_lsh_join(
@@ -1240,52 +1092,37 @@ def semantic_dedup(
     Returns one row per vector: ``(id, cell, is_kept)``.
 
     Plan shape: one broadcast-centroid Arrow pass to assign cells, ONE hash
-    shuffle keyed on cell, then a chunked numpy GEMM per cell (score matrix
-    bounded at ``block_size x |cell|``) that emits only the DROPPED ids —
-    output volume tracks duplicate density, never pairs.
+    shuffle keyed on (cell, block pair) — a cell larger than ``block_size``
+    splits into blocks (operators/cosine_blocks.py) — then a chunked numpy
+    GEMM per task that emits only the DROPPED ids (the larger id of each
+    pair at or above the threshold): output volume tracks duplicate
+    density, never pairs.
     """
-    import pyspark.sql.types as T
-
-    from datapipelines_spark.functions.partitioning import parallelize_small
     from datapipelines_spark.operators.clustering import kmeans_assign, kmeans_fit
 
-    e = managed_persist(
-        parallelize_small(
-            df.select(
-                F.col(id_col).cast("long").alias("__id"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-        )
-    )
+    cb.require_positive(k=k, block_size=block_size)
+    e = cb.prepare(df, vec_col, id_col)
     cents, _ = kmeans_fit(e, "v", "__id", k=k, max_iter=kmeans_iters, tol=0.0)
     cells = kmeans_assign(e, "v", "__id", cents)
-    withv = e.join(cells, "__id")
     thr = float(threshold)
-    bs = int(block_size)
 
-    def cell_dropped(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__id", kind="mergesort")
-        ids = pdf["__id"].to_numpy(dtype=np.int64)
-        n = len(ids)
-        if n < 2:
-            return pd.DataFrame({"__id": []}).astype({"__id": "int64"})
-        V = np.stack(pdf["v"].to_numpy())
-        V = V / np.linalg.norm(V, axis=1, keepdims=True)
-        colmask = np.zeros(n, dtype=bool)
-        for c0 in range(0, n, bs):
-            C = V[c0:c0 + bs] @ V.T
-            hit = C >= thr  # NaN (zero-norm) compares False, like the pair paths
-            rows = np.arange(c0, min(c0 + bs, n))
-            hit &= rows[:, None] < np.arange(n)[None, :]
-            colmask |= hit.any(axis=0)
-        return pd.DataFrame({"__id": ids[colmask]})
+    def later_ids(S, ids_r, ids_c):
+        hit = S >= thr
+        r_later = ids_r[:, None] > ids_c[None, :]
+        return pd.DataFrame(
+            {
+                "__id": np.union1d(
+                    ids_r[(hit & r_later).any(axis=1)],
+                    ids_c[(hit & ~r_later).any(axis=0)],
+                )
+            }
+        )
 
     dropped = (
-        withv.groupBy("cluster")
-        .applyInPandas(
-            lambda key, pdf: cell_dropped(pdf),
-            T.StructType([T.StructField("__id", T.LongType())]),
+        cb.score_blocks(
+            e, e.join(cells, "__id"), "cluster", block_size, later_ids, "__id long"
         )
+        .distinct()
         .withColumn("__dropped", F.lit(True))
     )
     return (

@@ -314,7 +314,7 @@ def knn_graph(
     impl: str = "gemm",
     shortlist_margin: int = 8,
     shortlist_eps: float = 1e-9,
-    cell_block: int = 65_536,
+    block_size: int = 2048,
 ) -> DataFrame:
     """Approximate kNN GRAPH over the corpus — the missing primitive
     between pairwise similarity search and graph analytics: every vector's
@@ -353,220 +353,75 @@ def knn_graph(
     GEMM rounding can only change shortlist SIZE, never the re-ranked
     result.
 
-    Per-task memory is bounded regardless of cell skew: cells larger than ``cell_block`` rows are hash-split into
-    sub-blocks and the shortlist stage runs per (source-block,
-    candidate-block) PAIR — the ``embedding_cosine_pairs_blocked``
-    discipline — so one task holds at most two blocks, not a whole cell;
-    each block proposes its local eps-extended top-m, whose union is a
-    superset of the cell-wide shortlist, and the exact re-rank collapses
-    the difference. A 10⁹-vector cell with default settings runs as
-    bounded ~65k-row block pairs instead of one unbounded task.
+    Per-task memory is bounded regardless of cell skew: a cell larger than
+    ``block_size`` rows is hash-split into blocks and the shortlist stage
+    runs per (block, block) PAIR (operators/cosine_blocks.py, shared with
+    ``embedding_cosine_pairs_blocked`` and ``semantic_dedup``), so one task
+    holds at most two blocks, not a whole cell. Each task scores every
+    pair of its blocks once and proposes the eps-extended top-m in both
+    directions (each row over its columns, each column over its rows);
+    every part's eps-extended top-m keeps each candidate of the cell-wide
+    one, so the union is a superset of the cell-wide shortlist and the
+    exact re-rank collapses the difference.
 
     Returns ``(src, dst, cosine)`` with cosine rounded to 6 decimals;
     under ``mutual=True`` each undirected edge appears once with
     ``src < dst``. Domain: callers filter NULL and zero-norm vectors
     upstream (no cosine direction), as all cosine paths here require.
     """
-    import pyspark.sql.types as T
+    import numpy as np
+    import pandas as pd
 
     from datapipelines_spark.functions.caching import managed_persist
-    from datapipelines_spark.functions.partitioning import parallelize_small
+    from datapipelines_spark.operators import cosine_blocks as cb
     from datapipelines_spark.operators.clustering import kmeans_assign, kmeans_fit
-    from datapipelines_spark.operators.dedup import _dot, _norm
 
     if impl not in ("gemm", "expr"):
         raise ValueError(f"impl must be 'gemm' or 'expr', got {impl!r}")
-    e = managed_persist(
-        parallelize_small(
-            df.select(
-                F.col(id_col).cast("long").alias("__id"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-        ).withColumn("nrm", _norm(F.col("v")))
-    )
+    cb.require_positive(k=k, n_cells=n_cells, block_size=block_size)
+    e = cb.prepare(df, vec_col, id_col)
     cents, _ = kmeans_fit(e, "v", "__id", k=n_cells, max_iter=kmeans_iters, tol=0.0)
-    withv = e.join(kmeans_assign(e, "v", "__id", cents), "__id")
-
+    withv = e.join(kmeans_assign(e, "v", "__id", cents), "__id").withColumn(
+        "nrm", _norm(F.col("v"))
+    )
+    va = withv.select(
+        F.col("__id").alias("src"), F.col("v").alias("va"), F.col("nrm").alias("na"), "cluster"
+    )
+    vb = withv.select(
+        F.col("__id").alias("dst"), F.col("v").alias("vb"), F.col("nrm").alias("nb"), "cluster"
+    )
     if impl == "gemm":
-        import math
-
         m = k + int(shortlist_margin)
         eps = float(shortlist_eps)
-        # Sub-block sizing: if the WHOLE corpus fits one block, no cell can
-        # need splitting; only past that bound pay the per-cell counts
-        # aggregate (one bounded n_cells-row collect, the centroid-partials
-        # precedent) and teach each row its block count via a map literal.
-        # The probe is an early-stopping count: one bounded job per build
-        # that reads at most cell_block + 1 rows, never a full count.
-        if e.select(F.lit(1)).limit(int(cell_block) + 1).count() <= int(cell_block):
-            n_blocks = {}
-        else:
-            cell_counts = {
-                r["cluster"]: r["__n"]
-                for r in withv.groupBy("cluster")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .collect()
-            }
-            n_blocks = {
-                c: max(1, math.ceil(n / int(cell_block)))
-                for c, n in cell_counts.items()
-            }
-        if all(nb == 1 for nb in n_blocks.values()):
-            # no cell needs splitting: skip the fan-out plumbing — one
-            # task per cell, sources double as candidates (diagonal task)
-            tasks = withv.select(
-                "__id",
-                "v",
-                "cluster",
-                F.lit(0).alias("bi"),
-                F.lit(0).alias("bj"),
-                F.lit("s").alias("side"),
-            )
-        else:
-            nb_map = F.create_map(
-                *[F.lit(x) for cn in n_blocks.items() for x in cn]
-            )
-            tagged = withv.withColumn(
-                "__nb", nb_map[F.col("cluster")].cast("int")
-            ).withColumn(
-                "__blk",
-                F.pmod(F.xxhash64(F.col("__id")), F.col("__nb")).cast("int"),
-            )
-            # Source side fans out to every candidate block of its cell;
-            # candidate side to every source block except its own (the
-            # diagonal task reuses its source rows as candidates).
-            s_tasks = F.transform(
-                F.sequence(F.lit(0), F.col("__nb") - 1),
-                lambda j: F.struct(
-                    F.col("__blk").alias("bi"),
-                    j.cast("int").alias("bj"),
-                    F.lit("s").alias("side"),
-                ),
-            )
-            c_tasks = F.filter(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("__nb") - 1),
-                    lambda i: F.struct(
-                        i.cast("int").alias("bi"),
-                        F.col("__blk").alias("bj"),
-                        F.lit("c").alias("side"),
-                    ),
-                ),
-                lambda t: t["bi"] != F.col("__blk"),
-            )
-            tasks = tagged.select(
-                "__id",
-                "v",
-                "cluster",
-                F.explode(F.concat(s_tasks, c_tasks)).alias("t"),
-            ).select(
-                "__id",
-                "v",
-                "cluster",
-                F.col("t.bi").alias("bi"),
-                F.col("t.bj").alias("bj"),
-                F.col("t.side").alias("side"),
-            )
 
-        def block_shortlist(key, pdf):
-            import numpy as np
-            import pandas as pd
+        def shortlist(S, ids_r, ids_c):
+            # eps-extended shortlist: everything within eps of the m-th
+            # best, so ties at the boundary can never drop a true top-k
+            # candidate (see docstring); -inf marks a masked pair
+            scored = S > -np.inf
+            out = []
+            for axis, (src, dst) in ((1, (ids_r, ids_c)), (0, (ids_c, ids_r))):
+                n = S.shape[axis]
+                top = min(m, n)
+                kth = np.take(np.partition(S, n - top, axis=axis), n - top, axis=axis)
+                keep = scored & (S >= np.expand_dims(kth, axis) - eps)
+                if axis == 0:
+                    keep = keep.T
+                i_s, i_d = np.nonzero(keep)
+                out.append(pd.DataFrame({"src": src[i_s], "dst": dst[i_d]}))
+            return pd.concat(out, ignore_index=True)
 
-            _, bi, bj = key
-            empty = pd.DataFrame({"src": [], "dst": []}).astype("int64")
-            rows_s = pdf[pdf["side"] == "s"].sort_values("__id", kind="mergesort")
-            if len(rows_s) == 0:
-                return empty
-            rows_c = (
-                rows_s
-                if bi == bj
-                else pdf[pdf["side"] == "c"].sort_values("__id", kind="mergesort")
-            )
-            nc = len(rows_c)
-            if nc == 0 or (bi == bj and nc < 2):
-                return empty
-            ids_s = rows_s["__id"].to_numpy(dtype=np.int64)
-            ids_c = rows_c["__id"].to_numpy(dtype=np.int64)
-            Vs = np.stack(rows_s["v"].to_numpy())
-            Vs = Vs / np.linalg.norm(Vs, axis=1, keepdims=True)
-            if bi == bj:
-                Vc = Vs
-            else:
-                Vc = np.stack(rows_c["v"].to_numpy())
-                Vc = Vc / np.linalg.norm(Vc, axis=1, keepdims=True)
-            out_src, out_dst = [], []
-            bs = 2048
-            for c0 in range(0, len(ids_s), bs):
-                chunk = slice(c0, min(c0 + bs, len(ids_s)))
-                S = Vs[chunk] @ Vc.T
-                if bi == bj:
-                    # ids are unique corpus-wide: self pairs exist only on
-                    # the diagonal task, at matching positions
-                    S[np.arange(chunk.stop - chunk.start), np.arange(c0, chunk.stop)] = -np.inf
-                top = min(m, nc - (1 if bi == bj else 0))
-                if top <= 0:
-                    continue
-                # eps-extended shortlist: everything within eps of the
-                # top-th best — ties at the boundary can never drop a
-                # true top-k candidate (see docstring)
-                kth = np.partition(S, nc - top, axis=1)[:, nc - top]
-                keep = S >= (kth - eps)[:, None]
-                ia, ic = np.nonzero(keep)
-                out_src.append(ids_s[chunk][ia])
-                out_dst.append(ids_c[ic])
-            if not out_src:
-                return empty
-            return pd.DataFrame(
-                {"src": np.concatenate(out_src), "dst": np.concatenate(out_dst)}
-            )
-
-        cand = tasks.groupBy("cluster", "bi", "bj").applyInPandas(
-            block_shortlist,
-            T.StructType(
-                [T.StructField("src", T.LongType()), T.StructField("dst", T.LongType())]
-            ),
+        cand = cb.score_blocks(
+            e, withv, "cluster", block_size, shortlist, "src long, dst long"
         )
-        va = withv.select(
-            F.col("__id").alias("src"), F.col("v").alias("va"), F.col("nrm").alias("na")
-        )
-        vb = withv.select(
-            F.col("__id").alias("dst"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-        )
-        scored = (
-            cand.join(va, "src")
-            .join(vb, "dst")
-            .select(
-                "src",
-                "dst",
-                (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias(
-                    "cos_raw"
-                ),
-            )
-        )
+        pairs = cand.join(va.drop("cluster"), "src").join(vb.drop("cluster"), "dst")
     else:
-        a = withv.select(
-            F.col("__id").alias("src"),
-            F.col("v").alias("va"),
-            F.col("nrm").alias("na"),
-            "cluster",
-        )
-        b = withv.select(
-            F.col("__id").alias("dst"),
-            F.col("v").alias("vb"),
-            F.col("nrm").alias("nb"),
-            "cluster",
-        )
-        scored = (
-            a.join(b, "cluster")
-            .where(F.col("src") != F.col("dst"))
-            .select(
-                "src",
-                "dst",
-                (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias(
-                    "cos_raw"
-                ),
-            )
-        )
+        pairs = va.join(vb, "cluster").where(F.col("src") != F.col("dst"))
+    scored = pairs.select(
+        "src",
+        "dst",
+        (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("cos_raw"),
+    )
     w = Window.partitionBy("src").orderBy(F.desc("cos_raw"), F.asc("dst"))
     knn = (
         scored.withColumn("__rn", F.row_number().over(w))

@@ -290,18 +290,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≈63°) LSH bucketing cannot prune without recall loss, so the exact
     blocked plan IS the scale path.
     """
-    e = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    # cosine is undefined for the zero vector — out of domain
-    e = e.where(
-        F.aggregate(
-            F.col("embedding").cast("array<double>"),
-            F.lit(0.0),
-            lambda a, x: a + x * x,
-        )
-        > 0
-    )
+    from datapipelines_spark.queries.similarity import nonzero_embeddings
+
+    e = nonzero_embeddings(spark, sf_dir)
     return ops.embedding_cosine_pairs_blocked(
         e, vec_col="embedding", id_col="vec_id", threshold=0.45
     ).orderBy("vec_a", "vec_b")

@@ -16,6 +16,17 @@ _PLANES = 16
 _DOT_SQL = "list_sum(list_transform(range(1, {dim} + 1), i -> {a}[i] * {b}[i]))"
 
 
+def nonzero_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``embeddings`` rows a cosine is defined for: the vector is not
+    NULL and not the zero vector, which has no direction."""
+    sumsq = F.aggregate(
+        F.col("embedding").cast("array<double>"), F.lit(0.0), lambda a, x: a + x * x
+    )
+    return load_table(spark, sf_dir, "embeddings").where(
+        F.col("embedding").isNotNull() & (sumsq > 0)
+    )
+
+
 @query(
     "sim_topk_bruteforce",
     oracle=f"""
@@ -52,17 +63,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus streamed in Arrow batches, one matmul + partial top-k per batch)
     — bit-equal results either way including tie order
     (tests/test_similarity_vectorized.py)."""
-    e = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    e = e.where(
-        F.aggregate(
-            F.col("embedding").cast("array<double>"),
-            F.lit(0.0),
-            lambda a, x: a + x * x,
-        )
-        > 0
-    )
+    e = nonzero_embeddings(spark, sf_dir)
     return ops.cosine_topk_auto(
         e, vec_col="embedding", id_col="vec_id", query_pred=F.col("vec_id") % 100 == 0, k=5
     ).orderBy("query_id", "rank")

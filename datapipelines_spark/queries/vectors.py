@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from datapipelines_spark.catalog import query
 from datapipelines_spark.functions.caching import managed_persist
+from datapipelines_spark.queries.similarity import nonzero_embeddings
 from datapipelines_spark.sources.parquet import load_table
 
 _DIM = 64
@@ -620,18 +621,7 @@ def sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datapipelines_spark.operators.clustering import kmeans_assign, kmeans_fit
     from datapipelines_spark.operators.dedup import _dot, _norm
 
-    e0 = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    # cosine scoring downstream: zero-norm vectors have no direction
-    e0 = e0.where(
-        F.aggregate(
-            F.col("embedding").cast("array<double>"),
-            F.lit(0.0),
-            lambda a, x: a + x * x,
-        )
-        > 0
-    )
+    e0 = nonzero_embeddings(spark, sf_dir)
     c1, _ = kmeans_fit(e0, "embedding", "vec_id", k=4, max_iter=1, tol=0.0)
     cells = kmeans_assign(e0, "embedding", "vec_id", c1)
 
@@ -951,17 +941,7 @@ def sim_sq8_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cell pruning) and PQ (codebook compression)."""
     from datapipelines_spark.operators.sq import sq8_adc_rerank_topk
 
-    e = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    e = e.where(
-        F.aggregate(
-            F.col("embedding").cast("array<double>"),
-            F.lit(0.0),
-            lambda a, x: a + x * x,
-        )
-        > 0
-    )
+    e = nonzero_embeddings(spark, sf_dir)
     queries = e.where(F.col("vec_id") % 50 == 0)
     return sq8_adc_rerank_topk(
         e, queries, "embedding", "vec_id", shortlist=20, top_k=5
@@ -1048,18 +1028,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the smallest-id survivor rule in SQL."""
     from datapipelines_spark.operators.dedup import semantic_dedup
 
-    e = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    # within-cell dedup scores cosine: zero-norm vectors have no direction
-    e = e.where(
-        F.aggregate(
-            F.col("embedding").cast("array<double>"),
-            F.lit(0.0),
-            lambda a, x: a + x * x,
-        )
-        > 0
-    )
+    e = nonzero_embeddings(spark, sf_dir)
     return semantic_dedup(
         e, vec_col="embedding", id_col="vec_id", k=4, threshold=0.45
     ).orderBy("vec_id")
@@ -1158,17 +1127,7 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, per-vector ranking, and the reciprocity join in SQL."""
     from datapipelines_spark.operators.similarity import knn_graph
 
-    e = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    e = e.where(
-        F.aggregate(
-            F.col("embedding").cast("array<double>"),
-            F.lit(0.0),
-            lambda a, x: a + x * x,
-        )
-        > 0
-    )
+    e = nonzero_embeddings(spark, sf_dir)
     return knn_graph(
         e, vec_col="embedding", id_col="vec_id", k=5, n_cells=4, mutual=True
     ).orderBy("src", "dst")
@@ -1209,17 +1168,7 @@ def sim_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datapipelines_spark.operators.components import duplicate_clusters
     from datapipelines_spark.operators.similarity import knn_graph
 
-    e = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    e = e.where(
-        F.aggregate(
-            F.col("embedding").cast("array<double>"),
-            F.lit(0.0),
-            lambda a, x: a + x * x,
-        )
-        > 0
-    )
+    e = nonzero_embeddings(spark, sf_dir)
     edges = knn_graph(
         e, vec_col="embedding", id_col="vec_id", k=5, n_cells=4, mutual=True
     ).where(F.col("cosine") >= 0.5)

@@ -28,7 +28,7 @@ def test_blocked_matches_allpairs_tiny_blocks(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     exact = embedding_cosine_pairs(e, "embedding", "vec_id", threshold=0.45)
     blocked = embedding_cosine_pairs_blocked(
-        e, "embedding", "vec_id", threshold=0.45, block_size=64, min_blocks=4
+        e, "embedding", "vec_id", threshold=0.45, block_size=64
     )
     assert _rows(blocked) == _rows(exact)
 
@@ -68,7 +68,7 @@ def test_blocked_zero_vector_pairs_dropped_like_allpairs(spark):
     exact = _rows(embedding_cosine_pairs(df, "embedding", "vec_id", threshold=0.9))
     blocked = _rows(
         embedding_cosine_pairs_blocked(
-            df, "embedding", "vec_id", threshold=0.9, block_size=2, min_blocks=2
+            df, "embedding", "vec_id", threshold=0.9, block_size=2
         )
     )
     assert blocked == exact

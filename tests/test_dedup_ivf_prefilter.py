@@ -63,3 +63,18 @@ def test_ivf_empty_input(spark):
     )
     assert out.count() == 0
     assert out.columns == ["vec_a", "vec_b", "cosine"]
+
+
+def test_ivf_split_cells_match_default(spark, pair_sets):
+    """A block size far below the cell sizes splits every cell into block
+    pairs; the pairs and their cosines stay those of the default."""
+    _, ivf = pair_sets
+    emb = load_table(spark, SF_DIR, "embeddings")
+    split = {
+        (r["vec_a"], r["vec_b"]): r["cosine"]
+        for r in embedding_cosine_pairs_blocked(
+            emb, "embedding", "vec_id", threshold=THRESHOLD,
+            prefilter="ivf", n_cells=16, probes=4, block_size=16,
+        ).collect()
+    }
+    assert split == ivf

@@ -102,7 +102,7 @@ def test_gemm_and_expr_paths_are_identical(spark):
 
 
 def test_skewed_cell_sub_blocking_produces_identical_edges(spark):
-    """A cell bigger than ``cell_block`` must split into block-pair tasks
+    """A cell bigger than ``block_size`` must split into block-pair tasks
     (bounded per-task memory) and still produce exactly the single-task
     edges — and the expr path's. n_cells=1 makes the
     whole corpus one maximally-skewed cell."""
@@ -110,10 +110,10 @@ def test_skewed_cell_sub_blocking_produces_identical_edges(spark):
     rows = _vecs(rng, 90, dim=12)
     df = spark.createDataFrame(rows, "id long, v array<double>")
     blocked = sorted(
-        map(tuple, knn_graph(df, "v", "id", k=4, n_cells=1, cell_block=16).collect())
+        map(tuple, knn_graph(df, "v", "id", k=4, n_cells=1, block_size=16).collect())
     )
     single = sorted(
-        map(tuple, knn_graph(df, "v", "id", k=4, n_cells=1, cell_block=10**6).collect())
+        map(tuple, knn_graph(df, "v", "id", k=4, n_cells=1, block_size=10**6).collect())
     )
     exact = sorted(
         map(tuple, knn_graph(df, "v", "id", k=4, n_cells=1, impl="expr").collect())

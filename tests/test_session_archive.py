@@ -28,6 +28,12 @@ from pyspark import SparkContext
 from datapipelines_spark.session import get_spark
 
 extra = {"spark.driver.memory": "1g", **json.loads(sys.argv[1])}
+
+def report(result):
+    # a file of its own: a crashing JVM writes its report to this stdout
+    with open(sys.argv[2], "a") as f:
+        f.write(json.dumps(result) + "\\n")
+
 spark = get_spark(app_name="archive-test", master="local[2]", shuffle_partitions=2,
                   extra_conf=extra)
 total = spark.range(100).selectExpr("sum(id) AS s").collect()[0].s
@@ -37,14 +43,14 @@ def plus_one(batches):
         yield b + 1
 
 ids = sorted(r.id for r in spark.range(0, 8, 1, 2).mapInPandas(plus_one, "id long").collect())
-print(json.dumps({
+report({
     "sum": total,
     "ids": ids,
     "java_options": spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions"),
     "marker": spark.conf.get("spark.datapipelines.test.marker", None),
-}), flush=True)
+})
 
-if sys.argv[2:] == ["kill-dump"]:
+if sys.argv[3:] == ["kill-dump"]:
     # registered after get_spark's hook, so it runs first: end the session,
     # then SIGKILL the JVM as soon as its dump file appears
     proc = SparkContext._gateway.proc
@@ -61,27 +67,31 @@ if sys.argv[2:] == ["kill-dump"]:
         seen = bool(glob.glob(os.path.join(cache, "*.tmp")))
         if proc.poll() is None:
             proc.send_signal(signal.SIGKILL)
-        print(json.dumps({"tmp_seen": seen, "returncode": proc.wait()}), flush=True)
+        report({"tmp_seen": seen, "returncode": proc.wait()})
 
     atexit.register(kill_during_dump)
 """
 
 
 def _run(tmp_path, xdg, extra_conf=None, mode=None, env_extra=None) -> tuple[list[dict], str]:
-    """Run the session script; returns its JSON lines and all its output."""
+    """Run the session script; returns its result lines and all its output."""
     script = tmp_path / "archive_session.py"
     script.write_text(textwrap.dedent(_SCRIPT))
+    results = tmp_path / "archive_results.jsonl"
+    results.unlink(missing_ok=True)
     env = dict(os.environ)
     env.update(env_extra or {})
     env["XDG_CACHE_HOME"] = str(xdg)
     env["PYTHONPATH"] = REPO_ROOT
     env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
-    args = [sys.executable, str(script), json.dumps(extra_conf or {})] + ([mode] if mode else [])
+    args = [sys.executable, str(script), json.dumps(extra_conf or {}), str(results)]
+    args += [mode] if mode else []
     out = subprocess.run(
         args, cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600
     )
     assert out.returncode == 0, out.stderr[-4000:]
-    lines = [json.loads(line) for line in out.stdout.splitlines() if line.startswith("{")]
+    lines = [json.loads(line) for line in results.read_text().splitlines()] if results.exists() else []
+    assert lines, f"no result lines\nstdout:\n{out.stdout[-2000:]}\nstderr:\n{out.stderr[-2000:]}"
     assert lines[0]["sum"] == 4950 and lines[0]["ids"] == list(range(1, 9)), lines
     return lines, out.stdout + out.stderr
 

@@ -3,6 +3,7 @@ inference, and reader-level permissive corrupt-record handling (E1 at the
 source, SURVEY §7.6 risk 1)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_csv_roundtrip_with_header(spark, tmp_path):
@@ -73,6 +74,21 @@ def test_batched_transform_m6(spark):
     out = batched_transform(df, per_batch, "id long, id_sq long")
     assert out.count() == 1000
     assert out.where(F.col("id_sq") != F.col("id") * F.col("id")).count() == 0
+
+
+def test_batched_transform_rejects_unknown_on_error(spark):
+    from datapipelines_spark.operators.batched import batched_transform
+
+    df = spark.range(10)
+    sc = spark.sparkContext
+    group = "batched-transform-validation"
+    sc.setJobGroup(group, "argument validation")
+    try:
+        with pytest.raises(ValueError, match="on_error"):
+            batched_transform(df, lambda pdf: pdf, "id long", on_error="skpi")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_decode_timeout_e4(spark):
